@@ -50,7 +50,7 @@ object ChSql {
     * PIPELINE = the physical (executed) plan. One row per line in a
     * single `explain` column, CH's output shape. Bare `EXPLAIN q`
     * falls through to Spark's own EXPLAIN statement unchanged. */
-  private val ExplainRe =
+  private[graft] val ExplainRe =
     "(?is)^\\s*EXPLAIN\\s+(AST|SYNTAX|PLAN|PIPELINE)\\s+(.+)$".r
 
   private def explain(spark: SparkSession, mode: String, inner: String): DataFrame = {
@@ -272,14 +272,18 @@ object ChSql {
     q
   }
 
-  /** Spark's parser owns the 3-arg `datediff(unit, start, end)` form
-    * as GRAMMAR (timestampdiff) and rejects CH's quoted unit before
-    * any registry lookup — and its complete-interval semantics differ
-    * from CH's boundary counting anyway. Reroute every dateDiff /
-    * date_diff call to the registered `chDateDiff` builder (ChNames),
-    * which serves the CH 3-arg form and falls through to Spark's
-    * 2-arg day difference. Quote-aware scan, word + `(` anchored. */
-  private def rewriteDateDiff(q0: String): String = {
+  /** Calls Spark's parser owns before any registry lookup, rerouted
+    * by one quote-aware scan, word + `(` anchored:
+    *   - the 3-arg `datediff(unit, start, end)` form is GRAMMAR in
+    *     Spark (timestampdiff) and rejects CH's quoted unit — and its
+    *     complete-interval semantics differ from CH's boundary counting
+    *     anyway. Every dateDiff / date_diff call goes to the registered
+    *     `chDateDiff` builder (ChNames), which serves the CH 3-arg form
+    *     and falls through to Spark's 2-arg day difference.
+    *   - CH's `count()` is `count(*)`; Spark rejects the empty call
+    *     (and its legacy allowParameterlessCount flag lets the
+    *     optimizer fold `count()` over a table to the literal 0). */
+  private def rewriteCalls(q0: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < q0.length) {
@@ -293,8 +297,14 @@ object ChSql {
           var j = i
           while (j < q0.length && q0.charAt(j).isWhitespace) j += 1
           val isCall = j < q0.length && q0.charAt(j) == '('
+          // first non-blank after the `(`: a `)` here means an empty call
+          val argStart = if (isCall) q0.indexWhere(!_.isWhitespace, j + 1) else -1
           if (isCall && (w.equalsIgnoreCase("dateDiff") || w.equalsIgnoreCase("date_diff")))
             sb.append("chDateDiff")
+          else if (w.equalsIgnoreCase("count") && argStart > 0 && q0.charAt(argStart) == ')') {
+            sb.append(w).append("(*")
+            i = argStart // the scan copies the `)`
+          }
           else if (isCall && w.equalsIgnoreCase("extract") && {
             // CH extract(haystack, 'regex') has a TOP-LEVEL comma; the
             // SQL-standard extract(field FROM ts) (which must stay
@@ -399,7 +409,7 @@ object ChSql {
     q = rewriteSystem(spark, q)
     q = rewriteSettings(q)
     q = rewriteParametricAggs(q)
-    q = rewriteDateDiff(q)
+    q = rewriteCalls(q)
     q = rewriteGlobal(q)
     q = rewriteSample(q)
     q = rewriteArrayJoin(spark, q)

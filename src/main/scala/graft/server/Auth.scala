@@ -7,7 +7,8 @@ package graft.server
   * analog reads the same variables at endpoint start (None = the
   * auth-less `default` user, CH's own default) plus
   * `CLICKHOUSE_READONLY=1` as the profile knob — readonly sessions
-  * reject writes (INSERT/DDL) at every door.
+  * run only what [[Statement.run]]'s readonly rule permits, at every
+  * door.
   *
   * Endpoints take the config per-instance (tests run authed and
   * auth-less doors in one JVM), defaulting to the environment. */
@@ -18,13 +19,6 @@ object Auth {
     sys.env.get("CLICKHOUSE_USER").map(u =>
       Auth(u, sys.env.getOrElse("CLICKHOUSE_PASSWORD", ""),
         sys.env.get("CLICKHOUSE_READONLY").contains("1")))
-
-  /** Statements a readonly profile refuses (CH: readonly=1 permits
-    * only reads and settings-free sessions). */
-  private val WriteRe =
-    "(?is)^\\s*(INSERT|CREATE|DROP|TRUNCATE|ALTER|OPTIMIZE)\\b.*".r
-
-  def isWrite(sql: String): Boolean = WriteRe.matches(sql)
 
   /** `mysql_native_password` scramble (public MySQL protocol):
     * SHA1(password) XOR SHA1(nonce ++ SHA1(SHA1(password))). */

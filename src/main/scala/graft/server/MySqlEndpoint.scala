@@ -1,7 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -24,16 +24,17 @@ import org.apache.spark.sql.types._
   *     (r19, [[Auth]]) the client's `mysql_native_password` scramble
   *     is validated against the handshake nonce — ERR 1045 on
   *     mismatch — and a readonly profile rejects writes.
-  *   - Session chatter a stock mysql/JDBC client opens with (r19):
-  *     SET/USE/transaction no-ops, `SELECT @@var` resultsets, SHOW
-  *     VARIABLES/DATABASES/TABLES, COM_FIELD_LIST; INSERT routes to
-  *     the shared ingest and answers OK with affected rows.
-  *   - COM_QUERY → the query text runs through the shared
-  *     [[graft.ChSql]] dialect front door and streams back as a TEXT
-  *     resultset: lenenc column count, ColumnDefinition41 per column
+  *   - MySQL-only chatter a stock mysql/JDBC client opens with:
+  *     `SELECT @@var` resultsets, SHOW VARIABLES/DATABASES/TABLES,
+  *     COM_FIELD_LIST.
+  *   - COM_QUERY → everything else runs through the shared
+  *     [[Statement]] executor. A resultset streams back as TEXT
+  *     rows: lenenc column count, ColumnDefinition41 per column
   *     (Spark type → MYSQL_TYPE_*), EOF, lenenc-string rows (NULL =
-  *     0xfb) off `toLocalIterator()`, EOF. Errors → ERR packet with
-  *     the CH-style message.
+  *     0xfb) off `toLocalIterator()`, EOF. INSERT, DDL and session
+  *     no-ops (SET/USE/transactions) answer OK with affected rows.
+  *     Errors → ERR packet whose errno is the CH code and whose text
+  *     is `Code: N. DB::Exception: …`, as CH's own MySQL handler does.
   *   - COM_PING / COM_INIT_DB → OK; COM_QUIT closes. Unknown commands
   *     → ERR 1047 (unknown command), like MySQL.
   *   - Values render through the same CH text formatter the HTTP/TSV
@@ -48,30 +49,14 @@ import org.apache.spark.sql.types._
   */
 object MySqlEndpoint {
 
-  final case class Running(server: ServerSocket, port: Int, thread: Thread) {
+  final case class Running(server: ServerSocket, port: Int) {
     def stop(): Unit = server.close() // accept loop exits on the SocketException
   }
 
   def start(spark: SparkSession, port: Int,
       auth: Option[Auth] = Auth.fromEnv): Running = {
-    val server = new ServerSocket()
-    server.bind(new InetSocketAddress("127.0.0.1", port))
-    val acceptor = new Thread(() => {
-      try {
-        var running = true
-        while (running) {
-          try {
-            val sock = server.accept()
-            val t = new Thread(() => serve(spark, sock, auth), "graft-mysql-conn")
-            t.setDaemon(true)
-            t.start()
-          } catch { case _: java.net.SocketException => running = false }
-        }
-      } catch { case _: Throwable => }
-    }, "graft-mysql-acceptor")
-    acceptor.setDaemon(true)
-    acceptor.start()
-    Running(server, server.getLocalPort, acceptor)
+    val server = Acceptor.start(port, "mysql")(serve(spark, _, auth))
+    Running(server, server.getLocalPort)
   }
 
   // ---- connection loop -------------------------------------------------
@@ -166,24 +151,16 @@ object MySqlEndpoint {
           case 0x03 /* COM_QUERY */ =>
             val sql = new String(cmd, 1, cmd.length - 1, UTF_8)
             try {
-              if (auth.exists(_.readonly) && Auth.isWrite(sql))
-                throw new IllegalStateException("Cannot execute query in readonly mode")
-              sessionChatter(spark, sql) match {
-                case Some(Left(affected)) => // SET/BEGIN/… or INSERT → OK
+              val outcome = protocolChatter(spark, sql).map(Statement.Rows(_))
+                .getOrElse(Statement.run(spark, auth.exists(_.readonly), sql))
+              outcome match {
+                case Statement.Rows(df) => writeResultSet(out, df)
+                case Statement.Done(_, affected) =>
                   writePacket(out, 1, okPacket(affected)); out.flush()
-                case Some(Right(df)) => // @@vars / SHOW → synthetic resultset
-                  writeResultSet(out, df)
-                case None =>
-                  val df = graft.ChSql.sql(spark, graft.ChSql.splitFormat(sql)._1)
-                  df.schema // analyze before the first resultset byte goes out
-                  if (df.columns.isEmpty) { // DDL: OK packet, like MySQL
-                    writePacket(out, 1, okPacket()); out.flush()
-                  } else writeResultSet(out, df)
               }
             } catch {
-              case e: Throwable =>
-                writePacket(out, 1, errPacket(1064,
-                  s"DB::Exception: ${Option(e.getMessage).getOrElse(e.toString)}"))
+              case e: Throwable => // the CH code as errno, like CH's own MySQL handler
+                writePacket(out, 1, errPacket(Statement.chCode(e), Statement.chMessage(e)))
                 out.flush()
             }
           case 0x04 /* COM_FIELD_LIST (legacy mysql CLI probe) */ =>
@@ -330,9 +307,6 @@ object MySqlEndpoint {
     "performance_schema" -> "0",
     "sql_auto_is_null" -> "0")
 
-  private val SetRe = "(?is)^\\s*SET\\s+.*$".r
-  private val UseRe = "(?is)^\\s*USE\\s+\\S+\\s*$".r
-  private val TxRe = "(?is)^\\s*(BEGIN|START\\s+TRANSACTION|COMMIT|ROLLBACK)\\s*$".r
   private val AtVarRe = "@@(?:session\\.|global\\.)?([A-Za-z_]+)".r
   private val SelectAtRe = "(?is)^\\s*SELECT\\s+(@@.+)$".r
   private val ShowVarsRe =
@@ -340,16 +314,16 @@ object MySqlEndpoint {
   private val ShowDbsRe = "(?is)^\\s*SHOW\\s+DATABASES\\s*$".r
   private val ShowTablesRe = "(?is)^\\s*SHOW\\s+(?:FULL\\s+)?TABLES\\s*$".r
 
-  /** Intercept the session chatter a real client opens with: Left =
-    * answer an OK packet (statements), Right = a synthetic resultset.
-    * Real queries return None and flow to the engine. */
-  private def sessionChatter(spark: SparkSession, sql: String)
-      : Option[Either[Long, DataFrame]] = {
+  /** The MySQL-only chatter a real client opens with, answered as a
+    * synthetic resultset: `SELECT @@var …`, SHOW VARIABLES/DATABASES/
+    * TABLES. Everything else (session no-ops included) returns None
+    * and runs through [[Statement]]. */
+  private def protocolChatter(spark: SparkSession, sql: String): Option[DataFrame] = {
+    import spark.implicits._
     val t = sql.trim.stripSuffix(";")
     def like(pat: String)(s: String): Boolean =
       s.matches(pat.replace("%", ".*").replace("_", "."))
     t match {
-      case SetRe() | UseRe() | TxRe(_) => Some(Left(0L))
       case SelectAtRe(exprs) if AtVarRe.findFirstIn(exprs).isDefined =>
         // SELECT @@a [AS x][, @@b …] — answer from the var map; any
         // non-@@ term in the list falls through to the engine
@@ -365,25 +339,19 @@ object MySqlEndpoint {
           val schema = StructType(cols.map { case (a, _) =>
             StructField(a, StringType, nullable = false) })
           val row: Row = Row.fromSeq(cols.map(_._2))
-          Some(Right(spark.createDataFrame(
-            java.util.Collections.singletonList(row), schema)))
+          Some(spark.createDataFrame(java.util.Collections.singletonList(row), schema))
         }
       case ShowVarsRe(pat) =>
-        import spark.implicits._
         val rows = serverVars.toSeq.sortBy(_._1)
           .filter { case (k, _) => pat == null || like(pat)(k) }
-        Some(Right(rows.toDF("Variable_name", "Value")))
+        Some(rows.toDF("Variable_name", "Value"))
       case ShowDbsRe() =>
-        import spark.implicits._
-        Some(Right(Seq("default").toDF("Database")))
+        Some(Seq("default").toDF("Database"))
       case ShowTablesRe() =>
-        import spark.implicits._
         val names = spark.catalog.listTables().collect()
           .map(_.name).toSeq.sorted
-        Some(Right(names.toDF("Tables_in_default")))
-      case _ =>
-        // INSERT over the wire door → OK with affected rows
-        HttpSqlEndpoint.ingest(spark, t).map(n => Left(n))
+        Some(names.toDF("Tables_in_default"))
+      case _ => None
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.{InetSocketAddress, ServerSocket, Socket}
+import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,18 +23,19 @@ import org.apache.spark.sql.types._
   *     instead gets AuthenticationCleartextPassword and the 'p'
   *     response is validated (28P01 on mismatch); a readonly profile
   *     rejects writes.
-  *   - Extended protocol (r19): Parse/Bind/Describe/Execute/Close/
-  *     Sync/Flush for parameterless statements — the sequence JDBC
-  *     and npgsql drivers actually speak — plus SET/BEGIN/DEALLOCATE/
-  *     DISCARD/empty-query chatter with proper CommandComplete tags,
-  *     and INSERT via the shared ingest (`INSERT 0 n`).
-  *   - Simple Query ('Q') → the text runs through the shared
-  *     [[graft.ChSql]] dialect front door and streams back as
-  *     RowDescription (Spark type → PG type OID) + DataRow per row
-  *     off `toLocalIterator()` (NULL = length -1) + CommandComplete
-  *     ("SELECT n") + ReadyForQuery. Errors → ErrorResponse with the
-  *     CH-style message, then ReadyForQuery (the session survives,
-  *     like psql expects).
+  *   - Extended protocol: Parse/Bind/Describe/Execute/Close/Sync/
+  *     Flush for parameterless statements — the sequence JDBC and
+  *     npgsql drivers actually speak. Statements and portals are
+  *     protocol state; Describe answers from [[Statement.describe]]
+  *     without executing.
+  *   - Simple Query ('Q') and Execute → the shared [[Statement]]
+  *     executor. A resultset streams back as RowDescription (Spark
+  *     type → PG type OID) + DataRow per row off `toLocalIterator()`
+  *     (NULL = length -1) + CommandComplete ("SELECT n"); INSERT, DDL
+  *     and session no-ops (SET/BEGIN/DEALLOCATE/DISCARD…) answer their
+  *     CommandComplete tag (`INSERT 0 n`). Errors → ErrorResponse whose
+  *     message is `Code: N. DB::Exception: …`, then ReadyForQuery (the
+  *     session survives, like psql expects).
   *   - Terminate ('X') / hangup closes.
   *   - Values render through the same CH text formatter as the
   *     HTTP/MySQL doors (PG text protocol is all strings).
@@ -51,23 +52,7 @@ object PgEndpoint {
 
   def start(spark: SparkSession, port: Int,
       auth: Option[Auth] = Auth.fromEnv): Running = {
-    val server = new ServerSocket()
-    server.bind(new InetSocketAddress("127.0.0.1", port))
-    val acceptor = new Thread(() => {
-      try {
-        var running = true
-        while (running) {
-          try {
-            val sock = server.accept()
-            val t = new Thread(() => serve(spark, sock, auth), "graft-pg-conn")
-            t.setDaemon(true)
-            t.start()
-          } catch { case _: java.net.SocketException => running = false }
-        }
-      } catch { case _: Throwable => }
-    }, "graft-pg-acceptor")
-    acceptor.setDaemon(true)
-    acceptor.start()
+    val server = Acceptor.start(port, "pg")(serve(spark, _, auth))
     Running(server, server.getLocalPort)
   }
 
@@ -177,12 +162,12 @@ object PgEndpoint {
         (new String(b, off, e - off, UTF_8), e + 1)
       }
       def sendError(e: Throwable): Unit = {
-        val msg = s"DB::Exception: ${Option(e.getMessage).getOrElse(e.toString)}"
         send(out, 'E', new M()
           .u8('S').cstr("ERROR").u8('C').cstr("42601")
-          .u8('M').cstr(msg).u8(0).bytes)
+          .u8('M').cstr(Statement.chMessage(e)).u8(0).bytes)
         out.flush()
       }
+      val readonly = auth.exists(_.readonly)
       // Extended-protocol error state (ADVICE r19): after an error the
       // backend answers ErrorResponse and DISCARDS messages until Sync
       // (public FE/BE protocol §error handling) — a thrown Bind/
@@ -205,9 +190,9 @@ object PgEndpoint {
             case 'Q' =>
               val sql = new String(body, 0, body.length - 1, UTF_8) // strip trailing \0
               try {
-                if (auth.exists(_.readonly) && Auth.isWrite(sql))
-                  throw new IllegalStateException("cannot execute INSERT in a read-only transaction")
-                runSimple(spark, out, sql)
+                if (sql.trim.stripSuffix(";").trim.isEmpty)
+                  send(out, 'I', Array.emptyByteArray) // EmptyQueryResponse
+                else complete(out, Statement.run(spark, readonly, sql), rowDescription = true)
               } catch { case e: Throwable => sendError(e) }
               send(out, 'Z', new M().u8('I').bytes)
               out.flush()
@@ -239,30 +224,20 @@ object PgEndpoint {
               // Describe('S') answers ParameterDescription first (none
               // — the parameterless scope), per the protocol
               if (body(0) == 'S') send(out, 't', new M().u16(0).bytes)
-              // CLASSIFY without executing (ADVICE r19: Describe used
-              // to run the statement — a stock JDBC Parse/Bind/
+              // metadata only, never execution (ADVICE r19: Describe
+              // used to run the statement — a stock JDBC Parse/Bind/
               // Describe/Execute sequence inserted rows TWICE and DROP
-              // dropped at Describe then errored at Execute). Chatter/
-              // INSERT/mutating-DDL have no resultset → NoData; only
-              // genuine queries analyze (lazily — no side effects).
-              val bare = graft.ChSql.splitFormat(sql)._1
-              if (chatterTag(sql).isDefined ||
-                HttpSqlEndpoint.isInsert(bare) || graft.ChDdl.isDdl(bare))
-                send(out, 'n', Array.emptyByteArray) // NoData
-              else {
-                val df = graft.ChSql.sql(spark, bare)
-                sendRowDescription(out, df.schema)
+              // dropped at Describe then errored at Execute)
+              Statement.describe(spark, sql) match {
+                case Some(schema) => sendRowDescription(out, schema)
+                case None => send(out, 'n', Array.emptyByteArray) // NoData
               }
             }
             case 'E' => ext { // Execute: portal, row cap (cap ignored — full result)
               val (portal, _) = cstrAt(body, 0)
               val sql = portals.getOrElse(portal,
                 throw new IllegalStateException(s"unknown portal '$portal'"))
-              // the readonly profile guards EVERY execution route, not
-              // just the simple-query path (ADVICE r19)
-              if (auth.exists(_.readonly) && Auth.isWrite(sql))
-                throw new IllegalStateException("cannot execute INSERT in a read-only transaction")
-              runExtended(spark, out, sql)
+              complete(out, Statement.run(spark, readonly, sql), rowDescription = false)
             }
             case 'C' => ext { // Close statement/portal
               val name = cstrAt(body, 1)._1
@@ -332,71 +307,17 @@ object PgEndpoint {
     n
   }
 
-  /** Session chatter a stock client (psql, JDBC) sends before and
-    * around real queries (VERDICT r18 next #2): transaction / SET /
-    * DEALLOCATE statements acknowledge as no-ops with the proper
-    * CommandComplete tag (a Spark session has no counterpart state to
-    * mutate), and INSERT routes to the shared ingest path. None =
-    * a real query for the engine. */
-  private def chatterTag(sql: String): Option[String] = {
-    val t = sql.trim.stripSuffix(";").trim
-    val up = t.toUpperCase
-    if (up == "SET" || up.startsWith("SET ")) Some("SET")
-    else if (up.startsWith("RESET")) Some("RESET")
-    else if (up == "BEGIN" || up.startsWith("BEGIN ") ||
-      up.startsWith("START TRANSACTION")) Some("BEGIN")
-    else if (up == "COMMIT" || up == "END") Some("COMMIT")
-    else if (up == "ROLLBACK") Some("ROLLBACK")
-    else if (up.startsWith("DEALLOCATE")) Some("DEALLOCATE")
-    else if (up.startsWith("DISCARD")) Some("DISCARD ALL")
-    else None
-  }
-
-  /** The EXECUTING form — classification (pure, shared with Describe)
-    * plus the INSERT route through the shared ingest. */
-  private def chatter(spark: SparkSession, sql: String): Option[String] =
-    chatterTag(sql).orElse(
-      HttpSqlEndpoint.ingest(spark, sql.trim.stripSuffix(";").trim)
-        .map(n => s"INSERT 0 $n"))
-
-  /** A DDL statement's PG command tag ("CREATE TABLE", "DROP TABLE",
-    * …): the first two keywords — what psql prints on success. */
-  private def ddlTag(sql: String): String =
-    sql.trim.split("\\s+").take(2).mkString(" ").toUpperCase
-
-  /** Simple-protocol execution: RowDescription + DataRows +
-    * CommandComplete (or EmptyQueryResponse / chatter tags / a bare
-    * CommandComplete for DDL — whose result has no columns). */
-  private def runSimple(spark: SparkSession, out: OutputStream, sql: String): Unit =
-    if (sql.trim.stripSuffix(";").trim.isEmpty)
-      send(out, 'I', Array.emptyByteArray) // EmptyQueryResponse
-    else chatter(spark, sql) match {
-      case Some(tag) => send(out, 'C', new M().cstr(tag).bytes)
-      case None =>
-        val df = graft.ChSql.sql(spark, graft.ChSql.splitFormat(sql)._1)
-        df.schema // analyze before the first byte goes out
-        if (df.columns.isEmpty) // DDL: command tag, no resultset
-          send(out, 'C', new M().cstr(ddlTag(sql)).bytes)
-        else {
-          sendRowDescription(out, df.schema)
-          val n = writeDataRows(out, df)
-          send(out, 'C', new M().cstr(s"SELECT $n").bytes)
-        }
-    }
-
-  /** Extended-protocol Execute: DataRows only — the RowDescription
-    * went out with Describe, per the protocol. */
-  private def runExtended(spark: SparkSession, out: OutputStream, sql: String): Unit =
-    chatter(spark, sql) match {
-      case Some(tag) => send(out, 'C', new M().cstr(tag).bytes)
-      case None =>
-        val df = graft.ChSql.sql(spark, graft.ChSql.splitFormat(sql)._1)
-        df.schema
-        if (df.columns.isEmpty)
-          send(out, 'C', new M().cstr(ddlTag(sql)).bytes)
-        else {
-          val n = writeDataRows(out, df)
-          send(out, 'C', new M().cstr(s"SELECT $n").bytes)
-        }
+  /** Encode an [[Statement.Outcome]]: a resultset as RowDescription
+    * (simple protocol only — Execute's went out at Describe) + DataRows
+    * + `SELECT n`; a statement without one as its command tag
+    * (`INSERT 0 n` for INSERT). */
+  private def complete(out: OutputStream, outcome: Statement.Outcome, rowDescription: Boolean): Unit =
+    outcome match {
+      case Statement.Rows(df) =>
+        if (rowDescription) sendRowDescription(out, df.schema)
+        val n = writeDataRows(out, df)
+        send(out, 'C', new M().cstr(s"SELECT $n").bytes)
+      case Statement.Done(kind, n) =>
+        send(out, 'C', new M().cstr(if (kind == "INSERT") s"INSERT 0 $n" else kind).bytes)
     }
 }

@@ -154,6 +154,31 @@ class DdlAuthSpec extends AnyFunSuite {
     } finally running.stop()
   }
 
+  test("readonly profile: comment-led DROP, EXECUTE IMMEDIATE and WITH … INSERT get Code: 164") {
+    val dir = Engine.scratch(spark, "ddl_auth", "ro_pv")
+    spark.range(3).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir).createOrReplaceTempView("ro_pv")
+    spark.range(3).createOrReplaceTempView("ro_v")
+    val running = HttpSqlEndpoint.start(spark, 0,
+      auth = Some(Auth("ro", "", readonly = true)))
+    try {
+      val h = Map("X-ClickHouse-User" -> "ro", "X-ClickHouse-Key" -> "")
+      Seq("/* c */ DROP TABLE ro_v",
+        "EXECUTE IMMEDIATE 'DROP TABLE ro_v'",
+        "WITH t AS (SELECT 7L id) INSERT INTO ro_pv SELECT * FROM t",
+        s"INSERT OVERWRITE DIRECTORY '$dir' USING parquet SELECT 7L id").foreach { q =>
+        val (c, b) = http(running, q, h)
+        assert(c == 403 && b.startsWith("Code: 164."), s"$q answered $c: $b")
+      }
+      assert(spark.table("ro_v").count() == 3)
+      assert(spark.read.parquet(dir).count() == 3, "no file may land in the view's dir")
+      // reads, SHOW/DESCRIBE/EXPLAIN and session no-ops still run
+      Seq("WITH t AS (SELECT id FROM ro_pv) SELECT count(*) FROM t", "SHOW TABLES",
+        "DESCRIBE ro_pv", "EXPLAIN SELECT * FROM ro_v", "SET max_threads = 1")
+        .foreach(q => assert(http(running, q, h)._1 == 200, q))
+    } finally running.stop()
+  }
+
   // ---- MySQL door: chatter + auth + insert -------------------------------------
 
   private class MyClient(port: Int) {
@@ -528,5 +553,42 @@ class DdlAuthSpec extends AnyFunSuite {
       val (t, b) = bad.readMsg()
       assert(t == 'E' && new String(b, "UTF-8").contains("28P01"))
     } finally { bad.close(); running.stop() }
+  }
+
+  // ---- every door ----------------------------------------------------------------
+
+  test("HTTP, MySQL and PG report the same CH error code") {
+    Engine.registerAll(spark, sf)
+    val httpDoor = HttpSqlEndpoint.start(spark, 0, auth = None)
+    val myDoor = MySqlEndpoint.start(spark, 0, auth = None)
+    val pgDoor = PgEndpoint.start(spark, 0, auth = None)
+    val my = new MyClient(myDoor.port)
+    val pg = new PgClient(pgDoor.port)
+    try {
+      my.login("default", None)
+      pg.startup("default")
+      pg.untilReady()
+      Seq("SELECT * FROM no_such_table_xyz" -> 60, // UNKNOWN_TABLE
+        "SELEC 1 FRM dual" -> 62,                  // SYNTAX_ERROR
+        "SELECT no_such_col FROM region" -> 47     // UNKNOWN_IDENTIFIER
+      ).foreach { case (q, code) =>
+        val conn = new URL(httpDoor.url + "/?query=" + URLEncoder.encode(q, "UTF-8"))
+          .openConnection().asInstanceOf[HttpURLConnection]
+        conn.getResponseCode
+        assert(conn.getHeaderField("X-ClickHouse-Exception-Code") == code.toString, q)
+        conn.disconnect()
+        val err = my.query(q).left.toOption.get
+        assert((err(0) & 0xff) == 0xff, q)
+        assert(((err(1) & 0xff) | ((err(2) & 0xff) << 8)) == code, q) // errno
+        assert(new String(err, 9, err.length - 9, "UTF-8").startsWith(s"Code: $code. DB::Exception:"), q)
+        pg.send('Q', pg.cstr(q))
+        val msg = pg.untilReady().collectFirst { case ('E', b) =>
+          new String(b, "UTF-8").split("\u0000").collectFirst {
+            case f if f.startsWith("M") => f.drop(1)
+          }.get
+        }
+        assert(msg.exists(_.startsWith(s"Code: $code. DB::Exception:")), s"$q: $msg")
+      }
+    } finally { my.close(); pg.close(); httpDoor.stop(); myDoor.stop(); pgDoor.stop() }
   }
 }

@@ -14,7 +14,7 @@ class DdlMutationSpec extends AnyFunSuite {
 
   private def sql(q: String) = ChSql.sql(spark, q)
   private def insert(q: String): Long =
-    HttpSqlEndpoint.ingest(spark, q).getOrElse(fail(s"not an INSERT: $q"))
+    ChDdl.ingest(spark, q).getOrElse(fail(s"not an INSERT: $q"))
   private def rows(q: String): Seq[Seq[Any]] =
     sql(q).collect().toSeq.map(_.toSeq)
 

@@ -118,10 +118,20 @@ class HttpEndpointSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("aggregate over a registered table matches the direct plan") {
-    val out = get(
-      "SELECT count(*) AS n FROM lineitem WHERE l_quantity < 10")
     val direct = Engine.t(spark, sf, "lineitem").filter("l_quantity < 10").count()
-    assert(out == s"$direct\n")
+    // CH's count() is count(*)
+    Seq("count(*)", "count()").foreach { agg =>
+      val out = get(s"SELECT $agg AS n FROM lineitem WHERE l_quantity < 10")
+      assert(out == s"$direct\n", agg)
+    }
+  }
+
+  test("SET is a session no-op: the shared Spark session keeps its conf") {
+    val before = spark.conf.get("spark.sql.session.timeZone")
+    val (code, out, _) = http("POST", "/", "SET spark.sql.session.timeZone=Asia/Tokyo")
+    assert(code == 200 && out.isEmpty)
+    assert(spark.conf.get("spark.sql.session.timeZone") == before)
+    assert(before == "UTC")
   }
 
   test("bad SQL → HTTP 400 with Code: 62 body and header (CH status mapping)") {
