@@ -563,11 +563,6 @@ object ChDdl {
         }
     }
 
-  /** Columns to read back for a table (drops the shadow partition
-    * column the layout writer added). */
-  private def readBack(df: DataFrame): DataFrame =
-    if (df.columns.contains("__graft_part")) df.drop("__graft_part") else df
-
   /** `INSERT INTO t [(cols)] FORMAT fmt\ndata…`,
     * `INSERT INTO t [(cols)] VALUES (…),(…)`, or
     * `INSERT INTO t [(cols)] SELECT …` (CH's insert-select — the
@@ -587,20 +582,27 @@ object ChDdl {
     InsertRe.findFirstMatchIn(text).map(m => Ingest.insert(spark, m))
 
   /** The ingest path: parsed rows append to a per-table parquet dir
-    * (`Engine.scratch(spark, "http", "ingest_<table>_g<n>")/b<i>`) and
-    * the temp view is re-registered as base ∪ ingested (fresh
-    * `spark.read.parquet` each time — a temp view snapshots its file
-    * listing, so re-registration is what makes new files visible). The
-    * base DataFrame is captured at FIRST insert; re-registering the
-    * view externally afterwards (e.g. `registerAll` with a different sf
-    * dir) resets nothing here — long-lived-server scope, one catalog
-    * per process. DDL on the table resets the state ([[reset]]) so the
-    * next INSERT re-captures its base from the CURRENT view. */
+    * (`Engine.scratch(spark, "http", "ingest_<table>_g<n>")/b<i>`, one
+    * part dir per INSERT, like a MergeTree part) and the temp view is
+    * re-registered as base ∪ ONE Parquet scan over every committed
+    * part. A temp view snapshots its file listing, so re-registration
+    * is what makes new files visible. The scan pins the writer's schema
+    * and looks files up recursively, which turns partition discovery
+    * off: `PARTITION BY` parts (`b<i>/__graft_part=…/`) share the one
+    * scan, and a part with no data files (an empty INSERT) reads as
+    * empty instead of failing schema inference. The base DataFrame is
+    * captured at FIRST insert; re-registering the view externally
+    * afterwards (e.g. `registerAll` with a different sf dir) resets
+    * nothing here — long-lived-server scope, one catalog per process.
+    * DDL on the table resets the state ([[reset]]) so the next INSERT
+    * re-captures its base from the CURRENT view. */
   private object Ingest {
-    private final case class State(
-        orig: DataFrame, dir: String,
-        n: java.util.concurrent.atomic.AtomicInteger =
-          new java.util.concurrent.atomic.AtomicInteger())
+    /** `parts` lists the part dirs whose write committed, in insert
+      * order; a failed write never enters it, so it cannot wedge the
+      * table's later inserts. Guarded by the State's monitor. */
+    private final class State(val orig: DataFrame, val dir: String) {
+      var parts: Vector[String] = Vector.empty
+    }
     private val reg = new java.util.concurrent.ConcurrentHashMap[String, State]()
     // Every State generation gets a FRESH dir suffix: after a DDL reset
     // the current view may still reference the previous generation's
@@ -633,51 +635,68 @@ object ChDdl {
       val aligned = parsed.select(schema.map { f =>
         if (cols.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
       }: _*)
+      // what the part files hold: the layout's shadow partition column
+      // lives only in the directory names
+      val dataSchema = Engine.readBackSchema(aligned.schema)
       val key = table.toLowerCase
       val st = reg.computeIfAbsent(key,
-        _ => State(target, Engine.scratch(spark, "http", s"ingest_${key}_g${gen.incrementAndGet()}")))
+        _ => new State(target, Engine.scratch(spark, "http", s"ingest_${key}_g${gen.incrementAndGet()}")))
       val (written, delta) = st.synchronized {
-        // Each insert lands in its OWN subdirectory and the row count
-        // reads back the files actually written (ADVICE r18: count()
-        // then write re-executed a nondeterministic INSERT…SELECT
-        // source, reporting a count from a different execution). The
-        // write target is a fresh dir the current view doesn't
-        // reference, so `INSERT INTO t SELECT … FROM t` reads a
+        // Each insert lands in its OWN part dir, one the current view
+        // doesn't reference, so `INSERT INTO t SELECT … FROM t` reads a
         // consistent pre-insert snapshot; the view re-registers only
-        // after the write commits. Reading parquet counts from footers
-        // — metadata only, no second plan execution.
-        val last = st.n.incrementAndGet()
-        val sub = s"${st.dir}/b$last"
+        // after the write commits. A failed write's dir is not in
+        // `parts`, and the next insert overwrites it.
+        val part = s"${st.dir}/b${st.parts.size + 1}"
         // DDL-created tables carry a storage layout (ORDER BY /
         // PARTITION BY — the K10 semantics): sort within partitions
-        // and directory-partition by the declared expression
+        // and directory-partition by the declared expression.
         // ONE file per insert block (r20, guide §6 small-files): the
         // block is driver-resident by wire-protocol nature, but a
         // LocalRelation write otherwise fans out one task per slice
-        // (3-5 near-empty files per insert, re-read by EVERY later
-        // view re-registration). CH itself writes one part per insert.
-        val (laid, parts) = layoutFor(aligned.coalesce(1), table)
+        // (3-5 near-empty files per insert). CH itself writes one part
+        // per insert.
+        val (laid, partCols) = layoutFor(aligned.coalesce(1), table)
         val w = laid.write.mode("overwrite")
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(sub)
-        // unpartitioned blocks read back with the writer's schema (no
-        // footer-inference round per dir per insert); partitioned ones
-        // keep inference — partition-column types come from dir names
-        def rd(path: String) =
-          if (parts.isEmpty) spark.read.schema(Engine.readBackSchema(laid.schema)).parquet(path)
-          else spark.read.parquet(path)
-        val n = rd(sub).count()
-        // each insert dir is its own partition-discovery root (a glob
-        // over partitioned subdirs trips CONFLICTING_DIRECTORY_
-        // STRUCTURES) — union the bounded per-insert list
-        val all = (1 to last).map(i => readBack(rd(s"${st.dir}/b$i"))).reduce(_.unionByName(_))
-        st.orig.unionByName(all).createOrReplaceTempView(table)
-        (n, readBack(rd(sub)))
+        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(part)
+        st.parts :+= part
+        // The written row count comes from the new files' footers:
+        // metadata only, no second plan execution (a count() beside the
+        // write re-ran a nondeterministic INSERT…SELECT source).
+        val n = footerRows(spark, part)
+        def scan(dirs: Seq[String]) = spark.read.schema(dataSchema)
+          .option("recursiveFileLookup", "true").parquet(dirs: _*)
+        st.orig.unionByName(scan(st.parts)).createOrReplaceTempView(table)
+        (n, scan(Seq(part)))
       }
       // Insert-driven MV maintenance (CH's incremental-MV contract):
       // the delta block is the parquet just written — deterministic
       // (footer-backed), never a re-execution of the INSERT's source.
       onInsert(spark, table, delta)
       written
+    }
+
+    /** Rows in the Parquet files under `dir`, summed from their
+      * footers. Skips the names Spark's file listing skips (`_SUCCESS`,
+      * `.crc` files) but keeps `k=v` partition dirs. */
+    private def footerRows(spark: SparkSession, dir: String): Long = {
+      import org.apache.hadoop.fs.Path
+      val conf = spark.sessionState.newHadoopConf()
+      val root = new Path(dir)
+      val fs = root.getFileSystem(conf)
+      def hidden(name: String) =
+        (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+      def rows(p: Path): Long = fs.listStatus(p).iterator
+        .filterNot(s => hidden(s.getPath.getName))
+        .map { s =>
+          if (s.isDirectory) rows(s.getPath)
+          else {
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
+            try r.getRecordCount finally r.close()
+          }
+        }.sum
+      rows(root)
     }
 
     /** Positional cast onto the target columns — shared by the VALUES
