@@ -1,0 +1,78 @@
+"""Tests of perf_ab's verdict arithmetic. Run: python3 scripts/test_perf_ab.py"""
+import os
+import sys
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import perf_ab  # noqa: E402
+
+
+class Quartiles(unittest.TestCase):
+    def test_interpolates_between_order_statistics(self):
+        self.assertEqual(perf_ab.quartiles([5, 1, 4, 2, 3]), (2, 3, 4))
+        self.assertEqual(perf_ab.quartiles([1, 2, 3, 4]), (1.75, 2.5, 3.25))
+
+    def test_one_value_is_every_quartile(self):
+        self.assertEqual(perf_ab.quartiles([7]), (7, 7, 7))
+
+
+BASE = [100, 101, 102, 103, 104, 105, 106, 107, 108, 109]  # median 104.5, IQR 4.5
+
+
+class Bound(unittest.TestCase):
+    def test_within_the_bound_is_ok(self):
+        r = perf_ab.judge(BASE, [x * 1.2 for x in BASE], "lower", 0.25)
+        self.assertTrue(r["bound_ok"] is True)
+        self.assertAlmostEqual(r["rel"], 0.2)
+
+    def test_past_the_bound_is_worse(self):
+        self.assertTrue(perf_ab.judge(BASE, [x * 1.3 for x in BASE], "lower", 0.25)["bound_ok"] is False)
+
+    def test_base_spread_wider_than_the_bound_is_unresolved(self):
+        base = [60, 80, 100, 120, 140]  # IQR 40 = 0.4 of the median
+        r = perf_ab.judge(base, [70, 90, 100, 110, 130], "lower", 0.25)
+        self.assertIsNone(r["bound_ok"])
+
+    def test_every_change_run_beating_every_base_run_resolves_it(self):
+        base = [60, 80, 100, 120, 140]
+        self.assertTrue(perf_ab.judge(base, [50, 51, 52, 53, 54], "lower", 0.25)["bound_ok"] is True)
+        # a single overlap leaves it unresolved
+        self.assertIsNone(perf_ab.judge(base, [50, 51, 52, 53, 61], "lower", 0.25)["bound_ok"])
+
+
+class Gain(unittest.TestCase):
+    def test_nine_wins_and_a_gap_past_the_base_iqr_is_a_gain(self):
+        change = [x - 10 for x in BASE[:9]] + [200]
+        r = perf_ab.judge(BASE, change, "lower", 0.25)
+        self.assertEqual(r["wins"], 9)
+        self.assertTrue(r["gain"])
+
+    def test_eight_wins_is_not(self):
+        change = [x - 10 for x in BASE[:8]] + [200, 200]
+        r = perf_ab.judge(BASE, change, "lower", 0.25)
+        self.assertEqual(r["wins"], 8)
+        self.assertFalse(r["gain"])
+
+    def test_a_gap_inside_the_base_iqr_is_not(self):
+        r = perf_ab.judge(BASE, [x - 4 for x in BASE], "lower", 0.25)
+        self.assertEqual(r["wins"], 10)
+        self.assertFalse(r["gain"])
+
+    def test_ties_count_for_neither_side(self):
+        self.assertEqual(perf_ab.judge(BASE, list(BASE), "lower", 0.25)["wins"], 0)
+
+
+class HigherIsBetter(unittest.TestCase):
+    def test_the_sign_flips(self):
+        up = perf_ab.judge(BASE, [x + 10 for x in BASE], "higher", 0.25)
+        self.assertEqual(up["wins"], 10)
+        self.assertTrue(up["gain"])
+        self.assertTrue(up["bound_ok"] is True)
+        down = perf_ab.judge(BASE, [x * 0.7 for x in BASE], "higher", 0.25)
+        self.assertEqual(down["wins"], 0)
+        self.assertTrue(down["bound_ok"] is False)
+        self.assertFalse(down["gain"])
+
+
+if __name__ == "__main__":
+    unittest.main()

@@ -41,6 +41,12 @@ object ChSql {
   def registerFinal(table: String, keyCols: Seq[String], versionCol: String): Unit =
     finalReg.put(table.toLowerCase, (keyCols, versionCol))
 
+  /** Drop a table's FINAL and SAMPLE metadata (its DROP TABLE). */
+  private[graft] def forget(table: String): Unit = {
+    finalReg.remove(table.toLowerCase)
+    sampleReg.remove(table.toLowerCase): Unit
+  }
+
   /** CH `EXPLAIN [AST|SYNTAX|PLAN|PIPELINE] q` (VERDICT r18 next #8)
     * mapped onto the Catalyst stages that play the same roles —
     * AST = the parsed (unresolved) logical plan, SYNTAX = the

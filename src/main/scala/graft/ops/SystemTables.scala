@@ -195,9 +195,7 @@ object SystemTables {
     import spark.implicits._
     val names = spark.catalog.listTables().collect().map(_.name)
       .filterNot(_.startsWith("__graft")).sorted.toSeq
-    def engineOf(t: String): String =
-      if (graft.ChDdl.tableDef(t).isDefined) "MergeTree" else "View"
-    names.map(t => ("default", t, engineOf(t)))
+    names.map(t => ("default", t, graft.ChDdl.engineName(t).getOrElse("View")))
       .toDF("database", "name", "engine")
       .createOrReplaceTempView("__graft_system_tables")
     names.flatMap { t =>

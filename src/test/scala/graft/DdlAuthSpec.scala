@@ -72,6 +72,25 @@ class DdlAuthSpec extends AnyFunSuite {
     } finally running.stop()
   }
 
+  test("SHOW CREATE TABLE keeps the engine and SAMPLE BY; replaying it restores FINAL") {
+    def rows(q: String) = ChSql.sql(spark, q).collect().toSeq.map(_.toSeq)
+    ChSql.sql(spark,
+      "CREATE TABLE ddl_rt (k Int64, v Int64, ver Int64) ENGINE = ReplacingMergeTree(ver) ORDER BY k SAMPLE BY k")
+    val stmt = rows("SHOW CREATE TABLE ddl_rt").head.head.toString
+    assert(stmt.contains(" ENGINE = ReplacingMergeTree(ver) ") && stmt.endsWith(" SAMPLE BY k"), stmt)
+    assert(rows("SELECT engine FROM system.tables WHERE name = 'ddl_rt'") ==
+      Seq(Seq("ReplacingMergeTree")))
+    ChSql.sql(spark, "DROP TABLE ddl_rt")
+    ChSql.sql(spark, stmt)
+    assert(rows("SHOW CREATE TABLE ddl_rt") == Seq(Seq(stmt)))
+    ChDdl.ingest(spark, "INSERT INTO ddl_rt VALUES (1, 10, 1), (1, 20, 2), (2, 5, 1)")
+    assert(rows("SELECT k, v FROM ddl_rt FINAL ORDER BY k") == Seq(Seq(1L, 20L), Seq(2L, 5L)))
+    ChSql.sql(spark, "CREATE MATERIALIZED VIEW ddl_rt_mv AS SELECT k, max(v) AS m FROM ddl_rt GROUP BY k")
+    assert(rows("SELECT engine FROM system.tables WHERE name = 'ddl_rt_mv'") ==
+      Seq(Seq("MaterializedView")))
+    ChSql.sql(spark, "DROP TABLE ddl_rt_mv"); ChSql.sql(spark, "DROP TABLE ddl_rt")
+  }
+
   test("init-script sequence: CREATE TABLE + INSERTs + MV maintained across inserts") {
     Engine.registerAll(spark, sf)
     val running = HttpSqlEndpoint.start(spark, 0, auth = None)
