@@ -3,14 +3,17 @@
 
     python3 scripts/perf_ab.py --base HEAD~1 --pairs 10 --workdir /tmp/graft_ab
     python3 scripts/perf_ab.py --base main --workloads ingest_mixed --claim ingest_mixed:latency_p50_ms
+    python3 scripts/perf_ab.py --base HEAD~1 --pairs 5 --first-seed 101 --workdir /tmp/graft_ab
 
 Exports the base revision (`git archive`) into `--workdir`, then runs
 `perfbench/run.py` (the command `BENCHMARK.json` declares) `--pairs`
 times per workload on each side: the base copy and the change, which is
 this checkout's working tree unless `--change REV` exports a second
-revision. Pair i uses seed i on both sides, and the side that runs
-first alternates from pair to pair. Each side runs the benchmark code
-of its own checkout, as a parent/change comparison does.
+revision. The pairs use seeds `--first-seed`, `--first-seed` + 1, … on
+both sides (1..N by default; a later first seed checks a claim on seeds
+not used while writing the change), and the side that runs first
+alternates from pair to pair. Each side runs the benchmark code of its
+own checkout, as a parent/change comparison does.
 
 For every end-to-end metric of every workload it prints each side's
 median and quartiles, the change's wins out of the pairs (ties count
@@ -65,6 +68,13 @@ def run_once(checkout, command, workload, seed, seconds, log):
     return None
 
 
+def plan(pairs, first_seed=1):
+    """The runs of one workload in order: (pair seed, side) for each pair,
+    the base first in even pairs and the change first in odd ones."""
+    return [(first_seed + i, side) for i in range(pairs)
+            for side in (("base", "change") if i % 2 == 0 else ("change", "base"))]
+
+
 def quartiles(xs):
     """(q1, median, q3), linear interpolation between order statistics."""
     if len(xs) == 1:
@@ -97,6 +107,7 @@ def main():
     ap.add_argument("--base", required=True, help="revision to compare against (e.g. HEAD~1)")
     ap.add_argument("--change", help="revision under test (default: this working tree)")
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, default=1, help="seed of the first pair (default 1)")
     ap.add_argument("--workloads", help="comma-separated (default: all in BENCHMARK.json)")
     ap.add_argument("--seconds", type=float, help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--claim", action="append", default=[], metavar="WORKLOAD:METRIC",
@@ -115,23 +126,22 @@ def main():
              "change": export(a.change, a.workdir) if a.change else ROOT}
     log_path = os.path.join(a.workdir, "perf_ab.log")
     print(f"# base {a.base} at {sides['base']}; change at {sides['change']}; "
-          f"{a.pairs} pairs x {seconds:g} s; log {log_path}")
+          f"{a.pairs} pairs (seeds {a.first_seed}..{a.first_seed + a.pairs - 1}) x {seconds:g} s; "
+          f"log {log_path}")
 
     ok = True
     with open(log_path, "a") as log:
         for w in workloads:
             runs = {"base": [], "change": []}
-            for i in range(a.pairs):
-                order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
-                for side in order:
-                    out = run_once(sides[side], bench["command"], w, i + 1, seconds, log)
-                    runs[side].append(out)
-                    good = bool(out) and out["correct"] and out["failed"] == 0
-                    ok &= good
-                    print(f"# {w} pair {i + 1} {side}: " + (
-                        " ".join(f"{k}={v['value']:.4g}" for k, v in out["metrics"].items())
-                        if out else "no result") + ("" if good else "  INCORRECT OR FAILED"),
-                        flush=True)
+            for seed, side in plan(a.pairs, a.first_seed):
+                out = run_once(sides[side], bench["command"], w, seed, seconds, log)
+                runs[side].append(out)
+                good = bool(out) and out["correct"] and out["failed"] == 0
+                ok &= good
+                print(f"# {w} seed {seed} {side}: " + (
+                    " ".join(f"{k}={v['value']:.4g}" for k, v in out["metrics"].items())
+                    if out else "no result") + ("" if good else "  INCORRECT OR FAILED"),
+                    flush=True)
             print(f"\n{w}: metric  base q1/med/q3  change q1/med/q3  wins  median change  bound  gain")
             for m in metrics:
                 name = m["name"]

@@ -1,10 +1,27 @@
-"""Tests of perf_ab's verdict arithmetic. Run: python3 scripts/test_perf_ab.py"""
+"""Tests of perf_ab's pair plan and verdict arithmetic. Run: python3 scripts/test_perf_ab.py"""
 import os
 import sys
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import perf_ab  # noqa: E402
+
+
+class Plan(unittest.TestCase):
+    def test_default_plan_is_seeds_one_to_n_alternating_which_side_runs_first(self):
+        self.assertEqual(perf_ab.plan(3), [
+            (1, "base"), (1, "change"),
+            (2, "change"), (2, "base"),
+            (3, "base"), (3, "change")])
+
+    def test_first_seed_shifts_the_seeds_and_keeps_the_alternation(self):
+        self.assertEqual(perf_ab.plan(4, first_seed=101),
+                         [(s + 100, side) for s, side in perf_ab.plan(4)])
+
+    def test_each_side_runs_each_seed_once(self):
+        runs = perf_ab.plan(10, first_seed=7)
+        for side in ("base", "change"):
+            self.assertEqual([s for s, x in runs if x == side], list(range(7, 17)))
 
 
 class Quartiles(unittest.TestCase):

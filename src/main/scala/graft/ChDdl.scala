@@ -139,22 +139,26 @@ object ChDdl {
         .option("recursiveFileLookup", "true").parquet(parts: _*)
 
     /** Rows in `part`, summed from the footers of its data files (in
-      * `k=v` partition dirs too); skips the `_SUCCESS` and `.crc` files
-      * Spark's listing skips. A committed part holds no hidden dirs. */
+      * `k=v` partition dirs too, `__graft_part=…`); skips the `_SUCCESS`
+      * and `.crc` files Spark's listing skips. A committed part holds no
+      * hidden dirs.
+      * Walks with `listStatus`, not `listFiles`: a `LocatedFileStatus`
+      * loads each file's permission, a forked `ls -ld` without libhadoop. */
     def rows(part: String): Long = {
       val conf = spark.sessionState.newHadoopConf()
       val root = new org.apache.hadoop.fs.Path(part)
-      val files = root.getFileSystem(conf).listFiles(root, true)
-      var n = 0L
-      while (files.hasNext) {
-        val f = files.next()
-        if (!f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) {
+      val fs = root.getFileSystem(conf)
+      def count(dir: org.apache.hadoop.fs.Path): Long = fs.listStatus(dir).iterator.map { f =>
+        val name = f.getPath.getName
+        if (f.isDirectory) count(f.getPath)
+        else if (name.startsWith("_") || name.startsWith(".")) 0L
+        else {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try n += r.getRecordCount finally r.close()
+          try r.getRecordCount finally r.close()
         }
-      }
-      n
+      }.sum
+      count(root)
     }
   }
 

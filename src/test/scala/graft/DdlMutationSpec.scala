@@ -164,6 +164,24 @@ class DdlMutationSpec extends AnyFunSuite {
     }
   }
 
+  test("an INSERT into a PARTITION BY table feeding AggInc and AppendInc MVs starts no process from Hadoop") {
+    sql("CREATE TABLE mvm_fork (ts DateTime, k String, v Int64) ENGINE = MergeTree ORDER BY k PARTITION BY toYYYYMM(ts)")
+    sql("CREATE MATERIALIZED VIEW mvm_fork_agg AS SELECT k, count(*) AS c, sum(v) AS s FROM mvm_fork GROUP BY k")
+    sql("CREATE MATERIALIZED VIEW mvm_fork_app AS SELECT k, v * 2 AS v2 FROM mvm_fork WHERE v > 0")
+    assert(ChDdl.mvModeFor("mvm_fork_agg").exists(_.startsWith("AggInc")))
+    assert(ChDdl.mvModeFor("mvm_fork_app").exists(_.startsWith("AppendInc")))
+    try {
+      var n = 0L
+      val forks = HadoopForks.during {
+        n = insert("INSERT INTO mvm_fork VALUES ('2024-01-05 10:00:00', 'a', 1), ('2024-02-05 10:00:00', 'b', 2)")
+      }
+      assert(n == 2L)
+      assert(forks.isEmpty, s"${forks.size} process starts:\n${forks.distinct.mkString("\n")}")
+      assert(rows("SELECT k, c, s FROM mvm_fork_agg ORDER BY k") == Seq(Seq("a", 1L, 1L), Seq("b", 1L, 2L)))
+      assert(rows("SELECT k, v2 FROM mvm_fork_app ORDER BY k") == Seq(Seq("a", 2L), Seq("b", 4L)))
+    } finally Seq("mvm_fork_agg", "mvm_fork_app", "mvm_fork").foreach(t => sql(s"DROP TABLE $t"))
+  }
+
   test("an empty INSERT into a PARTITION BY table does not wedge later inserts") {
     sql("CREATE TABLE mvm_emp (ts DateTime, k Int64) ENGINE = MergeTree ORDER BY k PARTITION BY toYYYYMM(ts)")
     insert("INSERT INTO mvm_emp VALUES ('2024-01-05 10:00:00', 1)")

@@ -20,6 +20,7 @@ object TestSpark {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir", "/tmp/graft_io/warehouse_test")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.sparkConf.toMap) // as Engine.session
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
