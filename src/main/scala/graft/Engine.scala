@@ -51,9 +51,8 @@ object Engine {
       // inside the timed region. Scale-neutral: any driver/executor
       // serving many distinct queries wants the cache sized to its
       // workload, not to 100 (entries are soft-referenced compiled
-      // classes, ~10-100 KB each). Env knob for re-measurement.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // classes, ~10-100 KB each).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Long many-query sessions (Verify/Bench run ~100 queries in one
       // JVM): cap status-store retention so listener state — including
       // the large AQE plan strings — can't accumulate across queries.
@@ -93,17 +92,32 @@ object Engine {
   }
 
   /** Width of the range exchange in the staged-rank patterns
-    * (DistRank / stagedCumOffsets / i4b / zorderWrite). A fixed literal
-    * is correct at local[32] but wrong at scale — 32 range partitions
-    * over 100 TB is ~3 TB per partition (VERDICT r17 #3). Default =
-    * `defaultParallelism` (the cluster's actual width); the
-    * surrounding algebra (per-partition counts → broadcast offsets) is
-    * width-independent, which `DistRankSpec` proves by re-running under
-    * a `SPARK_GRAFT_STAGING_WIDTH` override. */
+    * (DistRank, and through it stagedCumOffsets / i4b; zorderWrite). A
+    * fixed literal is correct at local[32] but wrong at scale — 32
+    * range partitions over 100 TB is ~3 TB per partition (VERDICT r17
+    * #3). Default = `defaultParallelism` (the cluster's actual width);
+    * the surrounding algebra (per-partition counts → broadcast
+    * offsets) is width-independent, which `DistRankSpec` proves by
+    * re-running under a `spark.graft.stagingWidth` override. */
   def stagingWidth(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.stagingWidth").map(_.toInt)
-      .orElse(sys.env.get("SPARK_GRAFT_STAGING_WIDTH").map(_.toInt))
       .getOrElse(spark.sparkContext.defaultParallelism)
+
+  /** Materialize a build-time intermediate: write `df` to scratch
+    * Parquet under `name` and return its schema-pinned read-back
+    * ([[readBack]]). Every downstream pass then reads the one written
+    * copy. Pays only where the plan cannot share the work itself — a
+    * driver collect reads the frame (a collect is its own job, so the
+    * scan behind it would run again in the next one), or the frame
+    * holds a value that must not change between passes
+    * (`spark_partition_id` after a sampled range exchange). Consumers
+    * inside one plan share an identical subplan through exchange reuse
+    * without it. */
+  def stage(df: DataFrame, dir: String, name: String): DataFrame = {
+    val path = scratch(df.sparkSession, dir, name)
+    df.write.mode("overwrite").parquet(path)
+    readBack(df.sparkSession, path, df.schema)
+  }
 
   /** Deterministic per-sf cache path for IMMUTABLE derived data (e.g.
     * the staged streaming source files): survives across runs so a

@@ -852,13 +852,8 @@ object Aggregates {
     // partitions, and make the offsets exclusive per (side, partition)
     // instead of per partition. Callers window over (sideCol, __pid).
     // With sideCol = None the path is byte-identical to the r20 form.
-    val staged = Engine.scratch(spark, dir, name)
-    val rangeCols = (sideCol.toSeq :+ sortCol).map(col)
-    val toStage = byVal.repartitionByRange(Engine.stagingWidth(spark), rangeCols: _*)
-      .sortWithinPartitions(rangeCols: _*)
-      .withColumn("__pid", spark_partition_id())
-    toStage.write.mode("overwrite").parquet(staged)
-    val df = Engine.readBack(spark, staged, toStage.schema)
+    val df = DistRank.rangeStaged(spark, dir, name, byVal,
+      (sideCol.toSeq :+ sortCol).map(col))
     val keyCols = "__pid" +: sideCol.toSeq
     val per = df.groupBy(keyCols.map(col): _*)
       .agg(sum(sumCols.head).as(sumCols.head),
@@ -1038,13 +1033,10 @@ object Aggregates {
     // cnt·ux·uy), so the last-mile double expression is unchanged and
     // the oracle hash pins equivalence. Jobs: 8 → 5 (pairs write,
     // range sampling, staging write, offsets collect, final agg).
-    val pairPath = Engine.scratch(spark, dir, "d36_pairs")
-    val pairRollup = Engine.t(spark, dir, "lineitem")
+    val pairs = Engine.stage(Engine.t(spark, dir, "lineitem")
       .select(CH.dec(col("l_quantity")).as("x"),
         CH.dec(col("l_extendedprice")).as("y"))
-      .groupBy("x", "y").agg(count(lit(1)).as("cnt"))
-    pairRollup.write.mode("overwrite").parquet(pairPath)
-    val pairs = Engine.readBack(spark, pairPath, pairRollup.schema)
+      .groupBy("x", "y").agg(count(lit(1)).as("cnt")), dir, "d36_pairs")
     val wOff = Window.partitionBy("__side", "__pid").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, -1)
     def uCol = (lit(2) * (col("__off_cnt") + coalesce(sum("cnt").over(wOff), lit(0L)))
@@ -1122,59 +1114,24 @@ object Aggregates {
   }
 
   /** I4b: equi-HEIGHT histogram — the other histogram CH (and every
-    * CBO) keeps: ntile splits the value distribution into equal-count
-    * buckets, each summarized by (lo, hi, n). Total-order tiebreak on
-    * the row key makes bucket edges deterministic; the global sort
-    * runs at the grouped cardinality. Complements i4's equi-width
-    * exact-bucket form. */
-  /** I4b: equi-height histogram = `ntile(10)` over the (o_totalprice,
-    * o_orderkey) total order — but a bare global ntile window is a
-    * SINGLE-TASK sort of the whole table (the sf10 rehearsal measured
-    * 30 s sorting 15 M rows on one core). Distributed equivalent:
-    * range-repartition on the sort key and persist once (so both
-    * passes see identical partitions), take per-partition counts (≤
-    * one row per partition — KB-scale driver state, the d6 pattern),
-    * convert each partition's local row_number to a global rank with
-    * broadcast offsets, and apply ntile's exact bucket arithmetic
-    * (first n mod k buckets get ⌈n/k⌉ rows) in closed form. Output is
-    * bit-identical to the builtin ntile (same total order, same
-    * remainder rule — `ntile ≡ builtin` case in `SketchSpec`). */
-  private def i4bEquiheight(spark: SparkSession, dir: String): DataFrame = {
-    val sortCols = Seq(col("o_totalprice"), col("o_orderkey"))
-    val stagedPath = Engine.scratch(spark, dir, "i4b_ranked")
-    val toStage = Engine.t(spark, dir, "orders")
-      .select("o_totalprice", "o_orderkey")
-      .repartitionByRange(Engine.stagingWidth(spark), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("pid", spark_partition_id())
-    toStage.write.mode("overwrite").parquet(stagedPath)
-    val staged = Engine.readBack(spark, stagedPath, toStage.schema)
-    val pidCounts = staged.groupBy("pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = pidCounts.scanLeft(0L)(_ + _._2).zip(pidCounts)
-      .map { case (off, (pid, _)) => (pid, off) }
-    val n = pidCounts.map(_._2).sum
-    val q = n / 10
-    val r = n % 10
-    val offDf = staged.sparkSession.createDataFrame(offsets).toDF("pid", "off")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("pid").orderBy(sortCols: _*)
-    val rank = (col("off") + row_number().over(wp)).as("rank")
-    val bucket =
-      if (q == 0) col("rank") // fewer rows than buckets: bucket = rank
-      else when(col("rank") <= lit(r * (q + 1)),
-          (col("rank") - 1) / lit(q + 1) + 1)
-        .otherwise(lit(r) + (col("rank") - lit(r * (q + 1)) - 1) / lit(q) + 1)
-    staged.join(broadcast(offDf), "pid")
-      .select(col("o_totalprice"), rank)
-      .withColumn("bucket", floor(bucket).cast("int"))
+    * CBO) keeps: `ntile(10)` over the (o_totalprice, o_orderkey) total
+    * order splits the value distribution into equal-count buckets, each
+    * summarized by (lo, hi, n); the row-key tiebreak makes bucket edges
+    * deterministic. A bare global ntile window is a SINGLE-TASK sort of
+    * the whole table (the sf10 rehearsal measured 30 s sorting 15 M rows
+    * on one core), so the buckets come from [[DistRank.ntile]] —
+    * bit-identical to the builtin (`DistRankSpec`). Complements i4's
+    * equi-width exact-bucket form. */
+  private def i4bEquiheight(spark: SparkSession, dir: String): DataFrame =
+    DistRank.ntile(spark, dir, "i4b_ranked",
+        Engine.t(spark, dir, "orders").select("o_totalprice", "o_orderkey"),
+        Seq(col("o_totalprice"), col("o_orderkey")), 10, "bucket")
       .groupBy("bucket")
       .agg(
         count(lit(1)).as("n"),
         min(col("o_totalprice")).as("lo"),
         max(col("o_totalprice")).as("hi"))
       .orderBy("bucket")
-  }
 
   /** D31: `cramersV` — CH's categorical-association family: χ² over
     * the exact contingency table of two columns, normalized to [0,1].

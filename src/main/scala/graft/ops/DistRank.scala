@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Engine
 
-/** Distributed exact global ranking (the i4b pattern —
-  * `Aggregates.scala` i4bEquiheight — factored for reuse): a bare
+/** Distributed exact ranking (i4b, e15 and l46 rank through it; d34–d36's
+  * cumulative sums share its range prologue): a bare
   * global window (`Window.orderBy` with no partition) moves its WHOLE
   * input through one task, which is fine for a bounded rollup and a
   * 100 TB killer for anything that grows with the data. Equivalent
@@ -24,45 +24,32 @@ import graft.Engine
   * that pins the decomposition. */
 object DistRank {
 
+  /** The staged range prologue every rank ladder starts from
+    * ([[groupedNtile]], `Aggregates.stagedCumOffsets`):
+    * range-partition on `rangeCols` over [[Engine.stagingWidth]]
+    * partitions, sort within each, tag rows with `__pid`, and stage.
+    * The range boundaries come from sampling, which is not
+    * deterministic across jobs, so the stage pins ONE partition
+    * assignment for the per-partition collect and every later pass. */
+  private[ops] def rangeStaged(spark: SparkSession, dir: String, name: String,
+      df: DataFrame, rangeCols: Seq[Column]): DataFrame =
+    Engine.stage(df.repartitionByRange(Engine.stagingWidth(spark), rangeCols: _*)
+      .sortWithinPartitions(rangeCols: _*)
+      .withColumn("__pid", spark_partition_id()), dir, name)
+
   /** Exact `ntile(k)` over the global `sortCols` order, appended as
-    * integer column `out`. ntile's remainder rule (first n mod k
-    * buckets get ⌈n/k⌉ rows) is applied in closed form from the
-    * driver-side total count. */
+    * integer column `out`: [[groupedNtile]] with no group. */
   def ntile(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, sortCols: Seq[Column], k: Int, out: String): DataFrame = {
-    val stagedPath = Engine.scratch(spark, dir, name)
-    val toStage = df.repartitionByRange(Engine.stagingWidth(spark), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-    toStage.write.mode("overwrite").parquet(stagedPath)
-    val staged = Engine.readBack(spark, stagedPath, toStage.schema)
-    val pidCounts = staged.groupBy("__pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = pidCounts.scanLeft(0L)(_ + _._2).zip(pidCounts)
-      .map { case (off, (pid, _)) => (pid, off) }
-    val n = pidCounts.map(_._2).sum
-    val q = n / k
-    val r = n % k
-    val offDf = spark.createDataFrame(offsets.toSeq).toDF("__pid", "__off")
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy("__pid").orderBy(sortCols: _*)
-    val rank = col("__off") + row_number().over(wp)
-    val bucket =
-      if (q == 0) rank // fewer rows than buckets: bucket = rank
-      else when(rank <= lit(r * (q + 1)), (rank - 1) / lit(q + 1) + 1)
-        .otherwise(lit(r) + (rank - lit(r * (q + 1)) - 1) / lit(q) + 1)
-    staged.join(broadcast(offDf), "__pid")
-      .withColumn(out, floor(bucket).cast("int"))
-      .drop("__pid", "__off")
-  }
+      df: DataFrame, sortCols: Seq[Column], k: Int, out: String): DataFrame =
+    groupedNtile(spark, dir, name, df, Nil, sortCols, k, out)
 
   /** Exact `ntile(k) OVER (PARTITION BY groupCols ORDER BY sortCols)`
     * without per-group window partitions. A builtin partitioned window
     * puts each GROUP on one task — fine for high-cardinality groups,
     * a skew cliff when one group dominates (one language owning 60%
-    * of a 100 TB corpus is a single-task sort). Same machinery as
-    * [[ntile]], with the range exchange spreading each group across
-    * MANY partitions: range-partition by (groupCols, sortCols), stage,
+    * of a 100 TB corpus is a single-task sort). The range exchange
+    * spreads each group across MANY partitions: range-partition by
+    * (groupCols, sortCols) and stage ([[rangeStaged]]),
     * collect per-(group, partition) counts — driver state is
     * n_groups × stagingWidth rows, bounded when the group domain is (languages
     * here; the caller's contract) — then per-group exclusive offsets
@@ -72,15 +59,9 @@ object DistRank {
   def groupedNtile(spark: SparkSession, dir: String, name: String,
       df: DataFrame, groupCols: Seq[String], sortCols: Seq[Column], k: Int,
       out: String): DataFrame = {
-    val stagedPath = Engine.scratch(spark, dir, name)
-    val partCols = groupCols.map(col) ++ sortCols
-    val toStage = df.repartitionByRange(Engine.stagingWidth(spark), partCols: _*)
-      .sortWithinPartitions(partCols: _*)
-      .withColumn("__pid", spark_partition_id())
-    toStage.write.mode("overwrite").parquet(stagedPath)
-    val staged = Engine.readBack(spark, stagedPath, toStage.schema)
-    val cntRows = staged
-      .groupBy(groupCols.head, (groupCols.tail :+ "__pid"): _*).count().collect()
+    val keys = groupCols :+ "__pid"
+    val staged = rangeStaged(spark, dir, name, df, groupCols.map(col) ++ sortCols)
+    val cntRows = staged.groupBy(keys.map(col): _*).count().collect()
     val offRows = cntRows
       .groupBy(r => groupCols.map(c => r.get(r.fieldIndex(c))))
       .toSeq.flatMap { case (gkey, rows) =>
@@ -105,8 +86,8 @@ object DistRank {
     val offDf = spark.createDataFrame(
       spark.sparkContext.parallelize(offRows, 1), schema)
     val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy((groupCols :+ "__pid").map(col): _*).orderBy(sortCols: _*)
-    staged.join(broadcast(offDf), groupCols :+ "__pid")
+      .partitionBy(keys.map(col): _*).orderBy(sortCols: _*)
+    staged.join(broadcast(offDf), keys)
       .withColumn("__rk", col("__off") + row_number().over(wp))
       .withColumn(out, expr(
         s"""CAST(CASE

@@ -273,15 +273,12 @@ object Events {
     // builtin, DuckDB's flat window stays the oracle); the rollup is
     // staged once so the three rank passes and the final join all read
     // one materialization instead of re-aggregating orders 4×.
-    val perPath = Engine.scratch(spark, dir, "e15_per")
-    val rollup = Engine.t(spark, dir, "orders")
+    val per = Engine.stage(Engine.t(spark, dir, "orders")
       .groupBy("o_custkey")
       .agg(
         max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("freq"),
-        sum(graft.CH.dec(col("o_totalprice"))).as("monetary"))
-    rollup.write.mode("overwrite").parquet(perPath)
-    val per = Engine.readBack(spark, perPath, rollup.schema)
+        sum(graft.CH.dec(col("o_totalprice"))).as("monetary")), dir, "e15_per")
     // r20: ONE staged rank pass for all three quartiles (the d36
     // shared-marginal trick): the three keyed copies union with a tag
     // and ride [[DistRank.groupedNtile]] with the tag as the group key

@@ -305,7 +305,7 @@ object LlmPipeline {
     val grams = reps.select(col("doc_id"),
       array_distinct(LlmText.ngrams(toks, 3)).as("grams"))
     val inter = size(array_intersect(col("ga"), col("gb")))
-    LlmText.lshCandidatesOf(spark, dir, reps, "l37_bands")
+    LlmText.lshCandidatesOf(reps)
       .join(grams.select(col("doc_id").as("a"), col("grams").as("ga")), "a")
       .join(grams.select(col("doc_id").as("b"), col("grams").as("gb")), "b")
       .select(col("a"), col("b"),
@@ -513,9 +513,7 @@ object LlmPipeline {
       .withColumn("pos", explode(sequence(lit(1), (col("n_toks") - (W - 1)).cast("int"))))
       .select(col("doc_id"), col("n_toks"), col("pos"),
         xxhash64(concat_ws(" ", slice(col("t"), col("pos"), lit(W)))).as("h"))
-    val stagedPath = Engine.scratch(spark, dir, "l43_grams")
-    grams.write.mode("overwrite").parquet(stagedPath)
-    val g = Engine.readBack(spark, stagedPath, grams.schema)
+    val g = Engine.stage(grams, dir, "l43_grams")
     val dup = g.groupBy("h")
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2).select("h")
@@ -663,10 +661,8 @@ object LlmPipeline {
     // re-runs the corpus explode per consumer. Pre-aggregate to
     // (chunk, doc_id, occ) — the minimal artifact both consumers need
     // — and stage it once.
-    val stagedPath = Engine.scratch(spark, dir, "l22_chunk_doc")
-    val occRollup = chunks.groupBy("chunk", "doc_id").agg(count(lit(1)).as("occ"))
-    occRollup.write.mode("overwrite").parquet(stagedPath)
-    val occPerDoc = Engine.readBack(spark, stagedPath, occRollup.schema)
+    val occPerDoc = Engine.stage(
+      chunks.groupBy("chunk", "doc_id").agg(count(lit(1)).as("occ")), dir, "l22_chunk_doc")
     val byChunk = occPerDoc.groupBy("chunk")
       .agg(count(lit(1)).as("n_docs"), sum(col("occ")).as("n_occ"))
     val dupChunks = byChunk.filter(col("n_docs") > 1)
@@ -871,12 +867,9 @@ object LlmPipeline {
     // stage it; both consumers read the narrow artifact. Σ c·f equals
     // the per-occurrence Σ f exactly (long integers), so the
     // fixed-point score — and the oracle hash — are unchanged.
-    val stagedPath = Engine.scratch(spark, dir, "l46_doc_tok")
-    val tokRollup = Engine.t(spark, dir, "documents")
+    val tok = Engine.stage(Engine.t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), explode(toks).as("t"))
-      .groupBy("doc_id", "lang", "t").agg(count(lit(1)).as("c"))
-    tokRollup.write.mode("overwrite").parquet(stagedPath)
-    val tok = Engine.readBack(spark, stagedPath, tokRollup.schema)
+      .groupBy("doc_id", "lang", "t").agg(count(lit(1)).as("c")), dir, "l46_doc_tok")
     val freq = tok.groupBy("t").agg(sum(col("c")).as("f"))
     val perDoc = tok
       .join(broadcast(freq), Seq("t"))

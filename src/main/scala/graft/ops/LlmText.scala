@@ -71,12 +71,11 @@ object LlmText {
     * This is the candidate-stage DEMO over the full corpus — its
     * declared count deliberately includes pairs among exact copies. */
   def lshCandidates(spark: SparkSession, dir: String): DataFrame =
-    lshCandidatesOf(spark, dir, Engine.t(spark, dir, "documents"), "l4_bands")
+    lshCandidatesOf(Engine.t(spark, dir, "documents"))
 
   /** LSH candidate pairs over an arbitrary document set (l4 runs it on
     * the full corpus; l37 on exact-dedup representatives). */
-  private[graft] def lshCandidatesOf(
-      spark: SparkSession, dir: String, documents: DataFrame, name: String): DataFrame = {
+  private[graft] def lshCandidatesOf(documents: DataFrame): DataFrame = {
     // Band hashes via the fused codegen'd minhash_bands kernel
     // (graft.expressions.MinHashBandsExpr, injected by GraftExtensions):
     // one xxhash64 (seed 42) per shingle, 16 rotate-xor mixes, and the
@@ -85,14 +84,12 @@ object LlmText {
     // keep CollapseProject from inlining the signature pipeline into a
     // band lambda (that inlining previously forced a repartition here).
     val bandExpr = call_function("minhash_bands", ngrams(toks, 3))
-    // Materialize the (doc, band, sig) table once — the self-join would
-    // otherwise recompute the whole signature pipeline on both sides.
-    // At scale this is exactly the LSH bucket table a pipeline persists.
-    val bandsPath = Engine.scratch(spark, dir, name)
-    val bandTable = fanOut(documents)
+    // Both sides of the self-join hash-partition the same (doc, band,
+    // sig) table on (band, sig), so the second side is a ReusedExchange
+    // of the first: the signature pipeline runs once without staging
+    // (one documents scan in the final plan — `PlanShapeSpec`).
+    val docs = fanOut(documents)
       .select(col("doc_id"), posexplode(bandExpr).as(Seq("band", "sig")))
-    bandTable.write.mode("overwrite").parquet(bandsPath)
-    val docs = Engine.readBack(spark, bandsPath, bandTable.schema)
     val a = docs.select(col("band"), col("sig"), col("doc_id").as("a"))
     val b = docs.select(col("band"), col("sig"), col("doc_id").as("b"))
     a.join(b, Seq("band", "sig")).filter(col("a") < col("b"))
@@ -116,7 +113,7 @@ object LlmText {
       .agg(min("doc_id").as("doc_id"), first("text").as("text"),
         count(lit(1)).as("n_copies"))
     val mult = groups.select(col("doc_id"), col("n_copies"))
-    val cross = lshCandidatesOf(spark, dir, groups.select("doc_id", "text"), "l4_bands")
+    val cross = lshCandidatesOf(groups.select("doc_id", "text"))
       .join(mult.select(col("doc_id").as("a"), col("n_copies").as("na")), "a")
       .join(mult.select(col("doc_id").as("b"), col("n_copies").as("nb")), "b")
       .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("cross_pairs"))
@@ -329,10 +326,9 @@ object LlmText {
     * group sizes. Equivalence to the pair-enumerating form is pinned
     * by `LlmOpsSpec` at two scales. */
   private def l13Simhash(spark: SparkSession, dir: String): DataFrame =
-    simhashPairVerdict(spark, dir,
+    simhashPairVerdict(
       fanOut(Engine.t(spark, dir, "documents"))
-        .select(col("doc_id"), call_function("simhash64", toks).as("sh")),
-      "l13_sig_groups")
+        .select(col("doc_id"), call_function("simhash64", toks).as("sh")))
 
   /** Declared l13b: the SAME banded-signature pair arithmetic as l13,
     * run over a bounded doc prefix with the MD5-based signature
@@ -344,27 +340,25 @@ object LlmText {
     * The 16-bit × 4 banding finds EVERY Hamming ≤ 3 pair by pigeonhole
     * — the oracle independently proves that completeness claim. */
   private def l13bSimhashVerdict(spark: SparkSession, dir: String): DataFrame =
-    simhashPairVerdict(spark, dir,
+    simhashPairVerdict(
       fanOut(Engine.t(spark, dir, "documents").filter(col("doc_id") < 300))
-        .select(col("doc_id"), call_function("simhash64_md5", toks).as("sh")),
-      "l13b_sig_groups")
+        .select(col("doc_id"), call_function("simhash64_md5", toks).as("sh")))
 
   /** Shared by l13 (production xxhash signature) and l13b (oracle-
     * replayable MD5 signature): (doc_id, sh) → one-row
     * (n_docs, n_neardup_pairs, max_hamming) without enumerating
     * doc-level pairs. */
-  private def simhashPairVerdict(
-      spark: SparkSession, dir: String, sigs: DataFrame, stage: String): DataFrame = {
-    // Materialize the signature groups ONCE: the plan consumes them
-    // three times (doc count, intra-group pairs, banded self-join),
-    // and Spark does not dedupe common subplans — without staging the
-    // corpus is scanned and simhash'd 3× (visible in the physical
-    // plan as three parquet scans). One corpus pass + a signature-
-    // sized artifact instead.
-    val stagedPath = Engine.scratch(spark, dir, stage)
-    val shRollup = sigs.groupBy("sh").agg(count(lit(1)).as("cnt"))
-    shRollup.write.mode("overwrite").parquet(stagedPath)
-    val groups = Engine.readBack(spark, stagedPath, shRollup.schema)
+  private def simhashPairVerdict(sigs: DataFrame): DataFrame = {
+    // The plan consumes the signature groups three times (doc count,
+    // intra-group pairs, banded self-join); all three sit on the same
+    // (sh) aggregate exchange, which Spark reuses, so the corpus is
+    // scanned and simhash'd once (`PlanShapeSpec` pins one documents
+    // scan in the final plan). The pair predicates are wrapped in
+    // `coalesce(…, false)`: a bare comparison implies `sh IS NOT NULL`,
+    // which Catalyst would push below the self-join's aggregate only,
+    // so that side would no longer match the others and rescan.
+    val groups = sigs.groupBy("sh").agg(count(lit(1)).as("cnt"))
+    def holds(c: Column) = coalesce(c, lit(false))
     val intra = groups.agg(
       coalesce(sum(expr("(cnt * (cnt - 1)) div 2")), lit(0L)).as("intra_pairs"),
       coalesce(max((col("cnt") > 1).cast("int")), lit(0)).as("has_intra"))
@@ -373,10 +367,10 @@ object LlmText {
       .select(col("sh"), col("cnt"), col("bc.band").as("band"), col("bc.chunk").as("chunk"))
     val a = banded.select(col("band"), col("chunk"), col("sh").as("a_sh"), col("cnt").as("a_cnt"))
     val b = banded.select(col("band"), col("chunk"), col("sh").as("b_sh"), col("cnt").as("b_cnt"))
-    val inter = a.join(b, Seq("band", "chunk")).filter(col("a_sh") < col("b_sh"))
+    val inter = a.join(b, Seq("band", "chunk")).filter(holds(col("a_sh") < col("b_sh")))
       .select(col("a_sh"), col("b_sh"), col("a_cnt"), col("b_cnt"),
         expr("bit_count(a_sh ^ b_sh)").as("hamming"))
-      .filter(col("hamming") <= 3)
+      .filter(holds(col("hamming") <= 3))
       .distinct()
       .agg(
         coalesce(sum(col("a_cnt") * col("b_cnt")), lit(0L)).as("inter_pairs"),
@@ -518,12 +512,9 @@ object LlmText {
     * exchange. The doc-count scalar broadcasts (one row). */
   private def l41TfidfTopTerms(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-    val staged = Engine.scratch(spark, dir, "l41_doc_term")
-    val tfRollup = Engine.t(spark, dir, "documents")
+    val pairs = Engine.stage(Engine.t(spark, dir, "documents")
       .select(col("doc_id"), explode(toks).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    tfRollup.write.mode("overwrite").parquet(staged)
-    val pairs = Engine.readBack(spark, staged, tfRollup.schema)
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")), dir, "l41_doc_term")
     val dfTab = pairs.groupBy("term").agg(count(lit(1)).as("dcount"))
     val total = Engine.t(spark, dir, "documents").agg(count(lit(1)).as("n_docs"))
     val score = col("tf").cast("double") *
@@ -557,7 +548,7 @@ object LlmText {
     * only corpus-sized exchanges are the bucket-count agg and the
     * per-doc weight sum. */
   private[graft] def dsirPerDoc(docs: DataFrame, targetCond: Column, B: Int,
-      stagePath: String): DataFrame = {
+      dir: String, stage: String): DataFrame = {
     // r20 (the l22/l41 multi-consumer rule): the bigram explode feeds
     // both the model build and the scoring join — without sharing, the
     // corpus scan + shingle + hash replays per consumer. Pre-aggregate
@@ -570,12 +561,10 @@ object LlmText {
     // partition-order-level float freedom this no-oracle scorer
     // already declares (the fixed-point l45b twin, which IS
     // oracle-pinned, stays exact).
-    val bgRollup = docs
+    val bg = Engine.stage(docs
       .select(col("doc_id"), targetCond.as("is_t"), explode(ngrams(toks, 2)).as("bigram"))
       .withColumn("b", pmod(xxhash64(col("bigram")), lit(B)))
-      .groupBy("doc_id", "is_t", "b").agg(count(lit(1)).as("c"))
-    bgRollup.write.mode("overwrite").parquet(stagePath)
-    val bg = Engine.readBack(docs.sparkSession, stagePath, bgRollup.schema)
+      .groupBy("doc_id", "is_t", "b").agg(count(lit(1)).as("c")), dir, stage)
     val model = bg.groupBy("b").agg(
       sum(when(col("is_t"), col("c")).otherwise(0L)).as("ct"),
       sum(col("c")).as("cr"))
@@ -599,8 +588,7 @@ object LlmText {
     * THIS scorer. */
   private def l45DsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val docs = Engine.t(spark, dir, "documents")
-    dsirPerDoc(docs, col("lang") === "en", 1024,
-      Engine.scratch(spark, dir, "l45_doc_bucket"))
+    dsirPerDoc(docs, col("lang") === "en", 1024, dir, "l45_doc_bucket")
       .join(docs.select("doc_id", "lang"), "doc_id")
       .select(col("doc_id"), col("lang"),
         round(col("dsir_w"), 6).as("dsir_w"), col("n_bigrams"))

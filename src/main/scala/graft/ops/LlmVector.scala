@@ -86,14 +86,11 @@ object LlmVector {
     // by all three consumers (reps + both membership joins) — the
     // window runs once, not three times.
     val w = Window.partitionBy("label", "hv", "embedding")
-    val mPath = Engine.scratch(spark, dir, "l11_repmap")
-    val repTable = corpus(spark, dir)
+    val m = Engine.stage(corpus(spark, dir)
       .select(col("label"), col("vec_id"), col("embedding"),
         xxhash64(col("embedding")).as("hv"))
       .withColumn("rep", min("vec_id").over(w))
-      .drop("hv")
-    repTable.write.mode("overwrite").parquet(mPath)
-    val m = Engine.readBack(spark, mPath, repTable.schema)
+      .drop("hv"), dir, "l11_repmap")
     val reps = m.filter(col("vec_id") === col("rep"))
     val a = reps.select(col("label"), col("rep").as("a_rep"),
       col("embedding").as("ea"), sqrt(dot(col("embedding"), col("embedding"))).as("na"))
@@ -135,12 +132,9 @@ object LlmVector {
   private def l11bNeardupRollup(spark: SparkSession, dir: String): DataFrame = {
     // staged once: three consumers (intra rollup + both self-join
     // sides) would otherwise each re-scan and re-group the corpus
-    val g = corpus(spark, dir)
+    val grp = Engine.stage(corpus(spark, dir)
       .groupBy(col("label"), col("embedding"))
-      .agg(min("vec_id").as("rep"), count(lit(1)).as("n"))
-    val gPath = Engine.scratch(spark, dir, "l11b_groups")
-    g.write.mode("overwrite").parquet(gPath)
-    val grp = Engine.readBack(spark, gPath, g.schema)
+      .agg(min("vec_id").as("rep"), count(lit(1)).as("n")), dir, "l11b_groups")
     val intra = grp.groupBy("label").agg(
       sum(col("n")).as("n_vecs"),
       count(lit(1)).as("n_groups"),
@@ -403,12 +397,9 @@ object LlmVector {
     // Catalyst re-evaluates the interpreted 384-term sign fold on
     // every consumer (measured 19.1 s — 9% of the whole bench suite;
     // staged: one fold pass over 2,000 rows).
-    val staged = graft.Engine.scratch(spark, dir, "l24b_bucketed")
-    val bucketTable = corpus(spark, dir).filter(col("vec_id") < 2000)
+    val v = Engine.stage(corpus(spark, dir).filter(col("vec_id") < 2000)
       .select(col("vec_id"), quant(col("embedding")).as("qv"))
-      .withColumn("bucket", md5Bucket(col("qv")))
-    bucketTable.write.mode("overwrite").parquet(staged)
-    val v = Engine.readBack(spark, staged, bucketTable.schema)
+      .withColumn("bucket", md5Bucket(col("qv"))), dir, "l24b_bucketed")
     val q = v.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("qv").as("qq"), col("bucket").as("q_bucket"))
     val masks = array((0 until LSH_BITS).map(b => lit(1 << b)): _*)
@@ -736,7 +727,6 @@ object LlmVector {
     // every Lloyd iteration, and re-running the union+planted join per
     // iteration would pay the build 6× (count + 4 iterations + final
     // assign). The l22/l41 multi-consumer staging rule.
-    val cPath = Engine.scratch(spark, dir, "l44_corpus")
     // Stage width is SCALE-ADAPTIVE (r20, guide §2.2/§6 — derive the
     // partitioning from input size, not a constant): the n×k assignment
     // kernel needs the full cluster width once k follows n (the source
@@ -766,9 +756,7 @@ object LlmVector {
     val flops = nBase.toDouble * math.sqrt(nBase.toDouble) * dim
     val width = math.max(1L, math.min(Engine.stagingWidth(spark).toLong,
       (flops / 2e8).toLong + 1L)).toInt
-    val staging = base.unionByName(planted).repartition(width)
-    staging.write.mode("overwrite").parquet(cPath)
-    val all = Engine.readBack(spark, cPath, staging.schema)
+    val all = Engine.stage(base.unionByName(planted).repartition(width), dir, "l44_corpus")
     // r20 (the sf100 cliff): the old k ≤ 64 clamp froze cluster size,
     // so the pair stage Σ n_c² ≈ n²/k went QUADRATIC (~10¹¹ dot
     // products at sf100, observed as a 30-minute single-task agg). But
@@ -783,12 +771,9 @@ object LlmVector {
     // index (l12's IVF shape), the documented next tier.
     val k = math.max(8, math.min(4096, math.sqrt(nAll.toDouble).toInt))
     val (cents, _) = kmeansFit(all, k, 4)
-    val mPath = Engine.scratch(spark, dir, "l44_asg")
-    val asgTable = kmeansAssign(all, cents)
+    val m = Engine.stage(kmeansAssign(all, cents)
       .select(col("vec_id"), col("embedding"), col("cluster"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-    asgTable.write.mode("overwrite").parquet(mPath)
-    val m = Engine.readBack(spark, mPath, asgTable.schema)
+        sqrt(dot(col("embedding"), col("embedding"))).as("nrm")), dir, "l44_asg")
     val aT = m.select(col("cluster"), col("vec_id").as("a_id"),
       col("embedding").as("ea"), col("nrm").as("na"))
     val bT = m.select(col("cluster"), col("vec_id").as("b_id"),

@@ -93,20 +93,16 @@ object Streaming {
     * partition carries a state-store instance — 32 stores for a few
     * hundred keys is pure overhead at test scale (and the knob a real
     * deployment sizes to its key cardinality). Run the bounded replay
-    * with 8, restore after. */
+    * with `n`, restore after. */
   private def withStreamingPartitions[T](spark: SparkSession, n: Int = 4)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // r20: default 8 → 4 and conf-overridable. Every state partition
-    // is a store instance paying its own delta-file commit per
-    // micro-batch (a stream-stream join runs FOUR stores per
-    // partition), and the bounded replays hold a few hundred keys —
-    // the per-batch commit fan-out, not state size, is the cost. A
-    // deployment sizes this to its key cardinality via
-    // `spark.graft.streamStatePartitions`.
-    val width = spark.conf.getOption("spark.graft.streamStatePartitions")
-      .map(_.toInt).getOrElse(n)
-    spark.conf.set(key, width.toString)
+    // `n` = 4 by default: every state partition is a store instance
+    // paying its own delta-file commit per micro-batch (a stream-stream
+    // join runs FOUR stores per partition), and the bounded replays hold
+    // a few hundred keys — the per-batch commit fan-out, not state size,
+    // is the cost. j3 sizes `n` to its staged input.
+    spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
 
@@ -161,6 +157,38 @@ object Streaming {
     staged
   }
 
+  /** Scratch path `name`, with it and its `<name>_ckpt` checkpoint
+    * deleted: every run starts from an empty output and a new
+    * checkpoint. Deletes go through Hadoop's `file:` binding
+    * (`LocalFs`), which starts no process. */
+  private def fresh(spark: SparkSession, dir: String, name: String): String = {
+    val target = Engine.scratch(spark, dir, name)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(target), true)
+    fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
+    target
+  }
+
+  /** Run `stream` to completion into a memory sink and return `read`
+    * over the sink's rows. The checkpoint is explicit ([[fresh]]):
+    * without one Spark makes a `temporary-<uuid>` dir and deletes it
+    * with a forked `rm -rf`. The sink's temp view is dropped once
+    * `read` has analyzed its frame — the analyzed plan holds the sink
+    * itself, so the view would only pin one more result per call. */
+  private def viaMemorySink(spark: SparkSession, dir: String, name: String,
+      mode: String, stream: DataFrame)(read: DataFrame => DataFrame): DataFrame = {
+    val sinkName = s"${name}_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    stream.writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(sinkName)
+      .option("checkpointLocation", fresh(spark, dir, s"${name}_sink") + "_ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    try read(spark.table(sinkName)) finally spark.catalog.dropTempView(sinkName): Unit
+  }
+
   /** Empty STATIC frame with a streaming source's schema — lets a
     * foreachBatch target's read-back derive its schema by applying the
     * batch transform schema-only (analysis, no job), skipping the
@@ -181,11 +209,7 @@ object Streaming {
     * merges partials by summing — insert-time MV maintenance with
     * merge-on-read, no global state store needed. */
   private def j1IncrementalMv(spark: SparkSession, dir: String): DataFrame = {
-    val target = Engine.scratch(spark, dir, "j1_mv")
-    // reset target for a deterministic run
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(target), true)
-    fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
+    val target = fresh(spark, dir, "j1_mv")
     // one file per micro-batch → 4 genuine partial-state inserts
     val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
     val partial = (d: DataFrame) => d.groupBy("event_type")
@@ -217,10 +241,7 @@ object Streaming {
     * partials: the streaming answer provably equals the batch one
     * (the oracle IS e7's SQL). */
   private def j7StreamingRetention(spark: SparkSession, dir: String): DataFrame = {
-    val target = Engine.scratch(spark, dir, "j7_ret")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(target), true)
-    fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
+    val target = fresh(spark, dir, "j7_ret")
     def in(lo: String, hi: String) =
       col("ts") >= lit(lo).cast("timestamp") && col("ts") < lit(hi).cast("timestamp")
     val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
@@ -255,23 +276,15 @@ object Streaming {
   /** J2: time-bucketed rollup — streaming tumbling 6-hour windows
     * (aligned to the epoch, same as the oracle's floor arithmetic). */
   private def j2WindowRollup(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val sinkName = "j2_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = false)
-      .withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(CH.dec(col("value"))).as("sv"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    viaMemorySink(spark, dir, "j2", "complete",
+      eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = false)
+        .withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(CH.dec(col("value"))).as("sv")))(_
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm").as("bucket"),
         col("event_type"), col("n"), col("sv").cast("double").as("sum_value"))
-      .orderBy("bucket", "event_type")
+      .orderBy("bucket", "event_type"))
   }
 
   /** Flush sentinel: events at/after this timestamp are end-of-stream
@@ -401,9 +414,7 @@ object Streaming {
     // emitted session in driver heap through a single thread (the
     // sf10 replay emits millions); the file sink writes them from the
     // state executors and the read-back is a distributed scan.
-    val outPath = Engine.scratch(spark, dir, if (oneFilePerBatch) "j3_out_mb" else "j3_out")
-    fs0.delete(new org.apache.hadoop.fs.Path(outPath), true)
-    fs0.delete(new org.apache.hadoop.fs.Path(outPath + "_ckpt"), true)
+    val outPath = fresh(spark, dir, if (oneFilePerBatch) "j3_out_mb" else "j3_out")
     val q = sessions.writeStream
       .outputMode("append")
       .format("parquet")
@@ -449,21 +460,13 @@ object Streaming {
     * (distinct users per event_type) is insensitive to which duplicate
     * won, so the op is deterministic and oracle-checked. */
   private def j6StreamingDedup(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val sinkName = "j6_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
-      .select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    viaMemorySink(spark, dir, "j6", "append",
+      eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
+        .select(col("user_id"), col("event_type"))
+        .dropDuplicates("user_id", "event_type"))(_
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_unique_users"))
-      .orderBy("event_type")
+      .orderBy("event_type"))
   }
 
   /** J8: streaming heavy hitters — a SpaceSaving summary maintained
@@ -477,10 +480,7 @@ object Streaming {
     * streaming answer is EXACT and the DuckDB oracle checks it; the
     * eviction regime's error bound is SketchSpec's i3 property. */
   private def j8StreamingTopk(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val target = Engine.scratch(spark, dir, "j8_topk")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(target), true)
-    fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
+    val target = fresh(spark, dir, "j8_topk")
     spark.udf.register("ss_topk_j8", udaf(new Sampling.SpaceSaving(8)))
     val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
     val partial = (d: DataFrame) =>
@@ -546,26 +546,18 @@ object Streaming {
       }
       fs.create(done).close()
     }
-    val sinkName = "j9_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = spark.readStream.schema(schemaMemo.computeIfAbsent(staged,
-        _ => spark.read.parquet(staged).schema))
-      .option("maxFilesPerTrigger", 1).parquet(staged)
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    viaMemorySink(spark, dir, "j9", "append",
+      spark.readStream.schema(schemaMemo.computeIfAbsent(staged,
+          _ => spark.read.parquet(staged).schema))
+        .option("maxFilesPerTrigger", 1).parquet(staged)
+        .withWatermark("ts", "30 minutes")
+        .groupBy(window(col("ts"), "30 minutes").as("w"))
+        .agg(count(lit(1)).as("n")))(_
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm").as("w_start"),
         date_format(col("w.end"), "yyyy-MM-dd HH:mm").as("w_end"),
         col("n"))
-      .orderBy("w_start")
+      .orderBy("w_start"))
   }
 
   /** J10: stream–static join — insert-time dimension enrichment (the
@@ -576,10 +568,7 @@ object Streaming {
     * maintained via j1's partial-state MV discipline. Oracle = the
     * identical batch join. */
   private def j10StreamStaticJoin(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val target = Engine.scratch(spark, dir, "j10_enriched")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(target), true)
-    fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
+    val target = fresh(spark, dir, "j10_enriched")
     val dim = Engine.t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     // Stateless per-row enrichment: batch count is semantically inert
@@ -617,8 +606,7 @@ object Streaming {
     * sink deterministically. Oracle = the batch rollup. */
   private def j11RunningUserStats(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
     import spark.implicits._
-    val sinkName = "j11_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
+    val stream = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
       // exact cents: round before the cast — a bare truncation of
       // value*100 loses a cent whenever the double lands below the
       // integer (8.2*100 = 819.99…)
@@ -632,18 +620,11 @@ object Streaming {
           (user, n, cents)
       }
       .toDF("user_id", "n", "cents")
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    viaMemorySink(spark, dir, "j11", "update", stream)(_
       .groupBy("user_id")
       .agg(max(col("n")).as("n_events"),
         (max(col("cents")) / 100.0).as("sum_value"))
-      .orderBy("user_id")
+      .orderBy("user_id"))
   }
 
   /** J12: stream–stream inner join — clicks ⋈ purchases per user with
@@ -668,10 +649,8 @@ object Streaming {
       spark: SparkSession, dir: String, oneFilePerBatch: Boolean): DataFrame =
     withStreamingPartitions(spark) {
       val suffix = if (oneFilePerBatch) "_mb" else ""
-      val target = Engine.scratch(spark, dir, s"j12_pairs$suffix")
+      val target = fresh(spark, dir, s"j12_pairs$suffix")
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(target), true)
-      fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
       val staged = stageEvents(spark, dir)
       val clicks = eventStream(spark, staged, oneFilePerBatch)
         .filter(col("event_type") === "click")
@@ -730,10 +709,9 @@ object Streaming {
     * one driver-side rename per micro-batch, independent of data
     * volume; the read path opens only manifest-listed files. */
   private def j13TransactionalSink(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val root = Engine.scratch(spark, dir, "j13_txn")
+    val root = fresh(spark, dir, "j13_txn")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    fs.delete(p(root), true); fs.delete(p(root + "_ckpt"), true)
     val dataDir = root + "/data"
     val manifestDir = root + "/manifest"
     fs.mkdirs(p(manifestDir))

@@ -580,8 +580,7 @@ class LlmOpsSpec extends AnyFunSuite {
       Seq((21L, doc(vocabA, 99, 40), false),                         // held-out A
           (22L, doc(vocabB, 98, 40), false))                         // held-out B
     ).toDF("doc_id", "text", "is_target")
-    val w = LlmText.dsirPerDoc(docs, col("is_target"), 256,
-      graft.Engine.scratch(spark, sf, "test_dsir_stage"))
+    val w = LlmText.dsirPerDoc(docs, col("is_target"), 256, sf, "test_dsir_stage")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(w(21L) > w(22L),
       s"held-out target-vocab doc must outscore raw-vocab doc: $w")

@@ -14,6 +14,45 @@ class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
+  /** Runs `df`, then walks its final adaptive plan: `FileScan` nodes
+    * per source (the scanned path's last segment, e.g.
+    * `documents.parquet`) and the number of `ReusedExchange` nodes. A
+    * reused exchange is not walked again, so a subplan that exchange
+    * reuse shares counts its scans once. */
+  private def scansPerSource(df: org.apache.spark.sql.DataFrame): (Map[String, Int], Int) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case other => other +: (other.children ++ other.subqueries).flatMap(walk)
+    }
+    val nodes = walk(df.queryExecution.executedPlan)
+    val scans = nodes.collect { case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.map(_.getName).mkString(",") }
+    (scans.groupBy(identity).map { case (k, v) => k -> v.size },
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]))
+  }
+
+  test("sites without staging read each source once: exchange reuse shares the subplan") {
+    // One input per build-time intermediate whose scratch-Parquet
+    // staging was deleted: its consumers sit in one plan, and without
+    // the stage they must still scan each source exactly once, the
+    // repeated subplan served by a ReusedExchange. A second FileScan of
+    // a source here means the stage paid and should come back.
+    for ((site, df) <- Seq(
+        "simhashPairVerdict (l13)" -> (() => SparkEntry.queries("l13_simhash_neardup")(spark, sf)),
+        "simhashPairVerdict (l13b)" -> (() => SparkEntry.queries("l13b_simhash_verdict")(spark, sf)),
+        "lshCandidatesOf (l4 bands)" -> (() => ops.LlmText.lshCandidates(spark, sf)))) {
+      val (scans, reused) = scansPerSource(df())
+      assert(scans == Map("documents.parquet" -> 1), s"$site scans per source: $scans")
+      assert(reused >= 1, s"$site: expected a ReusedExchange in the final plan")
+    }
+  }
+
   test("c8 dictionary join plans as BroadcastHashJoin (fact never shuffles)") {
     val df = SparkEntry.queries("c8_broadcast_dict_join")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString

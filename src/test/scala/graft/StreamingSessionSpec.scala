@@ -67,4 +67,33 @@ class StreamingSessionSpec extends AnyFunSuite {
     assert(listed.nonEmpty && !listed.exists(_.contains("orphan")),
       s"reader must only see manifest-committed parts, got $listed")
   }
+
+  test("memory-sink queries drop their sink view and make no temporary checkpoint") {
+    // Each call used to leave its `j2_sink_<uuid>` temp view (and the
+    // sink's rows) registered for the rest of the session. The result
+    // frame is analyzed before the view goes, so it still reads the sink.
+    def sinkViews = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.matches("j\\d+_sink_.*")).toSeq
+    // A query without a checkpointLocation gets a `temporary-<uuid>`
+    // dir that Spark registers for deletion at JVM exit, where it is
+    // removed with a forked `rm -rf`: read that registry.
+    def temporaryCheckpoints: Set[String] = {
+      val f = Class.forName("org.apache.spark.util.ShutdownHookManager$")
+        .getDeclaredField("shutdownDeletePaths")
+      f.setAccessible(true)
+      val paths = f.get(null).asInstanceOf[scala.collection.mutable.HashSet[String]]
+      paths.synchronized(paths.filter(_.contains("/temporary-")).toSet)
+    }
+    val before = sinkViews
+    val tempBefore = temporaryCheckpoints
+    val runs = (1 to 3).map(_ =>
+      Streaming.queries("j2_window_rollup")(spark, sf).collect().toSeq)
+    assert(runs.head.nonEmpty)
+    assert(runs.forall(_ == runs.head), "repeated j2 calls must give the same rows")
+    for (q <- Seq("j6_streaming_dedup", "j9_watermark_late_drop", "j11_running_user_stats"))
+      assert(Streaming.queries(q)(spark, sf).collect().nonEmpty, q)
+    assert(sinkViews == before, s"sink views left behind: ${sinkViews.diff(before)}")
+    assert(temporaryCheckpoints == tempBefore,
+      s"temporary checkpoints: ${temporaryCheckpoints -- tempBefore}")
+  }
 }
