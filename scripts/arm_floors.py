@@ -3,11 +3,10 @@
 
 Usage: arm_floors.py run.json [run2.json ...] [--reset q1,q2,...]
 
-Each run.json is already a two-pass per-query MIN (graft.Bench runs
-LPT order then its reverse and keeps min — throttle-proof: a wandering
-CPU-throttle window cannot hit the same query in both passes). With
-multiple runs the candidate is the elementwise min across them. The
-committed floor is then:
+Each run.json is a graft.Bench record whose `queries` are per-query
+medians of three repetitions in one JVM (LPT order, its reverse, LPT
+again). With multiple runs the candidate is the elementwise min of those
+medians across them. The committed floor is then:
 
   - elementwise min(candidate, existing floor)   (floors only tighten)
   - EXCEPT queries named in --reset, whose floor becomes the candidate
@@ -19,7 +18,7 @@ committed floor is then:
   - new queries (no existing floor) get the candidate.
 
 Writes BASELINE_FLOOR.json and prints a summary; BENCH_FULL.json is
-left to the caller (commit the better of the two raw runs)."""
+left to the caller."""
 import json
 import sys
 

@@ -7,25 +7,29 @@ SMALL/BIG are Bench JSON records ({"queries": {name: sec}}); DECADES is
 the data-scale ratio between them expressed in powers of 10 (sf0.1 ->
 sf100 = 3). If BIG.json doesn't exist yet but the run's log does, pass
 --log to reconstruct per-query timings from "[bench] <name> <sec> s"
-lines (single-pass fallback: later duplicates of a name take the MIN,
-matching Bench's two-pass-min semantics when pass 2 lines are present).
+lines: a name's time is the median of its lines (one per repetition),
+as in Bench's record, and a name with a "[bench] <name> FAILED" line is
+left out, as Bench leaves it out of the record's queries.
 
 Prints per-query big/small ratios sorted descending with a per-decade
 geometric factor (ratio^(1/DECADES)); flags any query whose per-decade
 factor exceeds 10x (super-linear cliff: growing faster than the data)
 and summarizes totals. Exit 1 if any cliff is found.
 """
-import json, math, os, re, sys
+import json, math, os, re, statistics, sys
 
 def from_log(path):
-    qs = {}
+    times, failed = {}, set()
     pat = re.compile(r"\[bench\]\s+(\S+)\s+([0-9.]+)\s*s\s*$")
+    fail = re.compile(r"\[bench\]\s+(\S+) FAILED")
     for line in open(path):
         m = pat.search(line)
         if m:
-            name, sec = m.group(1), float(m.group(2))
-            qs[name] = min(qs.get(name, float("inf")), sec)
-    return qs
+            times.setdefault(m.group(1), []).append(float(m.group(2)))
+        m = fail.search(line)
+        if m:
+            failed.add(m.group(1))
+    return {name: statistics.median(ts) for name, ts in times.items() if name not in failed}
 
 def main():
     args = [a for a in sys.argv[1:]]

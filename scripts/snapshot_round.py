@@ -16,7 +16,8 @@ here hash_match is computed from the same normalized sorted-column rows
 as scripts/selfcheck.py (exact floats, normalized decimals).
 
 BENCH_r{N}.json is NOT produced here — commit the bench main's printed
-JSON line (or BENCH_LAST.json) as BENCH_r{N}.json after a clean run.
+JSON line (or its record of per-query medians, BENCH_FULL.json or the
+SPARK_GRAFT_BENCH_OUT file) as BENCH_r{N}.json after a clean run.
 """
 import duckdb, sys, json, glob, os
 import pyarrow as pa

@@ -1,12 +1,67 @@
 package graft
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+
+/** The `graft.Bench` suite: every selected query runs `Reps` times in one
+  * JVM (LPT order, its reverse, LPT again), and the record reports each
+  * query's median, min and max. `value` is the sum of the medians of the
+  * queries that succeeded in every repetition. */
 object Bench {
+  /** Three repetitions let the median absorb one cold first run. */
+  val Reps = 3
+
+  final case class Stats(median: Double, min: Double, max: Double)
+
+  def stats(ts: Seq[Double]): Stats = {
+    val s = ts.sorted
+    val n = s.size
+    Stats(if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2, s.head, s.last)
+  }
+
+  final case class Result(stats: Seq[(String, Stats)], failed: Seq[String]) {
+    val total: Double = r3(stats.map(_._2.median).sum)
+    private def field(f: Stats => Double, keep: String => Boolean = _ => true) =
+      stats.collect { case (q, s) if keep(q) => "\"" + q + "\":" + r3(f(s)) }.mkString("{", ",", "}")
+    private def failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def record(sf: String): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,"queries":${field(_.median)},""" +
+        s""""min":${field(_.min)},"max":${field(_.max)},"failed":$failedJson,"sf":"$sf"}"""
+    // The one stdout line must stay well under the 2000-char output tail a
+    // caller parses, so it carries only the headline subset's medians.
+    def headline(sf: String, nQueries: Int): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${field(_.median, Headline)},""" +
+        s""""n_queries":$nQueries,"failed":$failedJson,"sf":"$sf"}"""
+  }
+
+  /** `runs(i)` is repetition i's (query, seconds) in its run order; queries
+    * keep the first repetition's order, and a query in `failed` is left out. */
+  def summarize(runs: Seq[Seq[(String, Double)]], failed: Set[String]): Result = {
+    val byQuery = runs.flatten.groupBy(_._1)
+    val order = runs.head.map(_._1).filterNot(failed)
+    Result(order.map(q => q -> stats(byQuery(q).map(_._2))), failed.toSeq.sorted)
+  }
+
+  /** The per-query medians of a prior record: only its `queries` object. */
+  def priorMedians(record: String): Map[String, Double] =
+    """"queries":\s*\{([^}]*)\}""".r.findFirstMatchIn(record).toSeq.flatMap { m =>
+      """"([a-z0-9_]+)":\s*([0-9.]+)""".r.findAllMatchIn(m.group(1)).map(p => p.group(1) -> p.group(2).toDouble)
+    }.toMap
+
+  def r3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  val Headline: Set[String] = Set(
+    "q1_pricing_summary", "a1_scan_prune", "c1_inner_join", "c6_asof_join",
+    "d1_groupby_agg", "d6_quantiles", "e1_ranking", "f3_topk",
+    "h2_datetime", "j2_window_rollup", "k13_bucketed_join",
+    "l1_exact_dedup", "l4_minhash_lsh", "l13_simhash_neardup",
+    "l2_vector_similarity", "l12_ann_ivf")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark: SparkSession = Engine.session()
-    // Untimed warmup: JIT + codegen + parquet reader + join/window/AQE
-    // classloading, so the first measured query isn't charged for JVM
-    // cold start.
+    // Untimed warmup (JIT, codegen, parquet reader, join/window/AQE classes),
+    // so the first measured query isn't charged for JVM cold start.
     spark.range(1000000).selectExpr("sum(id)").collect()
     val wn = spark.read.parquet(s"$sfDir/nation.parquet")
     val wr = spark.read.parquet(s"$sfDir/region.parquet")
@@ -20,311 +75,54 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
-    // Longest-processing-time-first scheduling: this host has an
-    // intermittent throttle window that engages ~90-120s into heavy
-    // work (see r3: alphabetical order put the heavy k/l/q queries
-    // exactly there, inflating 6s queries to 480s). Running known-slow
-    // queries first packs them into the clean window and is optimal
-    // makespan order regardless. Prior-run times come from
-    // BENCH_FULL.json when present; unknown/new queries go first.
+    // Longest-processing-time-first: known-slow queries run first, the
+    // optimal makespan order. Priors are the last full record's medians;
+    // unknown queries go first.
     val priorTimes: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_FULL.json")), java.nio.charset.StandardCharsets.UTF_8)
-        """"([a-z0-9_]+)":([0-9.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case e: Throwable =>
+      try priorMedians(new String(Files.readAllBytes(Paths.get("BENCH_FULL.json")), UTF_8))
+      catch { case e: Throwable =>
         println(s"[bench] no prior timings (${e.getClass.getSimpleName}): alphabetical order")
         Map.empty
       }
     println(s"[bench] LPT order over ${priorTimes.size} prior timings")
-    var failed = List.empty[String]
-    // Plan fingerprint (ADVICE r14): the min-merge below keeps the
-    // best-known time per query FOREVER, so a query whose
-    // implementation changed shape would silently inherit timings of
-    // code that no longer exists unless someone remembers
-    // SPARK_GRAFT_BENCH_RESET. The fingerprint is an MD5 of the
-    // canonicalized ANALYZED plan (captures any source change to the
-    // query; exprIds normalized by canonicalization) with the two
-    // run-varying path families — the sf dir and the per-appId
-    // /tmp/graft_io scratch tree — replaced by placeholders. Stored
-    // alongside the times in BENCH_FULL.json; a changed fingerprint
-    // auto-resets that query's record to THIS run's time.
-    // The fingerprint hashes the RAW analyzed plan, NOT .canonicalized:
-    // Spark 4's canonicalization sorts commutative chains
-    // (multiCommutativeOp) by the operands' canonicalized hashCodes,
-    // which depend on RAW exprIds — so the printed operand ORDER
-    // varies run-to-run on filter-heavy plans (measured: fz8/fzq2's
-    // And-chains flipped between identical sf0.1 runs). The raw
-    // analyzed text keeps the source's operand order; exprIds are
-    // normalized here by regex instead. Beyond ids, strip every token
-    // that varies across IDENTICAL code (measured by diffing same-tree
-    // runs): run-varying paths, JVM object identities (Aggregator
-    // instances print `@hex`), lambda class names/addresses
-    // (MapPartitions functions), the random seed the analyzer assigns
-    // to uuid(), plan_ids inside an embedded explain STRING, and CTE
-    // definition ids.
-    def normalizedPlan(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.analyzed.toString
-        .replace(sfDir, "SF")
-        .replaceAll("/tmp/graft_io/\\S*", "TMP")
-        .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "LambdaN")
-        .replaceAll("@[0-9a-f]+", "@X")
-        .replaceAll("plan_id=\\d+", "plan_id=N")
-        .replaceAll("uuid\\(Some\\(-?\\d+\\)\\)", "uuid(SEED)")
-        .replaceAll("(CTERelationDef|CTERelationRef) \\d+", "$1 N")
-        .replaceAll("#\\d+", "#N")
-        // per-run UUID-suffixed temp view names (streaming sinks
-        // register `jN_sink_<hex32>` per invocation — measured: j2's
-        // SubqueryAlias/View name flipped between identical runs and
-        // auto-reset its record to whatever window the run landed on).
-        // Anchored to the known sink naming (ADVICE r16): an
-        // unanchored `_hex32` also collapsed md5/hash string LITERALS
-        // embedded in a plan, which could make genuinely different
-        // plans fingerprint identically and suppress a real auto-reset.
-        .replaceAll("sink_[0-9a-f]{32}", "sink_UUID")
-        // higher-order-function lambda variable names embed a
-        // SESSION-GLOBAL fresh-name counter (`lambda x_425` vs
-        // `lambda x_6` for identical code) — the count of lambdas
-        // analyzed earlier in the session depends on suite order, so
-        // l45b/l47 flipped sporadically between full runs
-        .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_K")
-        // cluster-width tokens (r21): `spark.range` prints
-        // `splits=Some(<defaultParallelism>)` and `repartition(cpus)` /
-        // `repartitionByRange(stagingWidth)` print their width — all
-        // derived from SPARK_GRAFT_CPUS, so the driver's low-core
-        // scaling run (cpus=8) fp-reset the same 6 queries
-        // (a16/c15/f5/i1b/i5/l9) on EVERY cpu flip, replacing their
-        // all-time-min records with that run's fresh times. Width is
-        // an env knob, not source — normalize it out.
-        .replaceAll("splits=Some\\(\\d+\\)", "splits=Some(W)")
-        .replaceAll("Repartition \\d+", "Repartition W")
-        .replaceAll("(RepartitionByExpression \\[[^\\]]*\\]), \\d+", "$1, W")
-    // Fingerprint FORMAT version: stored fps are only trusted for
-    // auto-reset when they were computed by the same normalization.
-    // Bumping this makes the next run refresh every fp WITHOUT
-    // resetting any time — a normalization change must never cause a
-    // whole-record reset to a possibly-contended run.
-    val FPV = 6
-    def fingerprint(df: org.apache.spark.sql.DataFrame): String = {
-      val s = normalizedPlan(df)
-      "h" + java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString.take(16)
-    }
-    val fpDebug = sys.env.get("SPARK_GRAFT_FP_DEBUG")
-    val fps = scala.collection.mutable.Map.empty[String, String]
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-               wantFp: Boolean = false): Double = {
+    val failed = scala.collection.mutable.Set.empty[String]
+    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // noop sink forces FULL evaluation of every output column —
-      // count() would let Catalyst prune projections and trailing
-      // sorts, overstating projection-heavy queries (ADVICE r2).
-      val df = try {
-        val d = fn(spark, sfDir)
-        d.write.format("noop").mode("overwrite").save()
-        Some(d)
-      } catch { case e: Throwable =>
-        failed ::= name
+      // count() would let Catalyst prune projections and trailing sorts.
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        failed += name
         println(s"[bench] $name FAILED: ${e.getMessage}")
-        None
       }
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[bench] $name%-28s $dt%9.3f s")
-      // fingerprint OUTSIDE the timed section, on the already-built df
-      // (the write above used its own QueryExecution; .analyzed here is
-      // a lazy analysis pass, no job runs).
-      if (wantFp) df.foreach { d =>
-        try {
-          fps(name) = fingerprint(d)
-          fpDebug.foreach { dbg =>
-            new java.io.File(dbg).mkdirs()
-            java.nio.file.Files.write(java.nio.file.Paths.get(s"$dbg/$name.txt"),
-              normalizedPlan(d).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        } catch { case _: Throwable => () }
-      }
       dt
     }
-    // Two full passes, per-query MIN. The host's intermittent throttle
-    // window (r4: i1=190s ghost, r5: c8=114s ghost, r6: i1=194s +
-    // l4=81s ghosts on untouched code) wanders across the run and can
-    // inflate any single measurement ~50-100x; it cannot hit the SAME
-    // query in both passes because pass 2 runs in reverse order, so
-    // min(pass1, pass2) is throttle-free for every query. Pass 1 is
-    // LPT (heavy first), pass 2 its exact reverse.
-    val ordered = selected.toSeq
+    val lpt = selected.toSeq
       .sortBy { case (name, _) => (-priorTimes.getOrElse(name, Double.MaxValue), name) }
-    val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-    val pass1 = ordered.map { case (name, fn) => name -> runOne(name, fn) }
-    println("[bench] --- pass 2 (reverse order) ---")
-    val pass2 = ordered.reverse.map { case (name, fn) => name -> runOne(name, fn, wantFp = true) }.toMap
-    val minOfTwo = pass1.map { case (name, t1) => name -> math.min(t1, pass2(name)) }
-    // Pass 3 (VERDICT r17 #1): ADAPTIVE retry of contended outliers.
-    // Two passes bound single-query throttle ghosts, but a SUSTAINED
-    // busy window (the round-close snapshot benches while the sandbox
-    // churns) inflates rows in BOTH passes — the r17 close had 64 rows
-    // >2x their committed record with zero plan changes, while the
-    // same tree measured 1.23x floor in a clean window. Re-measure
-    // just the outliers (>2x prior record AND >0.3 s absolute slack),
-    // up to 2 extra attempts each with early stop at 1.5x — the retry
-    // set is outlier-sized so this costs seconds, not a third full
-    // run, and min() keeps it strictly-honest measurement. Scoped to
-    // the sf0.1 round-gate run: priorTimes reads the sf0.1 record, so
-    // off-scale runs would mark everything an outlier.
-    val results =
-      if (benchOut.nonEmpty || !sfDir.endsWith("sf0.1")) minOfTwo
-      else {
-        val fnOf = selected.toMap
-        var retried = 0
-        val r = minOfTwo.map { case (name, t) =>
-          val prior = priorTimes.get(name)
-          val outlier = prior.exists(p => t > math.max(2 * p, p + 0.3))
-          if (!outlier || retried >= 120) name -> t
-          else {
-            retried += 1
-            var best = t
-            var attempts = 0
-            while (attempts < 2 && prior.exists(p => best > 1.5 * p)) {
-              best = math.min(best, runOne(name, fnOf(name)))
-              attempts += 1
-            }
-            name -> best
-          }
-        }
-        if (retried > 0)
-          println(s"[bench] --- pass 3: retried $retried contended outliers ---")
-        r
-      }
-    def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    def qjson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val total = r3(results.map(_._2).sum)
-    val failedJson = failed.distinct.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // The driver keeps only a 2000-char output tail (BENCH_r03.json:
-    // "tail" length), so the ONE printed JSON line must stay well under
-    // that or it parses as garbage (r02+r03 both had "parsed": null).
-    // The line carries the total + a fixed headline subset; the complete
-    // per-query map goes to BENCH_FULL.json in the repo.
-    val headline = Seq(
-      "q1_pricing_summary", "a1_scan_prune", "c1_inner_join", "c6_asof_join",
-      "d1_groupby_agg", "d6_quantiles", "e1_ranking", "f3_topk",
-      "h2_datetime", "j2_window_rollup", "k13_bucketed_join",
-      "l1_exact_dedup", "l4_minhash_lsh", "l13_simhash_neardup",
-      "l2_vector_similarity", "l12_ann_ivf").toSet
-    val head = results.filter { case (k, _) => headline(k) }
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(results)},"failed":$failedJson,"sf":"$sfDir"}"""
-    // a SPARK_GRAFT_ONLY-filtered run must NOT clobber the full-suite
-    // record: it would truncate the LPT priors and the committed bench
-    // history to the filtered subset. SPARK_GRAFT_BENCH_OUT redirects
-    // the full map (e.g. BENCH_SF1.json for the sf1 scale rehearsal)
-    // so off-scale runs don't overwrite the sf0.1 record either — and
-    // an off-scale run WITHOUT the redirect must not silently clobber
-    // it (a dev sf0.001 run once overwrote the sf0.1 record in place,
-    // poisoning every per-query comparison made against the file).
-    if (benchOut.isEmpty && !sfDir.endsWith("sf0.1"))
-      println(s"[bench] off-scale sfDir $sfDir without SPARK_GRAFT_BENCH_OUT — not writing BENCH_FULL.json")
-    // A SPARK_GRAFT_ONLY subset may write ONLY to an explicit
-    // SPARK_GRAFT_BENCH_OUT redirect (the sf10/sf100 spot-rehearsal
-    // records ARE subsets); entries absent from the subset carry over
-    // from the old record instead of being truncated away. Without the
-    // redirect a subset still never touches BENCH_FULL.json.
-    else if (only.isEmpty || benchOut.nonEmpty) {
-      // The record file is the BEST-KNOWN clean two-pass time per query
-      // and is updated by UNCONDITIONAL elementwise min-merge (VERDICT
-      // r13 #1: a contended same-scale run overwrote the committed
-      // 138.6 s record with a uniformly-1.45x-slower one — the r12
-      // off-scale guard above can't catch that). The raw un-merged run
-      // always lands in BENCH_LAST.json for the audit trail; queries
-      // whose implementation intentionally changed shape this round
-      // take their FRESH time via SPARK_GRAFT_BENCH_RESET=q1,q2
-      // (arm_floors.py --reset mirror); queries that FAILED this run
-      // keep their old record (a crash's wall time is not a timing);
-      // queries dropped from the suite drop out of the record.
-      val target = benchOut.getOrElse("BENCH_FULL.json")
-      // the raw-run audit file follows the redirect: an off-scale run
-      // with SPARK_GRAFT_BENCH_OUT must not clobber the committed
-      // sf0.1 BENCH_LAST.json either (same poisoning as the record
-      // file, caught when an sf0.001 fingerprint rehearsal overwrote it)
-      val lastPath = benchOut.map(_ + ".last").getOrElse("BENCH_LAST.json")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(lastPath),
-        fullLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val resetQ = sys.env.get("SPARK_GRAFT_BENCH_RESET")
-        .map(_.split(",").toSet).getOrElse(Set.empty[String])
-      val (old: Map[String, Double], oldFps: Map[String, String]) =
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(target)), java.nio.charset.StandardCharsets.UTF_8)
-          val oldFpv = """"fpv":(\d+)""".r.findFirstMatchIn(txt)
-            .map(_.group(1).toInt).getOrElse(1)
-          // tolerate `"k": v` spacing (driver-written records) and
-          // exclude the envelope's numeric fields — "value"/"fpv" are
-          // not queries (they'd leak into the subset-union branch)
-          (""""([a-z0-9_]+)":\s*([0-9.]+)""".r.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filterNot(kv => kv._1 == "fpv" || kv._1 == "value").toMap,
-           if (oldFpv != FPV) Map.empty[String, String]
-           else """"([a-z0-9_]+)":"(h[0-9a-f]{16})"""".r.findAllMatchIn(txt)
-             .map(m => m.group(1) -> m.group(2)).toMap)
-        } catch { case _: Throwable => (Map.empty[String, Double], Map.empty[String, String]) }
-      val failedSet = failed.toSet
-      // ADVICE r14: a query whose plan fingerprint changed takes its
-      // FRESH time — the old record measured code that no longer
-      // exists. Manual SPARK_GRAFT_BENCH_RESET still works for shape
-      // changes the analyzed plan can't see (e.g. a physical-rule or
-      // config change with identical logical plan).
-      val fpReset = results.collect {
-        case (n, _) if fps.get(n).exists(f => oldFps.get(n).exists(_ != f)) => n
-      }.map(_.toString).toSet
-      if (fpReset.nonEmpty)
-        println(s"[bench] plan fingerprint changed -> fresh time for: ${fpReset.toSeq.sorted.mkString(",")}")
-      val mergedRun = results.map { case (n, t) =>
-        n -> (
-          if (failedSet(n)) old.getOrElse(n, t)
-          else if (resetQ(n) || fpReset(n)) t
-          else math.min(t, old.getOrElse(n, Double.MaxValue)))
-      }
-      // full runs drop suite-departed queries; subset runs keep them
-      val merged: Seq[(String, Double)] =
-        if (only.isEmpty) mergedRun
-        else (old ++ mergedRun.toMap).toSeq.sortBy(_._1)
-      val tightened = merged.count { case (n, t) => old.get(n).exists(t < _) }
-      val stale = merged.count { case (n, t) => old.get(n).contains(t) && !resetQ(n) && !fpReset(n) }
-      val mtotal = r3(merged.map(_._2).sum)
-      println(s"[bench] min-merged $target: ${merged.size} queries, " +
-        s"$tightened tightened, $stale kept from prior record, " +
-        s"${fpReset.size} fp-reset, total $mtotal s (raw run ${total} s -> $lastPath)")
-      // keep a fingerprint for every query: fresh when this run made
-      // one, else carry the old one forward (a FAILED query keeps its
-      // prior fp alongside its prior time).
-      val mergedFps = merged.flatMap { case (n, _) =>
-        fps.get(n).orElse(oldFps.get(n)).map(n -> _) }
-      val fpsJson = mergedFps.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(target),
-        s"""{"metric":"total","value":$mtotal,"unit":"sec","fpv":$FPV,"queries":${qjson(merged)},"fps":$fpsJson,"failed":$failedJson,"sf":"$sfDir"}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val runs = (1 to Reps).map { rep =>
+      println(s"[bench] --- repetition $rep of $Reps ---")
+      (if (rep % 2 == 0) lpt.reverse else lpt).map { case (name, fn) => name -> runOne(name, fn) }
     }
-    val headlineLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(head)},"n_queries":${results.size},"failed":$failedJson,"sf":"$sfDir"}"""
-    // VERDICT r16 #3: the driver couldn't parse the headline out of the
-    // stdout tail (it was buried above sbt's [success] trailer behind
-    // logger prefixes). Three-way fix: (a) build.sbt now passes forked
-    // output through raw so this line starts with `{`; (b) it prints
-    // AFTER spark.stop() so no executor/shutdown log line can follow
-    // it; (c) it also lands at a fixed path, BENCH_HEADLINE.json, that
-    // survives regardless of stdout mangling. Subset / off-scale /
-    // redirected runs must not clobber it with a partial headline —
-    // same guard family as the BENCH_FULL/BENCH_LAST writes above
-    // (caught when a 26-query SPARK_GRAFT_ONLY profiling run replaced
-    // the full-run mirror).
-    if (only.isEmpty && benchOut.isEmpty && sfDir.endsWith("sf0.1"))
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_HEADLINE.json"),
-        headlineLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val result = summarize(runs, failed.toSet)
+    // Only a full-suite sf0.1 run may replace BENCH_FULL.json (the LPT
+    // priors and the committed record); any other run writes only to an
+    // explicit SPARK_GRAFT_BENCH_OUT.
+    val fullRun = only.isEmpty && sfDir.endsWith("sf0.1")
+    val benchOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    benchOut.orElse(Option.when(fullRun)("BENCH_FULL.json")) match {
+      case Some(target) =>
+        Files.write(Paths.get(target), result.record(sfDir).getBytes(UTF_8))
+        println(s"[bench] wrote $target: ${result.stats.size} queries, total ${result.total} s")
+      case None =>
+        println("[bench] subset or off-scale run without SPARK_GRAFT_BENCH_OUT: no record written")
+    }
+    val headlineLine = result.headline(sfDir, selected.size)
+    // The headline line is printed AFTER spark.stop() so no shutdown log
+    // line follows it, and a full run mirrors it to BENCH_HEADLINE.json.
+    if (fullRun && benchOut.isEmpty)
+      try Files.write(Paths.get("BENCH_HEADLINE.json"), headlineLine.getBytes(UTF_8))
       catch { case _: Throwable => () }
     spark.stop()
     println(headlineLine)
