@@ -38,11 +38,14 @@ import org.apache.spark.sql.types._
   *     batch-equivalence property the k24/k25 oracle rows certify.
   *   - `ALTER TABLE … ADD COLUMN / DELETE WHERE / UPDATE … WHERE`
   *     (VERDICT r19 next #2) → the A15 mergeSchema and K11
-  *     mutation-as-rewrite semantics (`ops/Storage.scala` K11), parsed
-  *     at the doors: the view re-registers over the rewritten frame.
+  *     mutation-as-rewrite semantics. Like CH's mutations they rewrite
+  *     the table's parts: the new content is the only part of a fresh
+  *     [[Parts]] generation, so the view stays one scan however many
+  *     ALTERs ran. Only the MVs that read the table recompute.
   *   - `DROP TABLE/VIEW [IF EXISTS] t`, `TRUNCATE TABLE t`,
-  *     `SHOW CREATE TABLE t`. DROP/TRUNCATE/ALTER also drop the
-  *     table's parts (ADVICE r19: retained parts resurrected truncated
+  *     `SHOW CREATE TABLE t`. TRUNCATE rewrites the table to no rows
+  *     the way ALTER does; DROP forgets its parts, so a re-CREATE
+  *     starts clean (ADVICE r19: retained parts resurrected truncated
   *     rows on the next insert).
   *   - `INSERT INTO t …` ([[ingest]], every door's INSERT route): the
   *     rows append as one part of the table's [[Parts]], laid out per
@@ -119,7 +122,7 @@ object ChDdl {
     def append(df: DataFrame, partCols: Seq[String] = Nil): String = commit(df, partCols, keep = true)
 
     /** Write `df` as the next part and make it the only live one. */
-    def replace(df: DataFrame): Unit = commit(df, Nil, keep = false): Unit
+    def replace(df: DataFrame, partCols: Seq[String] = Nil): Unit = commit(df, partCols, keep = false): Unit
 
     private def commit(df: DataFrame, partCols: Seq[String], keep: Boolean): String = synchronized {
       val part = s"$dir/b${committed + 1}"
@@ -329,8 +332,7 @@ object ChDdl {
       // a re-CREATE (e.g. DROP + CREATE with a new schema) must not
       // re-union pre-DDL parts into the fresh table
       Ingest.reset(name)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        .createOrReplaceTempView(name)
+      empty(spark, schema).createOrReplaceTempView(name)
       // ReplacingMergeTree(ver): FINAL reads collapse by the sorting key
       if (engine.equalsIgnoreCase("ReplacingMergeTree") && engineArgs.nonEmpty)
         ChSql.registerFinal(name, orderBy, engineArgs.split(",").head.trim)
@@ -352,26 +354,23 @@ object ChDdl {
       val name = m.group(1)
       val d = tableDefs.get(name.toLowerCase)
       require(d != null, s"TRUNCATE: '$name' is not a DDL-created table")
-      rebase(spark, name,
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), d.schema))
+      rebase(spark, name, empty(spark, d.schema))
     }).orElse(AlterAddColRe.findFirstMatchIn(t).map { m =>
       val (tbl, colName, typeStr) = (m.group(1), m.group(3), m.group(4))
       val cur = spark.table(tbl)
       if (cur.columns.contains(colName)) {
         require(m.group(2) != null, s"ALTER: column '$colName' already exists in '$tbl'")
+        spark.emptyDataFrame
       } else {
         val (dt, nullable) = chType(typeStr)
         val d = Option(m.group(5)).map(_.trim).getOrElse(typeDefault(dt, nullable))
-        // A15 mergeSchema semantics: existing rows read the default
-        cur.withColumn(colName, expr(d).cast(dt)).createOrReplaceTempView(tbl)
         Option(tableDefs.get(tbl.toLowerCase)).foreach { td =>
           tableDefs.put(tbl.toLowerCase,
             td.copy(schema = StructType(td.schema.fields :+ StructField(colName, dt, nullable))))
         }
-        // the next insert must base itself on the WIDENED view
-        Ingest.reset(tbl)
+        // A15 mergeSchema semantics: existing rows read the default
+        rebase(spark, tbl, cur.withColumn(colName, expr(d).cast(dt)))
       }
-      spark.emptyDataFrame
     }).orElse(AlterDeleteRe.findFirstMatchIn(t).map { m =>
       val (tbl, cond) = (m.group(1), m.group(2).trim)
       // K11 mutation-as-rewrite: keep rows where the predicate is
@@ -417,16 +416,16 @@ object ChDdl {
     })
   }
 
-  /** Make `df` the whole of `table`: drop its parts FIRST (ADVICE r19:
-    * keeping them resurrected truncated rows on the next insert),
-    * re-point the view, then refresh every MV — an insert delta
-    * doesn't describe a TRUNCATE or an ALTER mutation. */
+  /** Make `df` the whole of `table` (TRUNCATE, ALTER): rewrite its
+    * parts, then recompute the MVs that read it. */
   private def rebase(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
-    Ingest.reset(table)
-    df.createOrReplaceTempView(table)
-    refreshMvs(spark)
+    Ingest.replace(spark, table, df)
+    maintain(spark, table, None)
     spark.emptyDataFrame
   }
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   private def chTypeName(f: StructField): String = {
     val base = graft.server.HttpSqlEndpoint.chTypeName(f.dataType, nullable = false)
@@ -532,23 +531,25 @@ object ChDdl {
 
   private val deltaSeq = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Insert-driven MV maintenance (CH's incremental-MV contract).
-    * `delta` = the block just ingested into `table` (already read back
-    * from its committed part — deterministic). MVs refresh in
-    * creation order so MV-on-MV chains see fresh upstreams; a chain
-    * hop recomputes, but against the upstream MV's MATERIALIZED
-    * target, never the base table. */
-  private def onInsert(spark: SparkSession, table: String, delta: DataFrame): Unit =
+  /** MV maintenance after `table` changed: only the MVs that read it,
+    * directly or through an MV visited before (creation order, so a
+    * chain sees its upstream fresh). `delta` = the block an INSERT just
+    * committed, read back from its part: the table's AggInc and
+    * AppendInc MVs take it (CH's incremental-MV contract). Every other
+    * MV visited, and every one after a TRUNCATE or ALTER (None),
+    * recomputes its SELECT — a chain hop against the upstream MV's
+    * materialized target. Both equal a full recompute (J1). */
+  private def maintain(spark: SparkSession, table: String, delta: Option[DataFrame]): Unit =
     mvLock.synchronized {
       val src = table.toLowerCase
       var changed = Set(src)
       mvOrder.forEach { name =>
         val st = mvStates.get(name)
         if (st != null && st.sources.intersect(changed).nonEmpty) {
-          st.mode match {
-            case AggInc(`src`, _, _) | AppendInc(`src`) =>
+          (st.mode, delta) match {
+            case (AggInc(`src`, _, _) | AppendInc(`src`), Some(d)) =>
               val dv = s"__graft_mv_delta_${deltaSeq.incrementAndGet()}"
-              delta.createOrReplaceTempView(dv)
+              d.createOrReplaceTempView(dv)
               try {
                 val block = ChSql.sql(spark, substituteSource(st.select, src, dv))
                 st.mode match {
@@ -578,19 +579,6 @@ object ChDdl {
         }
       }
     }
-
-  /** Full refresh of every MV (creation order): recompute each SELECT
-    * against current sources and replace the MV's parts with it. The
-    * TRUNCATE / ALTER mutation path — an insert delta doesn't describe
-    * those changes. Results are definitionally equal to CH's
-    * query-time collapse of its per-insert partial states — the J1
-    * batch-equivalence property. */
-  private def refreshMvs(spark: SparkSession): Unit = mvLock.synchronized {
-    mvOrder.forEach { name =>
-      val st = mvStates.get(name)
-      if (st != null) materialize(spark, name, st, ChSql.sql(spark, st.select))
-    }
-  }
 
   // ---- INSERT ingest ------------------------------------------------------
 
@@ -632,22 +620,38 @@ object ChDdl {
   def ingest(spark: SparkSession, text: String): Option[Long] =
     InsertRe.findFirstMatchIn(text).map(m => Ingest.insert(spark, m))
 
-  /** The ingest path: parsed rows append as one part of the table's
-    * [[Parts]] (`Engine.scratch(spark, "http", "ingest_<table>_g<n>")/b<i>`,
-    * one part per INSERT, like a MergeTree part) and the temp view is
-    * re-registered as base ∪ ONE scan over the committed parts. A temp
-    * view snapshots its file listing, so re-registration is what makes
-    * the new part visible. The base DataFrame is captured at FIRST
-    * insert; re-registering the view externally afterwards (e.g.
-    * `registerAll` with a different sf dir) resets nothing here —
-    * long-lived-server scope, one catalog per process. DDL on the
-    * table resets the state ([[reset]]) so the next INSERT re-captures
-    * its base from the CURRENT view. */
+  /** The ingest path: a table is its base ∪ ONE scan over the live
+    * parts of its [[Parts]] (`Engine.scratch(spark, "http",
+    * "ingest_<table>_g<n>")/b<i>`). An INSERT appends one part, like a
+    * MergeTree part, and re-registers the view: a temp view snapshots
+    * its file listing. The base is the view at FIRST insert;
+    * re-registering the view externally afterwards (e.g. `registerAll`
+    * with a different sf dir) resets nothing here — one catalog per
+    * process. CREATE and DROP [[reset]] the state; TRUNCATE and ALTER
+    * [[replace]] it. */
   private object Ingest {
-    private final class State(val orig: DataFrame, val parts: Parts)
+    private final class State(spark: SparkSession, table: String, val orig: DataFrame) {
+      val parts = new Parts(spark, "http", s"ingest_${table.toLowerCase}")
+      /** The layout's shadow partition column lives only in the
+        * directory names, which the scan does not read. */
+      def publish(schema: StructType): Unit =
+        orig.unionByName(parts.scan(schema)).createOrReplaceTempView(table)
+    }
     private val reg = new java.util.concurrent.ConcurrentHashMap[String, State]()
 
     def reset(table: String): Unit = reg.remove(table.toLowerCase): Unit
+
+    /** Make `df` the whole of `table`: the only part, laid out per the
+      * DDL, of a fresh generation over an empty base. A failed write
+      * changes nothing. The old generation's files stay until JVM
+      * exit: a reader may still scan them. */
+    def replace(spark: SparkSession, table: String, df: DataFrame): Unit = {
+      val st = new State(spark, table, empty(spark, df.schema))
+      val (laid, partCols) = layoutFor(df, table)
+      st.parts.replace(laid, partCols)
+      st.publish(df.schema)
+      reg.put(table.toLowerCase, st): Unit
+    }
 
     def insert(spark: SparkSession, m: scala.util.matching.Regex.Match): Long = {
       val table = m.group(1)
@@ -672,9 +676,7 @@ object ChDdl {
       val aligned = parsed.select(schema.map { f =>
         if (cols.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
       }: _*)
-      val key = table.toLowerCase
-      val st = reg.computeIfAbsent(key,
-        _ => new State(target, new Parts(spark, "http", s"ingest_$key")))
+      val st = reg.computeIfAbsent(table.toLowerCase, _ => new State(spark, table, target))
       val (written, delta) = st.synchronized {
         // DDL-created tables carry a storage layout (ORDER BY /
         // PARTITION BY — the K10 semantics): sort within partitions
@@ -690,14 +692,12 @@ object ChDdl {
         // metadata only, no second plan execution (a count() beside the
         // write re-ran a nondeterministic INSERT…SELECT source).
         val n = st.parts.rows(part)
-        // the layout's shadow partition column lives only in the
-        // directory names, which the scan does not read
-        st.orig.unionByName(st.parts.scan(aligned.schema)).createOrReplaceTempView(table)
+        st.publish(aligned.schema)
         (n, st.parts.scan(aligned.schema, Seq(part)))
       }
       // the MVs take the part just written, never a re-execution of
       // the INSERT's source
-      onInsert(spark, table, delta)
+      maintain(spark, table, Some(delta))
       written
     }
 

@@ -19,14 +19,9 @@ object Engine {
     * = cores, UTC, nanos-as-long parquet reads, `LocalFs` for `file:`. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Cluster-shape rehearsal knob (VERDICT r11 #5): a real cluster
-    // runs shuffle partitions >> cores (e.g. 256 over 1000 executors);
-    // overriding this proves no query depends on the partitions==cores
-    // coincidence of local mode (AQE coalescing absorbs the extra).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Testdata timestamps are naive parquet TIMESTAMP(MICROS); read

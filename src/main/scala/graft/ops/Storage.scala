@@ -17,9 +17,6 @@ import graft.{CH, Engine}
 object Storage {
   type Q = (SparkSession, String) => DataFrame
 
-  private def scratch(spark: SparkSession, dir: String, name: String): String =
-    Engine.scratch(spark, dir, name)
-
   /** Writer-parallelism salt for the partitioned writes (k10 / k10b /
     * k14): how many concurrent writer buckets each partition DIRECTORY
     * gets. r20 (guide §6 — size output files to 128 MB–1 GB, §2.2 —
@@ -32,15 +29,10 @@ object Storage {
     * the 1992–1998 testdata spans — TESTDATA.md; a deployment sizes
     * the divisor to its real partition layout), capped at 32. Salt 1
     * until a directory would exceed 256 MB — exactly the guide's file
-    * band — and hot-month writer parallelism past it. Overridable via
-    * `spark.graft.writeSaltBuckets` for cluster rehearsal. */
-  private def writeSalt(spark: SparkSession, df: DataFrame, key: Column,
-      dirs: Long = 80L): Column = {
-    val buckets = spark.conf.getOption("spark.graft.writeSaltBuckets")
-      .map(_.toLong).getOrElse {
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        (bytes / dirs / (256L << 20)).toLong + 1L
-      }
+    * band — and hot-month writer parallelism past it. */
+  private def writeSalt(df: DataFrame, key: Column, dirs: Long = 80L): Column = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val buckets = (bytes / dirs / (256L << 20)).toLong + 1L
     pmod(hash(key), lit(math.max(1L, math.min(32L, buckets)).toInt))
   }
 
@@ -56,12 +48,12 @@ object Storage {
     * skipping intact) while letting multiple tasks write a hot month
     * in parallel once a directory exceeds the target file size. */
   private def k10PartitionedWrite(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, dir, "k10_parts")
+    val out = Engine.scratch(spark, dir, "k10_parts")
     val orders = Engine.t(spark, dir, "orders")
     val toWrite = orders
       .withColumn("yyyymm", CH.toYYYYMM(col("o_orderdate")))
     toWrite
-      .repartition(col("yyyymm"), writeSalt(spark, orders, col("o_orderkey")))
+      .repartition(col("yyyymm"), writeSalt(orders, col("o_orderkey")))
       .sortWithinPartitions("yyyymm", "o_orderkey")
       .write.mode("overwrite").partitionBy("yyyymm").parquet(out)
     Engine.readBackPartitioned(spark, out, toWrite.schema, Seq("yyyymm"))
@@ -81,14 +73,14 @@ object Storage {
     * fixed cutoff keeps the op deterministic (a deployment derives it
     * from now() - INTERVAL). */
   private def k10bTtlRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val base = scratch(spark, dir, "k10b_base")
-    val live = scratch(spark, dir, "k10b_live")
+    val base = Engine.scratch(spark, dir, "k10b_base")
+    val live = Engine.scratch(spark, dir, "k10b_live")
     // Salted pre-shuffle for both writes, same rationale as k10: an
     // unshuffled partitionBy write has every input task touch every
     // yyyymm directory (tasks × ~80 small files), the small-files
     // shape that kills the downstream scan at 100 TB.
     val orders = Engine.t(spark, dir, "orders")
-    val salt = writeSalt(spark, orders, col("o_orderkey"))
+    val salt = writeSalt(orders, col("o_orderkey"))
     val toWrite = orders
       .withColumn("yyyymm", CH.toYYYYMM(col("o_orderdate")))
     toWrite
@@ -107,7 +99,7 @@ object Storage {
   /** K11: mutations — ALTER DELETE + ALTER UPDATE as a rewrite into a
     * new table version, then read back. */
   private def k11Mutation(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, dir, "k11_mutated")
+    val out = Engine.scratch(spark, dir, "k11_mutated")
     val rewritten = Engine.t(spark, dir, "supplier")
       .filter(!(col("s_acctbal") < 0))                                    // ALTER TABLE ... DELETE WHERE s_acctbal < 0
       .withColumn("s_name",                                               // ALTER TABLE ... UPDATE s_name WHERE s_acctbal > 9000
@@ -123,8 +115,8 @@ object Storage {
 
   /** K12: OPTIMIZE/compaction — rewrite many small files into few. */
   private def k12Compaction(spark: SparkSession, dir: String): DataFrame = {
-    val frag = scratch(spark, dir, "k12_frag")
-    val compact = scratch(spark, dir, "k12_compact")
+    val frag = Engine.scratch(spark, dir, "k12_frag")
+    val compact = Engine.scratch(spark, dir, "k12_compact")
     val src = Engine.t(spark, dir, "lineitem").filter(col("l_quantity") < 5)
     src.repartition(16).write.mode("overwrite").parquet(frag)
     val before = Engine.readBack(spark, frag, src.schema)
@@ -220,12 +212,12 @@ object Storage {
     * admin-op surface). Read-back proves the remaining partitions are
     * untouched. */
   private def k14DropPartition(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, dir, "k14_parts")
+    val out = Engine.scratch(spark, dir, "k14_parts")
     val orders = Engine.t(spark, dir, "orders")
     val toWrite = orders
       .withColumn("yyyymm", CH.toYYYYMM(col("o_orderdate")))
     toWrite
-      .repartition(col("yyyymm"), writeSalt(spark, orders, col("o_orderkey")))
+      .repartition(col("yyyymm"), writeSalt(orders, col("o_orderkey")))
       .write.mode("overwrite").partitionBy("yyyymm").parquet(out)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Seq(199701, 199702).foreach { m =>
@@ -247,9 +239,9 @@ object Storage {
     * data, never a half-written table — the only sane way to republish
     * a 100 TB derived table. */
   private def k15AtomicSwap(spark: SparkSession, dir: String): DataFrame = {
-    val live = scratch(spark, dir, "k15_live")
-    val staging = scratch(spark, dir, "k15_staging")
-    val retired = scratch(spark, dir, "k15_retired")
+    val live = Engine.scratch(spark, dir, "k15_live")
+    val staging = Engine.scratch(spark, dir, "k15_staging")
+    val retired = Engine.scratch(spark, dir, "k15_retired")
     val o = Engine.t(spark, dir, "orders")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -284,8 +276,8 @@ object Storage {
     * second listing. At 100 TB both passes are scan-bound and
     * embarrassingly parallel. */
   private def k16IntegrityCheck(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, dir, "k16_data")
-    val manifestP = scratch(spark, dir, "k16_manifest")
+    val out = Engine.scratch(spark, dir, "k16_data")
+    val manifestP = Engine.scratch(spark, dir, "k16_manifest")
     val cust = Engine.t(spark, dir, "customer")
     cust.repartition(4)
       .write.mode("overwrite").parquet(out)
@@ -315,8 +307,8 @@ object Storage {
     * Both routes are exercised and their results cross-checked
     * against the base table via the oracle. */
   private def k17ProjectionRoute(spark: SparkSession, dir: String): DataFrame = {
-    val byDate = scratch(spark, dir, "k17_by_date")
-    val byCust = scratch(spark, dir, "k17_by_cust")
+    val byDate = Engine.scratch(spark, dir, "k17_by_date")
+    val byCust = Engine.scratch(spark, dir, "k17_by_cust")
     val o = Engine.t(spark, dir, "orders")
     o.repartition(4).sortWithinPartitions("o_orderdate")
       .write.mode("overwrite").parquet(byDate)
@@ -366,7 +358,7 @@ object Storage {
     * row groups here so the test file has >1 pruning unit; a
     * deployment leaves the default 128 MB. */
   private def k19SkipIndex(spark: SparkSession, dir: String): DataFrame = {
-    val out = scratch(spark, dir, "k19_skip")
+    val out = Engine.scratch(spark, dir, "k19_skip")
     val orders = Engine.t(spark, dir, "orders")
     orders
       .repartition(4, col("o_custkey"))
@@ -437,7 +429,7 @@ object Storage {
 
   def k20Layout(spark: SparkSession, dir: String): String =
     zorderWrite(spark, Engine.t(spark, dir, "events"),
-      scratch(spark, dir, "k20_zorder"))
+      Engine.scratch(spark, dir, "k20_zorder"))
 
   /** K20: multi-dimensional clustering — Morton (z-order) layout.
     *
@@ -461,7 +453,7 @@ object Storage {
     * single-dim sort. */
   private def k20ZorderLayout(spark: SparkSession, dir: String): DataFrame = {
     val (zPath, zSchema) = zorderWriteWithSchema(spark,
-      Engine.t(spark, dir, "events"), scratch(spark, dir, "k20_zorder"))
+      Engine.t(spark, dir, "events"), Engine.scratch(spark, dir, "k20_zorder"))
     val z = Engine.readBack(spark, zPath, zSchema)
     val tsBand = z
       .filter(col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
@@ -521,7 +513,7 @@ object Storage {
     * flat group-by oracle checks. At 100 TB the read-side merge cost
     * scales with distinct keys, not ingested rows. */
   private def k22SummingMerge(spark: SparkSession, dir: String): DataFrame = {
-    val partsDir = scratch(spark, dir, "k22_parts")
+    val partsDir = Engine.scratch(spark, dir, "k22_parts")
     val l = Engine.t(spark, dir, "lineitem")
     // all 4 ingest chunks land in ONE partitionBy job — each part-N
     // directory is a part-local key-summed file, identical layout to 4

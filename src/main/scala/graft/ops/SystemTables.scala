@@ -212,6 +212,33 @@ object SystemTables {
     Seq(0).toDF("dummy").createOrReplaceTempView("__graft_system_one")
   }
 
+  /** POST to the HTTP door at `url` the way a CH client does: `stmt`
+    * as the body, or, with `data` (an INSERT's block), `stmt` in the
+    * `query` parameter and `data` as the body. A reply other than 200
+    * fails with the server's error body. */
+  private def httpPost(url: String, stmt: String, data: Option[Array[Byte]] = None): String = {
+    val query = data.fold("")(_ => "?query=" + java.net.URLEncoder.encode(stmt, "UTF-8"))
+    val conn = new java.net.URL(s"$url/$query").openConnection().asInstanceOf[java.net.HttpURLConnection]
+    try {
+      conn.setRequestMethod("POST")
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(data.getOrElse(stmt.getBytes("UTF-8")))
+      require(conn.getResponseCode == 200, {
+        val err = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
+        s"HTTP ${conn.getResponseCode}: $err (stmt: $stmt)"
+      })
+      new String(conn.getInputStream.readAllBytes(), "UTF-8")
+    } finally conn.disconnect()
+  }
+
+  /** The rows of a `FORMAT TabSeparatedWithNames` reply, split into
+    * fields, after checking that its header names `cols`. */
+  private def tsvRows(body: String, cols: Seq[String]): Seq[Array[String]] = {
+    val lines = body.split("\n").filter(_.nonEmpty)
+    require(lines.head == cols.mkString("\t"), s"unexpected TSV header: ${lines.head}")
+    lines.tail.toSeq.map(_.split("\t", -1))
+  }
+
   /** A25 (VERDICT r19 next #7): `system.columns` interrogated over the
     * HTTP door the way a BI tool does — `WHERE database = … AND
     * table = …` (with `table`, an ANSI-reserved word in Spark, handled
@@ -223,37 +250,20 @@ object SystemTables {
     Engine.registerAll(spark, dir)
     val running = graft.server.HttpSqlEndpoint.start(spark, 0)
     try {
-      def post(stmt: String): String = {
-        val conn = new java.net.URL(running.url + "/")
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST")
-        conn.setDoOutput(true)
-        conn.getOutputStream.write(stmt.getBytes("UTF-8"))
-        require(conn.getResponseCode == 200, {
-          val err = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
-          s"HTTP ${conn.getResponseCode}: $err (stmt: $stmt)"
-        })
-        val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-        conn.disconnect()
-        body
-      }
+      def post(stmt: String) = httpPost(running.url, stmt)
       // the probe queries a stock client opens with
       require(post("SELECT 1 FROM system.one FORMAT TabSeparated") == "1\n")
       val tabs = post(
         "SELECT name FROM system.tables WHERE database = 'default' ORDER BY name FORMAT TabSeparated")
       require(tabs.split("\n").contains("orders"), s"system.tables must list orders: $tabs")
+      val cols = Seq("ordinal", "column_name")
       val body = post(
         """SELECT CAST(position AS INT) AS ordinal, name AS column_name
           |FROM system.columns
           |WHERE database = 'default' AND table = 'orders'
           |ORDER BY ordinal FORMAT TabSeparatedWithNames""".stripMargin)
-      val lines = body.split("\n").filter(_.nonEmpty)
-      require(lines.head == "ordinal\tcolumn_name", s"unexpected TSV header: ${lines.head}")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0).toInt, f(1))
-      }.toDF("ordinal", "column_name")
+      tsvRows(body, cols).map(f => (f(0).toInt, f(1))).toDF(cols: _*)
     } finally running.stop()
   }
 
@@ -301,21 +311,11 @@ object SystemTables {
           |GROUP BY o_orderstatus
           |ORDER BY o_orderstatus
           |FORMAT TabSeparatedWithNames""".stripMargin
-      val conn = new java.net.URL(running.url + "/")
-        .openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.getOutputStream.write(q.getBytes("UTF-8"))
-      val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-      conn.disconnect()
-      val lines = body.split("\n").filter(_.nonEmpty)
-      require(lines.head == "o_orderstatus\tn\tsum_price",
-        s"unexpected TSV header: ${lines.head}")
+      val cols = Seq("o_orderstatus", "n", "sum_price")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0), f(1).toLong, f(2).toDouble) // Double.toString round-trips exactly
-      }.toDF("o_orderstatus", "n", "sum_price")
+      tsvRows(httpPost(running.url, q), cols)
+        .map(f => (f(0), f(1).toLong, f(2).toDouble)) // Double.toString round-trips exactly
+        .toDF(cols: _*)
     } finally running.stop()
   }
 
@@ -353,15 +353,7 @@ object SystemTables {
       val toInsert = o.filter(col("o_orderstatus") =!= "F" && col("o_orderkey") < 30000)
       val body = new java.io.ByteArrayOutputStream()
       graft.server.HttpSqlEndpoint.render(toInsert, "TabSeparated", body)
-      val insConn = new java.net.URL(running.url + "/?query=" +
-        java.net.URLEncoder.encode(s"INSERT INTO $view FORMAT TabSeparated", "UTF-8"))
-        .openConnection().asInstanceOf[java.net.HttpURLConnection]
-      insConn.setRequestMethod("POST")
-      insConn.setDoOutput(true)
-      insConn.getOutputStream.write(body.toByteArray)
-      require(insConn.getResponseCode == 200,
-        s"INSERT over HTTP failed: ${insConn.getResponseCode}")
-      insConn.disconnect()
+      httpPost(running.url, s"INSERT INTO $view FORMAT TabSeparated", Some(body.toByteArray))
       val q =
         s"""SELECT o_orderstatus, count(*) AS n,
            |  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
@@ -369,21 +361,11 @@ object SystemTables {
            |GROUP BY o_orderstatus
            |ORDER BY o_orderstatus
            |FORMAT TabSeparatedWithNames""".stripMargin
-      val conn = new java.net.URL(running.url + "/")
-        .openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.getOutputStream.write(q.getBytes("UTF-8"))
-      val resp = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-      conn.disconnect()
-      val lines = resp.split("\n").filter(_.nonEmpty)
-      require(lines.head == "o_orderstatus\tn\tsum_price",
-        s"unexpected TSV header: ${lines.head}")
+      val cols = Seq("o_orderstatus", "n", "sum_price")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0), f(1).toLong, f(2).toDouble) // Double.toString round-trips exactly
-      }.toDF("o_orderstatus", "n", "sum_price")
+      tsvRows(httpPost(running.url, q), cols)
+        .map(f => (f(0), f(1).toLong, f(2).toDouble)) // Double.toString round-trips exactly
+        .toDF(cols: _*)
     } finally running.stop()
   }
 
@@ -412,21 +394,10 @@ object SystemTables {
           |GROUP BY ym
           |ORDER BY ym
           |FORMAT TabSeparatedWithNames""".stripMargin
-      val conn = new java.net.URL(running.url + "/")
-        .openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("POST")
-      conn.setDoOutput(true)
-      conn.getOutputStream.write(q.getBytes("UTF-8"))
-      val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-      conn.disconnect()
-      val lines = body.split("\n").filter(_.nonEmpty)
-      require(lines.head == "ym\tbuyers\tbig\tmed",
-        s"unexpected TSV header: ${lines.head}")
+      val cols = Seq("ym", "buyers", "big", "med")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0).toInt, f(1).toLong, f(2).toLong, f(3).toDouble)
-      }.toDF("ym", "buyers", "big", "med")
+      tsvRows(httpPost(running.url, q), cols)
+        .map(f => (f(0).toInt, f(1).toLong, f(2).toLong, f(3).toDouble)).toDF(cols: _*)
     } finally running.stop()
   }
 
@@ -452,20 +423,7 @@ object SystemTables {
     val mv = s"k24_daily_$n"
     val running = graft.server.HttpSqlEndpoint.start(spark, 0)
     try {
-      def post(stmt: String): String = {
-        val conn = new java.net.URL(running.url + "/")
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST")
-        conn.setDoOutput(true)
-        conn.getOutputStream.write(stmt.getBytes("UTF-8"))
-        require(conn.getResponseCode == 200, {
-          val err = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
-          s"HTTP ${conn.getResponseCode}: $err (stmt: $stmt)"
-        })
-        val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-        conn.disconnect()
-        body
-      }
+      def post(stmt: String) = httpPost(running.url, stmt)
       post(s"""CREATE TABLE $tbl (
               |  ts DateTime, site String, clicks UInt32, price Decimal(18,2)
               |) ENGINE = MergeTree ORDER BY (site, ts) PARTITION BY toYYYYMM(ts)""".stripMargin)
@@ -483,16 +441,13 @@ object SystemTables {
       post(s"INSERT INTO $tbl FORMAT TabSeparated\n" +
         "2024-01-06 20:00:00\tbeta\t4\t15.00\n" +
         "2024-02-01 23:59:59\tgamma\t9\t1.05\n")
+      val cols = Seq("site", "d", "hits", "revenue")
       val body = post(
         s"SELECT site, d, hits, revenue FROM $mv ORDER BY site, d FORMAT TabSeparatedWithNames")
-      val lines = body.split("\n").filter(_.nonEmpty)
-      require(lines.head == "site\td\thits\trevenue",
-        s"unexpected TSV header: ${lines.head}")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0), java.sql.Timestamp.valueOf(f(1)), f(2).toLong, f(3).toDouble)
-      }.toDF("site", "d", "hits", "revenue")
+      tsvRows(body, cols)
+        .map(f => (f(0), java.sql.Timestamp.valueOf(f(1)), f(2).toLong, f(3).toDouble))
+        .toDF(cols: _*)
     } finally running.stop()
   }
 
@@ -515,20 +470,7 @@ object SystemTables {
     val mv = s"k25_rollup_$n"
     val running = graft.server.HttpSqlEndpoint.start(spark, 0)
     try {
-      def post(stmt: String): String = {
-        val conn = new java.net.URL(running.url + "/")
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST")
-        conn.setDoOutput(true)
-        conn.getOutputStream.write(stmt.getBytes("UTF-8"))
-        require(conn.getResponseCode == 200, {
-          val err = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
-          s"HTTP ${conn.getResponseCode}: $err (stmt: $stmt)"
-        })
-        val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-        conn.disconnect()
-        body
-      }
+      def post(stmt: String) = httpPost(running.url, stmt)
       post(s"CREATE TABLE $tbl (site String, v Int64) ENGINE = MergeTree ORDER BY site")
       post(s"""CREATE MATERIALIZED VIEW $mv AS
               |SELECT site, count(*) AS hits, sum(v) AS total,
@@ -544,16 +486,12 @@ object SystemTables {
       val files = spark.table(mv).inputFiles
       require(files.nonEmpty && files.forall(_.contains(s"/mv_${mv}_")),
         s"MV read must hit only its materialized target: ${files.mkString(", ")}")
+      val cols = Seq("site", "hits", "total", "lo", "hi")
       val body = post(
         s"SELECT site, hits, total, lo, hi FROM $mv ORDER BY site FORMAT TabSeparatedWithNames")
-      val lines = body.split("\n").filter(_.nonEmpty)
-      require(lines.head == "site\thits\ttotal\tlo\thi",
-        s"unexpected TSV header: ${lines.head}")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0), f(1).toLong, f(2).toLong, f(3).toLong, f(4).toLong)
-      }.toDF("site", "hits", "total", "lo", "hi")
+      tsvRows(body, cols)
+        .map(f => (f(0), f(1).toLong, f(2).toLong, f(3).toLong, f(4).toLong)).toDF(cols: _*)
     } finally running.stop()
   }
 
@@ -570,35 +508,17 @@ object SystemTables {
     val tbl = s"k26_t_$n"
     val running = graft.server.HttpSqlEndpoint.start(spark, 0)
     try {
-      def post(stmt: String): String = {
-        val conn = new java.net.URL(running.url + "/")
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod("POST")
-        conn.setDoOutput(true)
-        conn.getOutputStream.write(stmt.getBytes("UTF-8"))
-        require(conn.getResponseCode == 200, {
-          val err = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
-          s"HTTP ${conn.getResponseCode}: $err (stmt: $stmt)"
-        })
-        val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-        conn.disconnect()
-        body
-      }
+      def post(stmt: String) = httpPost(running.url, stmt)
       post(s"CREATE TABLE $tbl (k Int64, v Int64) ENGINE = MergeTree ORDER BY k")
       post(s"INSERT INTO $tbl VALUES (1, 10), (2, 20), (3, 30)")
       post(s"ALTER TABLE $tbl ADD COLUMN tag String DEFAULT 'old'")
       post(s"INSERT INTO $tbl VALUES (4, 40, 'new'), (5, 55, 'new')")
       post(s"ALTER TABLE $tbl DELETE WHERE v >= 50")
       post(s"ALTER TABLE $tbl UPDATE v = v + 100 WHERE tag = 'old'")
-      val body = post(
-        s"SELECT k, v, tag FROM $tbl ORDER BY k FORMAT TabSeparatedWithNames")
-      val lines = body.split("\n").filter(_.nonEmpty)
-      require(lines.head == "k\tv\ttag", s"unexpected TSV header: ${lines.head}")
+      val cols = Seq("k", "v", "tag")
+      val body = post(s"SELECT k, v, tag FROM $tbl ORDER BY k FORMAT TabSeparatedWithNames")
       import spark.implicits._
-      lines.tail.toSeq.map { l =>
-        val f = l.split("\t", -1)
-        (f(0).toLong, f(1).toLong, f(2))
-      }.toDF("k", "v", "tag")
+      tsvRows(body, cols).map(f => (f(0).toLong, f(1).toLong, f(2))).toDF(cols: _*)
     } finally running.stop()
   }
 

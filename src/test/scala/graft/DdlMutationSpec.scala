@@ -97,13 +97,20 @@ class DdlMutationSpec extends AnyFunSuite {
     val select = "SELECT k, v * 2 AS v2 FROM mvm_rf WHERE v > 0"
     sql(s"CREATE MATERIALIZED VIEW mvm_rf_mv AS $select")
     assert(ChDdl.mvModeFor("mvm_rf_mv").exists(_.startsWith("AppendInc")))
-    def same(): Unit = assert(rows("SELECT k, v2 FROM mvm_rf_mv ORDER BY k, v2") ==
-      rows(s"$select ORDER BY k, v2"))
+    // an AggInc MV of the same table takes the same refreshes
+    val aggSelect = "SELECT k % 2 AS p, count(*) AS c, sum(v) AS s FROM mvm_rf GROUP BY k % 2"
+    sql(s"CREATE MATERIALIZED VIEW mvm_rf_agg AS $aggSelect")
+    assert(ChDdl.mvModeFor("mvm_rf_agg").exists(_.startsWith("AggInc")))
+    def same(): Unit = Seq("mvm_rf_mv" -> select, "mvm_rf_agg" -> aggSelect).foreach { case (mv, q) =>
+      assert(rows(s"SELECT * FROM $mv ORDER BY 1, 2") == rows(s"$q ORDER BY 1, 2"), mv)
+    }
     insert("INSERT INTO mvm_rf VALUES (1, 1), (2, -1)")
     insert("INSERT INTO mvm_rf VALUES (3, 3)")
+    same()
     sql("TRUNCATE TABLE mvm_rf")
     same()
     assert(rows("SELECT count(*) FROM mvm_rf_mv") == Seq(Seq(0L)))
+    assert(rows("SELECT count(*) FROM mvm_rf_agg") == Seq(Seq(0L)))
     insert("INSERT INTO mvm_rf VALUES (4, 4), (5, 5)")
     insert("INSERT INTO mvm_rf VALUES (6, 6)")
     sql("ALTER TABLE mvm_rf DELETE WHERE k = 5")
@@ -115,7 +122,54 @@ class DdlMutationSpec extends AnyFunSuite {
     // one scan over the refresh's part and the one block since
     val rs = roots("mvm_rf_mv")
     assert(rs.size == 2 && rs.head == refreshed.head, rs.mkString(", "))
-    sql("DROP TABLE mvm_rf_mv"); sql("DROP TABLE mvm_rf")
+    sql("DROP TABLE mvm_rf_mv"); sql("DROP TABLE mvm_rf_agg"); sql("DROP TABLE mvm_rf")
+  }
+
+  test("TRUNCATE and ALTER refresh only the MVs that read the table") {
+    sql("CREATE TABLE mvm_dg_a (k Int64, v Int64) ENGINE = MergeTree ORDER BY k")
+    sql("CREATE TABLE mvm_dg_b (k Int64, v Int64) ENGINE = MergeTree ORDER BY k")
+    sql("CREATE MATERIALIZED VIEW mvm_dg_mva AS SELECT k, v FROM mvm_dg_a")
+    val select = "SELECT k, sum(v) AS s FROM mvm_dg_b GROUP BY k"
+    sql(s"CREATE MATERIALIZED VIEW mvm_dg_mvb AS $select")
+    def same(): Unit = assert(rows("SELECT k, s FROM mvm_dg_mvb ORDER BY k") == rows(s"$select ORDER BY k"))
+    try {
+      insert("INSERT INTO mvm_dg_a VALUES (1, 1)")
+      insert("INSERT INTO mvm_dg_b VALUES (1, 10), (2, 20)")
+      // mvm_dg_mva's source is gone, so recomputing it would fail
+      sql("DROP TABLE mvm_dg_a")
+      sql("ALTER TABLE mvm_dg_b DELETE WHERE k = 1")
+      same()
+      assert(rows("SELECT k, s FROM mvm_dg_mvb") == Seq(Seq(2L, 20L)))
+      sql("TRUNCATE TABLE mvm_dg_b")
+      same()
+      assert(rows("SELECT count(*) FROM mvm_dg_mvb") == Seq(Seq(0L)))
+    } finally Seq("mvm_dg_mva", "mvm_dg_mvb", "mvm_dg_b").foreach(t => sql(s"DROP TABLE $t"))
+  }
+
+  test("a table stays one scan over its live part across 100 ALTER UPDATEs and INSERTs") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def depth(p: LogicalPlan): Int = 1 + (p.children.map(depth) :+ 0).max
+    def analyzed = spark.table("mvm_many").queryExecution.analyzed
+    sql("CREATE TABLE mvm_many (k Int64, v Int64) ENGINE = MergeTree ORDER BY k")
+    try {
+      insert("INSERT INTO mvm_many VALUES (1, 0), (2, 0), (3, 0)")
+      var depthAt10 = 0
+      (1 to 100).foreach { i =>
+        sql("ALTER TABLE mvm_many UPDATE v = v + 1 WHERE k > 0")
+        if (i == 10) depthAt10 = depth(analyzed)
+        if (i % 25 == 0 && i < 100) insert(s"INSERT INTO mvm_many VALUES (${100 + i}, 0)")
+      }
+      assert(depth(analyzed) == depthAt10, analyzed.treeString)
+      assert(analyzed.collectLeaves().count(_.isInstanceOf[LogicalRelation]) == 1, analyzed.treeString)
+      // the scan reads the last ALTER's part and nothing older
+      val live = roots("mvm_many").map(_.toUri.getPath)
+      val files = spark.table("mvm_many").inputFiles
+      assert(live.size == 1 && files.nonEmpty &&
+        files.forall(f => new java.net.URI(f).getPath.startsWith(live.head + "/")), files.mkString(", "))
+      // 3 rows × 100 updates, plus 75, 50 and 25 for the rows inserted on the way
+      assert(rows("SELECT count(*), sum(v) FROM mvm_many") == Seq(Seq(6L, 450L)))
+    } finally sql("DROP TABLE mvm_many")
   }
 
   // ---- TRUNCATE / DROP ingest-state reset (ADVICE r19) -------------------
