@@ -29,15 +29,21 @@ for neither), and two verdicts:
 Every run must also be `correct` with `failed: 0`. The exit status is 0
 when every run is correct, every bound holds and every `--claim` gain
 holds. `BENCHMARK.json` and `perfbench/` are only read, never written.
+
+After each workload's verdicts it also prints, not gated, each side's
+median of the per-statement `stmt.<name>.median_ms` lines `run.py`
+prints, to show which statements moved a metric.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STMT = re.compile(r"stmt\.(.+)\.median_ms (\S+) ms$")
 
 
 def export(rev, workdir):
@@ -55,8 +61,24 @@ def export(rev, workdir):
     return dest
 
 
+def stmt_medians(stdout):
+    """{statement: median ms} from a run's `stmt.<name>.median_ms` lines."""
+    return {m.group(1): float(m.group(2)) for m in map(STMT.match, stdout.splitlines()) if m}
+
+
+def stmt_table(base, change):
+    """(statement, base median, change median) over each side's runs'
+    statement medians; None where a side never ran the statement."""
+    def med(runs, name):
+        xs = [r[name] for r in runs if name in r]
+        return statistics.median(xs) if xs else None
+    names = sorted({n for r in base + change for n in r})
+    return [(n, med(base, n), med(change, n)) for n in names]
+
+
 def run_once(checkout, command, workload, seed, seconds, log):
-    """One benchmark run; its last JSON line (or None when it produced none)."""
+    """One benchmark run; its last JSON line (or None when it produced none),
+    with the run's statement medians under "stmt"."""
     cmd = command + ["--workload", workload, "--seed", str(seed),
                      "--seconds", str(seconds), "--trace", "0"]
     r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -64,7 +86,7 @@ def run_once(checkout, command, workload, seed, seconds, log):
     log.flush()
     for line in reversed(r.stdout.splitlines()):
         if line.startswith("{"):
-            return json.loads(line)
+            return dict(json.loads(line), stmt=stmt_medians(r.stdout))
     return None
 
 
@@ -164,6 +186,12 @@ def main():
                       f"{fmt(f'{x:.4g}' for x in r['base'])}  {fmt(f'{x:.4g}' for x in r['change'])}  "
                       f"{r['wins']}/{len(pairs)}  {r['rel']:+.1%}  {bound}  "
                       f"{'yes' if r['gain'] else 'no'}{' (claimed)' if claimed else ''}")
+            print(f"{w}: statement median_ms  base  change  median change (not gated)")
+            for name, b, c in stmt_table([r["stmt"] for r in runs["base"] if r],
+                                         [r["stmt"] for r in runs["change"] if r]):
+                rel = f"{c / b - 1:+.1%}" if b and c is not None else "-"
+                print(f"  {name}  {'-' if b is None else f'{b:.4g}'}  "
+                      f"{'-' if c is None else f'{c:.4g}'}  {rel}")
             print()
     print("PASS" if ok else "FAIL")
     return 0 if ok else 1

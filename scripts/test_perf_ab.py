@@ -91,5 +91,21 @@ class HigherIsBetter(unittest.TestCase):
         self.assertFalse(down["gain"])
 
 
+class Statements(unittest.TestCase):
+    def test_reads_only_the_statement_median_lines(self):
+        out = ("# workload ingest_mixed seed 1\n"
+               "stmt.by_cat.median_ms 247.5 ms\n"
+               "stmt.insert.median_ms 750 ms\n"
+               "insert_p50_ms 751 ms\n"
+               '{"correct": true}\n')
+        self.assertEqual(perf_ab.stmt_medians(out), {"by_cat": 247.5, "insert": 750.0})
+
+    def test_each_side_takes_the_median_over_its_runs(self):
+        base = [{"a": 10, "b": 1}, {"a": 30, "b": 3}, {"a": 20, "b": 2}]
+        change = [{"a": 5}, {"a": 7, "c": 9}]
+        self.assertEqual(perf_ab.stmt_table(base, change),
+                         [("a", 20, 6), ("b", 2, None), ("c", None, 9)])
+
+
 if __name__ == "__main__":
     unittest.main()

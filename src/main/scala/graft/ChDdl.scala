@@ -52,6 +52,10 @@ import org.apache.spark.sql.types._
   *     the table's DDL, the view re-registers as base ∪ one scan over
   *     the parts, and the table's MVs take the block.
   *
+  * A table or MV whose live parts fit in one open-cost unit per core
+  * (`spark.sql.files.openCostInBytes` / cores) reads as one partition,
+  * so a read, merge or rewrite of it plans no Exchange.
+  *
   * The CH type grammar maps per SURVEY §1.2 (unsigned widens, Nullable
   * is the nullability flag, LowCardinality is transparent). Statements
   * this scope doesn't cover (EXCHANGE, ALTER … MODIFY, …) return None
@@ -105,6 +109,9 @@ object ChDdl {
 
   private val gens = new java.util.concurrent.atomic.AtomicInteger()
 
+  /** A committed part: its dir and its data files' bytes. */
+  private final case class Part(dir: String, bytes: Long)
+
   /** One table's or MV's committed parts (SURVEY §1.1's MergeTree
     * parts), `Engine.scratch(spark, area, "<name>_g<n>")/b<i>` — the
     * only code here that names, writes or reads a part dir. A part goes
@@ -116,52 +123,73 @@ object ChDdl {
   private final class Parts(spark: SparkSession, area: String, name: String) {
     private val dir = Engine.scratch(spark, area, s"${name}_g${gens.incrementAndGet()}")
     private var committed = 0
-    @volatile private var live = Vector.empty[String]
+    @volatile private var live = Vector.empty[Part]
 
-    /** Write `df` as the next part and add it to the live ones; returns its dir. */
-    def append(df: DataFrame, partCols: Seq[String] = Nil): String = commit(df, partCols, keep = true)
+    /** Write `df` as the next part and add it to the live ones; returns
+      * it with the data files its commit listed. */
+    def append(df: DataFrame, partCols: Seq[String] = Nil): (Part, Seq[org.apache.hadoop.fs.FileStatus]) =
+      commit(df, partCols, keep = true)
 
     /** Write `df` as the next part and make it the only live one. */
     def replace(df: DataFrame, partCols: Seq[String] = Nil): Unit = commit(df, partCols, keep = false): Unit
 
-    private def commit(df: DataFrame, partCols: Seq[String], keep: Boolean): String = synchronized {
-      val part = s"$dir/b${committed + 1}"
+    private def commit(df: DataFrame, partCols: Seq[String], keep: Boolean)
+        : (Part, Seq[org.apache.hadoop.fs.FileStatus]) = synchronized {
+      val path = s"$dir/b${committed + 1}"
       val w = df.write.mode("overwrite")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(part)
+      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(path)
+      val files = dataFiles(path)
+      val part = Part(path, files.map(_.getLen).sum)
       committed += 1
       live = (if (keep) live else Vector.empty) :+ part
-      part
+      (part, files)
     }
 
     /** ONE scan over `parts` (default: the live ones), the writer's
       * schema pinned. Recursive lookup turns partition discovery off, so
       * `PARTITION BY` parts share the scan and an empty part reads as
-      * empty instead of failing schema inference. */
-    def scan(schema: StructType, parts: Seq[String] = live): DataFrame =
-      spark.read.schema(Engine.readBackSchema(schema))
-        .option("recursiveFileLookup", "true").parquet(parts: _*)
+      * empty instead of failing schema inference. Parts that hold no
+      * more than one `spark.sql.files.openCostInBytes` (Spark's cost of
+      * opening a file) per core read as one partition without a
+      * shuffle: that satisfies every required distribution, so an
+      * aggregate, sort or merge over a small table or MV plans no
+      * Exchange. Past about that size a CPU-heavy aggregate gains more
+      * from the cores than the exchanges cost (measured on 4 cores:
+      * break-even near 1 MB for an md5-per-row GROUP BY, near 2 MB
+      * for an AggInc merge). */
+    def scan(schema: StructType, parts: Seq[Part] = live): DataFrame = {
+      val df = spark.read.schema(Engine.readBackSchema(schema))
+        .option("recursiveFileLookup", "true").parquet(parts.map(_.dir): _*)
+      val oneTask = spark.sessionState.conf.filesOpenCostInBytes / spark.sparkContext.defaultParallelism
+      if (parts.map(_.bytes).sum <= oneTask) df.coalesce(1) else df
+    }
 
-    /** Rows in `part`, summed from the footers of its data files (in
-      * `k=v` partition dirs too, `__graft_part=…`); skips the `_SUCCESS`
-      * and `.crc` files Spark's listing skips. A committed part holds no
-      * hidden dirs.
+    /** Rows in a part, summed from the footers of its data `files`. */
+    def rows(files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
+      val conf = spark.sessionState.newHadoopConf()
+      files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
+
+    /** The data files under `path` (in `k=v` partition dirs too,
+      * `__graft_part=…`); skips the `_SUCCESS` and `.crc` files Spark's
+      * listing skips. A committed part holds no hidden dirs.
       * Walks with `listStatus`, not `listFiles`: a `LocatedFileStatus`
       * loads each file's permission, a forked `ls -ld` without libhadoop. */
-    def rows(part: String): Long = {
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(part)
-      val fs = root.getFileSystem(conf)
-      def count(dir: org.apache.hadoop.fs.Path): Long = fs.listStatus(dir).iterator.map { f =>
-        val name = f.getPath.getName
-        if (f.isDirectory) count(f.getPath)
-        else if (name.startsWith("_") || name.startsWith(".")) 0L
-        else {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try r.getRecordCount finally r.close()
+    private def dataFiles(path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(d).toSeq.flatMap { f =>
+          val name = f.getPath.getName
+          if (f.isDirectory) walk(f.getPath)
+          else if (name.startsWith("_") || name.startsWith(".")) Nil
+          else Seq(f)
         }
-      }.sum
-      count(root)
+      walk(root)
     }
   }
 
@@ -568,7 +596,7 @@ object ChDdl {
                       .agg(mergeExprs.head, mergeExprs.tail: _*)
                       .select(old.columns.map(col).toIndexedSeq: _*)) // declared order
                   case _ => // AppendInc
-                    st.parts.append(block)
+                    st.parts.append(block): Unit
                     st.parts.scan(block.schema).createOrReplaceTempView(name)
                 }
               } finally spark.catalog.dropTempView(dv): Unit
@@ -687,11 +715,11 @@ object ChDdl {
         // (3-5 near-empty files per insert). CH itself writes one part
         // per insert.
         val (laid, partCols) = layoutFor(aligned.coalesce(1), table)
-        val part = st.parts.append(laid, partCols)
+        val (part, files) = st.parts.append(laid, partCols)
         // The written row count comes from the new files' footers:
         // metadata only, no second plan execution (a count() beside the
         // write re-ran a nondeterministic INSERT…SELECT source).
-        val n = st.parts.rows(part)
+        val n = st.parts.rows(files)
         st.publish(aligned.schema)
         (n, st.parts.scan(aligned.schema, Seq(part)))
       }

@@ -167,9 +167,116 @@ class DdlMutationSpec extends AnyFunSuite {
       val files = spark.table("mvm_many").inputFiles
       assert(live.size == 1 && files.nonEmpty &&
         files.forall(f => new java.net.URI(f).getPath.startsWith(live.head + "/")), files.mkString(", "))
+      // a small table reads as one partition, so each rewrite writes one file
+      assert(files.size == 1, files.mkString(", "))
       // 3 rows × 100 updates, plus 75, 50 and 25 for the rows inserted on the way
       assert(rows("SELECT count(*), sum(v) FROM mvm_many") == Seq(Seq(6L, 450L)))
     } finally sql("DROP TABLE mvm_many")
+  }
+
+  // ---- small parts read as one partition --------------------------------
+
+  /** Runs `df`, then the nodes of its final (adaptive) physical plan. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => s +: walk(s.plan)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Jobs `body` runs, counted by a listener on its job group; a marker
+    * job in another group drains the listener queue before the count. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet(): Unit
+          case g if g == s"$group-marker" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener queue did not drain")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a small table and its AggInc MV read as one partition: no Exchange, 2 jobs per INSERT") {
+    val queries = Seq(
+      "SELECT count(*) FROM %s",
+      "SELECT cat, count(*) AS c, sum(v) AS s FROM %s GROUP BY cat ORDER BY cat",
+      "SELECT cat, c, s FROM %s_mv ORDER BY cat")
+    /** Create `t` and its AggInc MV, insert three blocks; the jobs per
+      * INSERT, the scan's partitions and each query's answer and plan. */
+    def build(t: String): (Seq[Int], Int, Seq[(Seq[Seq[Any]], Seq[org.apache.spark.sql.execution.SparkPlan])]) = {
+      sql(s"CREATE TABLE $t (cat String, v Int64) ENGINE = MergeTree ORDER BY cat")
+      sql(s"CREATE MATERIALIZED VIEW ${t}_mv AS SELECT cat, count(*) AS c, sum(v) AS s FROM $t GROUP BY cat")
+      assert(ChDdl.mvModeFor(s"${t}_mv").exists(_.startsWith("AggInc")))
+      val jobs = (1 to 3).map { i =>
+        jobsOf(insert(s"INSERT INTO $t VALUES ('a', $i), ('b', ${10 * i}), ('c$i', ${100 * i})"): Unit)
+      }
+      (jobs, spark.table(t).rdd.getNumPartitions,
+        queries.map(q => (rows(q.format(t)), finalPlan(sql(q.format(t))))))
+    }
+    def exchanges(plan: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      plan.filter(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
+    try {
+      val (jobs, partitions, small) = build("mvm_one_part")
+      // the part write and the MV write; no sampling or stage job
+      assert(jobs == Seq(2, 2, 2), jobs)
+      assert(partitions == 1)
+      small.zip(queries).foreach { case ((_, plan), q) =>
+        assert(exchanges(plan).isEmpty, s"$q:\n${plan.head.treeString}")
+      }
+      assert(small.head._1 == Seq(Seq(9L)))
+      val conf = "spark.sql.files.openCostInBytes"
+      val saved = spark.conf.getOption(conf)
+      spark.conf.set(conf, "1k")
+      val large = try build("mvm_many_part") finally saved match {
+        case Some(v) => spark.conf.set(conf, v)
+        case None => spark.conf.unset(conf)
+      }
+      // past one open-cost unit per core the parts keep a parallel scan, with the same answers
+      assert(large._2 > 1, large._2)
+      assert(large._3.map(_._1) == small.map(_._1))
+    } finally Seq("mvm_one_part_mv", "mvm_one_part", "mvm_many_part_mv", "mvm_many_part")
+      .foreach(t => sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("an INSERT into a table over an sf Parquet file leaves the base scan as it was") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val base = spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
+    base.createOrReplaceTempView("mvm_nation")
+    try {
+      assert(insert("INSERT INTO mvm_nation SELECT * FROM mvm_nation WHERE n_nationkey = 0") == 1L)
+      val plan = spark.table("mvm_nation").queryExecution.optimizedPlan
+      def sources(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        p.collect { case l: LogicalRelation => l.relation }
+          .collect { case r: HadoopFsRelation => r.location.rootPaths.map(_.getName) }.flatten
+      // one coalesce, over the parts only
+      val coalesced = plan.collect { case r @ Repartition(1, false, _) => sources(r) }
+      assert(coalesced.size == 1 && coalesced.head.nonEmpty && !coalesced.head.contains("nation.parquet"),
+        plan.treeString)
+      assert(sources(plan).contains("nation.parquet"), plan.treeString)
+      assert(spark.table("mvm_nation").rdd.getNumPartitions == base.rdd.getNumPartitions + 1)
+      assert(count("mvm_nation") == base.count() + 1)
+    } finally sql("DROP TABLE mvm_nation")
   }
 
   // ---- TRUNCATE / DROP ingest-state reset (ADVICE r19) -------------------
