@@ -7,8 +7,12 @@ Bench-regression mode: selfcheck.py --bench <bench.json>
 Compares a Bench run (sf0.1) against the committed per-query floor
 (BASELINE_FLOOR.json, the round-7 clean two-pass MIN). A query fails
 the gate if it exceeds max(2x floor, floor+0.5s) — the +0.5s absolute
-slack keeps sub-second floors from tripping on scheduler noise."""
-import duckdb, sys, json, glob, os, math
+slack keeps sub-second floors from tripping on scheduler noise.
+
+Each row's verdict line ends with its elapsed seconds per phase: the
+oracle query in DuckDB, the Parquet read of Verify's output, and the
+compare."""
+import duckdb, sys, json, glob, os, math, time
 import pyarrow.parquet as pq
 
 if len(sys.argv) > 1 and sys.argv[1] == "--bench":
@@ -49,18 +53,31 @@ for name, sql in sorted(oracle.items()):
     files = sorted(glob.glob(f"{out}/{name}/*.parquet"))
     if not files:
         print(f"FAIL {name}: no spark output"); bad.append(name); continue
+    clock, laps = [time.perf_counter()], {}
+
+    def lap(phase):
+        now = time.perf_counter()
+        laps[phase] = now - clock[0]
+        clock[0] = now
+
+    def took():
+        lap("compare")
+        return " [" + ", ".join(f"{p} {s:.2f} s" for p, s in laps.items()) + "]"
     try:
         rel = con.sql(sql)
         ocols = list(rel.columns)
         oarrow = rel.arrow()
         orows = [tuple(r[c] for c in ocols) for r in oarrow.to_pylist()]
     except Exception as e:
-        print(f"FAIL {name}: oracle error: {e}"); bad.append(name); continue
+        lap("oracle")
+        print(f"FAIL {name}: oracle error: {e}{took()}"); bad.append(name); continue
+    lap("oracle")
     import pyarrow as pa
     tbl = pa.concat_tables([pq.read_table(f) for f in files])
+    lap("parquet")
     scols = tbl.column_names
     if sorted(scols) != sorted(ocols):
-        print(f"FAIL {name}: cols spark={sorted(scols)} oracle={sorted(ocols)}")
+        print(f"FAIL {name}: cols spark={sorted(scols)} oracle={sorted(ocols)}{took()}")
         bad.append(name); continue
     # The driver's hash is type-sensitive (r02: DuckDB HUGEINT sums vs Spark
     # BIGINT hashed differently while values compared equal). Fail on
@@ -77,7 +94,7 @@ for name, sql in sorted(oracle.items()):
             or (pa.types.is_decimal(m[4]) and pa.types.is_integer(m[3]))]
     tmis = [m[:3] for m in tmis]
     if hard:
-        print(f"FAIL {name}: arrow type mismatch {hard}"); bad.append(name); continue
+        print(f"FAIL {name}: arrow type mismatch {hard}{took()}"); bad.append(name); continue
     for c, st, ot in tmis:
         print(f"  typewarn {name}.{c}: spark={st} oracle={ot}")
     srows = [tuple(r[c] for c in scols) for r in tbl.to_pylist()]
@@ -87,7 +104,7 @@ for name, sql in sorted(oracle.items()):
     srows = [tuple(r[i] for i in sidx) for r in srows]
     orows = [tuple(r[i] for i in oidx) for r in orows]
     if len(srows) != len(orows):
-        print(f"FAIL {name}: rows spark={len(srows)} oracle={len(orows)}")
+        print(f"FAIL {name}: rows spark={len(srows)} oracle={len(orows)}{took()}")
         bad.append(name); continue
 
     def norm(v):
@@ -107,10 +124,10 @@ for name, sql in sorted(oracle.items()):
             mismatch = (i, srow, orow); break
     if mismatch:
         i, srow, orow = mismatch
-        print(f"FAIL {name}: row {i}\n  spark : {srow}\n  oracle: {orow}")
+        print(f"FAIL {name}: row {i}{took()}\n  spark : {srow}\n  oracle: {orow}")
         bad.append(name)
     else:
-        print(f"ok   {name} ({len(srows)} rows)")
+        print(f"ok   {name} ({len(srows)} rows){took()}")
         ok.append(name)
 
 print(f"\n{len(ok)} ok, {len(bad)} fail" + (f": {bad}" if bad else ""))

@@ -8,53 +8,50 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPl
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types._
 
-/** ClickHouse TEXT DDL for the wire doors (VERDICT r18 next #3, r19
-  * next #1/#2): the statements a CH init script
-  * (`/docker-entrypoint-initdb.d`, reference `Dockerfile:190`)
-  * contains —
+/** ClickHouse TEXT DDL for the wire doors: the statements a CH init
+  * script (`/docker-entrypoint-initdb.d`, reference `Dockerfile:190`)
+  * contains, over ONE record per table name ([[Table]]). As CH makes an
+  * MV a trigger over an inner table, an MV here is a table with a
+  * maintenance rule, so INSERT, TRUNCATE and ALTER on it act on its
+  * stored parts.
   *
-  *   - `CREATE TABLE t (cols…) ENGINE = MergeTree ORDER BY … [PARTITION
-  *     BY …] [SAMPLE BY …]` → an empty typed temp view + recorded
-  *     layout metadata; INSERTs route through the shared ingest path,
-  *     which honors the layout (sort-within-partitions by the ORDER BY
-  *     key, directory partitions by the PARTITION BY expression — the
-  *     K10 writer semantics, reference `Dockerfile:228`).
-  *   - `ENGINE = ReplacingMergeTree(ver)` additionally registers the
-  *     FINAL metadata so `SELECT … FROM t FINAL` works ([[ChSql]] b6).
-  *   - `CREATE MATERIALIZED VIEW mv AS SELECT …` → a REAL materialized
-  *     target (VERDICT r19 next #1 — the lazy re-bound view was the
-  *     round's one `weak` mark): the result lives in the MV's own
-  *     [[Parts]] and every MV read scans THOSE, never the source.
-  *     Maintenance is insert-driven like CH's incremental MVs (J1): a
-  *     single-source `GROUP BY` of count/sum/min/max merges the inserted
-  *     block's partial aggregate into the stored target (reads only
-  *     target + block — the AggregatingMergeTree collapse shape); a
-  *     single-source projection/filter appends the transformed block as
-  *     a part (CH's exact per-block semantics); every other shape falls
-  *     back to recompute-on-insert (eager view maintenance — still
-  *     materialized, the recompute happens at write time, not per
-  *     read). A merge or recompute replaces the MV's parts. All three
-  *     are definitionally equal to a full recompute — the J1
+  *   - `CREATE TABLE [IF NOT EXISTS] t (cols…) ENGINE = MergeTree ORDER
+  *     BY … [PARTITION BY …] [SAMPLE BY …]` → a record with the layout
+  *     INSERTs honor (sort within partitions by the ORDER BY key,
+  *     directory partitions by the PARTITION BY expression — the K10
+  *     writer semantics, reference `Dockerfile:228`).
+  *     `ReplacingMergeTree(ver)` also registers the FINAL metadata
+  *     ([[ChSql]] b6).
+  *   - `CREATE MATERIALIZED VIEW [IF NOT EXISTS] mv AS SELECT …` → a
+  *     record whose parts hold the SELECT's result; every MV read scans
+  *     THOSE, never the source. Maintenance is insert-driven like CH's
+  *     incremental MVs (J1): a single-source `GROUP BY` of
+  *     count/sum/min/max merges the inserted block's partial aggregate
+  *     into the stored target (reads only target + block — the
+  *     AggregatingMergeTree collapse shape); a single-source
+  *     projection/filter appends the transformed block as a part (CH's
+  *     exact per-block semantics); every other shape recomputes at
+  *     write time, not per read. A merge or recompute replaces the MV's
+  *     parts. All three equal a full recompute — the J1
   *     batch-equivalence property the k24/k25 oracle rows certify.
-  *   - `ALTER TABLE … ADD COLUMN / DELETE WHERE / UPDATE … WHERE`
-  *     (VERDICT r19 next #2) → the A15 mergeSchema and K11
-  *     mutation-as-rewrite semantics. Like CH's mutations they rewrite
-  *     the table's parts: the new content is the only part of a fresh
-  *     [[Parts]] generation, so the view stays one scan however many
-  *     ALTERs ran. Only the MVs that read the table recompute.
-  *   - `DROP TABLE/VIEW [IF EXISTS] t`, `TRUNCATE TABLE t`,
-  *     `SHOW CREATE TABLE t`. TRUNCATE rewrites the table to no rows
-  *     the way ALTER does; DROP forgets its parts, so a re-CREATE
-  *     starts clean (ADVICE r19: retained parts resurrected truncated
-  *     rows on the next insert).
-  *   - `INSERT INTO t …` ([[ingest]], every door's INSERT route): the
-  *     rows append as one part of the table's [[Parts]], laid out per
-  *     the table's DDL, the view re-registers as base ∪ one scan over
-  *     the parts, and the table's MVs take the block.
+  *   - A CREATE replaces whatever record the name held, so a re-CREATE
+  *     starts clean; with `IF NOT EXISTS` an existing name is kept.
+  *     `DROP TABLE/VIEW [IF EXISTS] t` removes the record.
+  *   - `ALTER TABLE … ADD COLUMN / DELETE WHERE / UPDATE … WHERE` (the
+  *     A15 mergeSchema and K11 mutation-as-rewrite semantics) and
+  *     `TRUNCATE TABLE t` rewrite the table's parts like CH's
+  *     mutations: the new content, read under the record's lock,
+  *     becomes the only live part, so the view stays one scan however
+  *     many ALTERs ran. Only the MVs that read the table recompute.
+  *   - `INSERT INTO t …` ([[ingest]], every door's INSERT route) appends
+  *     one part; the MVs that read the table take the block.
+  *     `SHOW CREATE TABLE t` prints the record's CREATE.
   *
-  * A table or MV whose live parts fit in one open-cost unit per core
-  * (`spark.sql.files.openCostInBytes` / cores) reads as one partition,
-  * so a read, merge or rewrite of it plans no Exchange.
+  * Every write ends in the record's one `publish`: the view becomes
+  * base ∪ one scan over the live parts, read as one partition while
+  * they fit in one open-cost unit per core
+  * (`spark.sql.files.openCostInBytes` / cores), so a read, merge or
+  * rewrite of a small table plans no Exchange.
   *
   * The CH type grammar maps per SURVEY §1.2 (unsigned widens, Nullable
   * is the nullability flag, LowCardinality is transparent). Statements
@@ -72,9 +69,6 @@ object ChDdl {
       engineArgs: String,
       sampleBy: Option[String])
 
-  private val tableDefs =
-    new java.util.concurrent.ConcurrentHashMap[String, TableDef]()
-
   /** How an MV maintains itself when a source table takes an insert. */
   private sealed trait MvMode
   /** Merge the block's partial aggregate into the stored target:
@@ -87,23 +81,31 @@ object ChDdl {
   /** Recompute the full SELECT into the target (eager maintenance). */
   private case object Recompute extends MvMode
 
-  private final case class MvState(select: String, sources: Set[String],
-      mode: MvMode, parts: Parts)
+  /** An MV's rule: its SELECT, the tables it reads, its mode, and its
+    * creation number, the order [[maintain]] visits MVs in so a chain
+    * sees its upstream fresh. */
+  private final case class MvRule(select: String, sources: Set[String], mode: MvMode, seq: Int)
 
-  private val mvStates =
-    new java.util.concurrent.ConcurrentHashMap[String, MvState]()
-  // registration order matters for MV-on-MV chains
-  private val mvOrder = new java.util.concurrent.CopyOnWriteArrayList[String]()
+  /** Every name this object holds, lower-cased, to its one record. */
+  private val tables = new java.util.concurrent.ConcurrentHashMap[String, Table]()
+  private val mvSeq = new java.util.concurrent.atomic.AtomicInteger()
   private val mvLock = new Object
 
-  def tableDef(name: String): Option[TableDef] =
-    Option(tableDefs.get(name.toLowerCase))
+  private def table(name: String): Option[Table] = Option(tables.get(name.toLowerCase))
+
+  /** The record `name` holds; a view with none (an sf table at its
+    * first write) gets one, with that view as its base. */
+  private def record(spark: SparkSession, name: String): Table =
+    tables.computeIfAbsent(name.toLowerCase,
+      _ => new Table(spark, name, None, Some(spark.table(name)), None))
+
+  private def exists(spark: SparkSession, name: String): Boolean =
+    tables.containsKey(name.toLowerCase) || spark.catalog.tableExists(name)
 
   /** The engine `system.tables` reports: the declared one for a
     * CREATE TABLE, `MaterializedView` for an MV, None otherwise. */
   def engineName(name: String): Option[String] =
-    tableDef(name).map(_.engine)
-      .orElse(Option(mvStates.get(name.toLowerCase)).map(_ => "MaterializedView"))
+    table(name).flatMap(t => t.ddl.map(_.engine).orElse(t.mv.map(_ => "MaterializedView")))
 
   // ---- committed parts ----------------------------------------------------
 
@@ -117,9 +119,10 @@ object ChDdl {
     * only code here that names, writes or reads a part dir. A part goes
     * live only after its write commits: a failed write does not advance
     * `i`, so nothing reads its dir and the next write overwrites it. No
-    * write touches a live part, so a write may read them; and every
-    * Parts takes a fresh `g<n>`, since after a DDL reset the current
-    * view may still read the previous generation's files. */
+    * write touches a live part, so a write may read them, and a part a
+    * `replace` retired keeps its dir for readers that still scan it.
+    * Every Parts takes a fresh `g<n>`, since after a re-CREATE the
+    * current view may still read the previous record's files. */
   private final class Parts(spark: SparkSession, area: String, name: String) {
     private val dir = Engine.scratch(spark, area, s"${name}_g${gens.incrementAndGet()}")
     private var committed = 0
@@ -156,8 +159,11 @@ object ChDdl {
       * Exchange. Past about that size a CPU-heavy aggregate gains more
       * from the cores than the exchanges cost (measured on 4 cores:
       * break-even near 1 MB for an md5-per-row GROUP BY, near 2 MB
-      * for an AggInc merge). */
-    def scan(schema: StructType, parts: Seq[Part] = live): DataFrame = {
+      * for an AggInc merge). No parts (a new table) read as no rows of
+      * `schema` as declared. */
+    def scan(schema: StructType, parts: Seq[Part] = live): DataFrame = if (parts.isEmpty) {
+      empty(spark, schema)
+    } else {
       val df = spark.read.schema(Engine.readBackSchema(schema))
         .option("recursiveFileLookup", "true").parquet(parts.map(_.dir): _*)
       val oneTask = spark.sessionState.conf.filesOpenCostInBytes / spark.sparkContext.defaultParallelism
@@ -193,10 +199,63 @@ object ChDdl {
     }
   }
 
+  /** What a name is: a table with its DDL if CREATE TABLE made it, its
+    * `base` if it is a view that existed before its first write, its
+    * parts (`Engine.scratch(spark, "http", "ingest_<t>_g<n>")`, an MV's
+    * `(…, "ddl", "mv_<name>_g<n>")`), and an MV's rule. Every write
+    * runs under the record's lock and ends in [[publish]]. */
+  private final class Table(spark: SparkSession, val name: String,
+      @volatile var ddl: Option[TableDef], private var base: Option[DataFrame], val mv: Option[MvRule]) {
+    val parts =
+      if (mv.isDefined) new Parts(spark, "ddl", s"mv_${name.toLowerCase}")
+      else new Parts(spark, "http", s"ingest_${name.toLowerCase}")
+
+    /** Write `df` as the next part; returns it with its data files. */
+    def append(df: DataFrame): (Part, Seq[org.apache.hadoop.fs.FileStatus]) = synchronized {
+      val (laid, partCols) = layout(df)
+      val written = parts.append(laid, partCols)
+      publish(df.schema)
+      written
+    }
+
+    /** Make `df` the whole table: its only live part, over no base. A
+      * failed write changes nothing. */
+    def replace(df: DataFrame): Unit = synchronized {
+      val (laid, partCols) = layout(df)
+      parts.replace(laid, partCols)
+      base = None
+      publish(df.schema)
+    }
+
+    /** Point the view at base ∪ ONE scan over the live parts. The
+      * layout's shadow partition column lives only in the directory
+      * names, which the scan does not read. */
+    def publish(schema: StructType): Unit = synchronized {
+      val scan = parts.scan(schema)
+      base.fold(scan)(_.unionByName(scan)).createOrReplaceTempView(name)
+    }
+
+    /** The K10 layout of a DDL table: sort within partitions by the
+      * ORDER BY key; directory-partition by the PARTITION BY expression
+      * via a shadow column (CH's partition expression becomes the
+      * directory key, reference `Dockerfile:228`). Returns the frame to
+      * write and the partition columns to pass to the writer. */
+    private def layout(df: DataFrame): (DataFrame, Seq[String]) = ddl match {
+      case None => (df, Nil)
+      case Some(d) =>
+        val sorted = if (d.orderBy.nonEmpty) df.sortWithinPartitions(d.orderBy.map(col): _*) else df
+        d.partitionBy match {
+          // CH spellings (toYYYYMM…) resolve through the ChNames registry
+          case Some(p) => (sorted.withColumn("__graft_part", expr(p)), Seq("__graft_part"))
+          case None => (sorted, Nil)
+        }
+    }
+  }
+
   /** The maintenance mode an MV classified into ("AggInc…",
     * "AppendInc…", "Recompute") — spec pinning only. */
   private[graft] def mvModeFor(name: String): Option[String] =
-    Option(mvStates.get(name.toLowerCase)).map(_.mode.toString)
+    table(name).flatMap(_.mv).map(_.mode.toString)
 
   /** CH type name → Spark type (SURVEY §1.2). Case matters in CH type
     * names, but accept any case; nullable via Nullable(…) wrapper. */
@@ -269,12 +328,12 @@ object ChDdl {
   }
 
   private val CreateTableRe =
-    ("(?is)^\\s*CREATE\\s+TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*" +
+    ("(?is)^\\s*CREATE\\s+TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*" +
       "\\((.*)\\)\\s*ENGINE\\s*=\\s*([A-Za-z]+)(?:\\(([^)]*)\\))?\\s*(.*)$").r
   // decorations between the name and AS (ENGINE/ORDER BY/POPULATE/TO)
   // are storage hints in this model and skip via the lazy middle group
   private val CreateMvRe =
-    ("(?is)^\\s*CREATE\\s+MATERIALIZED\\s+VIEW\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?" +
+    ("(?is)^\\s*CREATE\\s+MATERIALIZED\\s+VIEW\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
       "`?([A-Za-z_][A-Za-z0-9_]*)`?\\b.*?\\bAS\\s+((?:SELECT|WITH)\\b.*)$").r
   private val DropRe =
     "(?is)^\\s*DROP\\s+(?:TABLE|VIEW)\\s+(IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*$".r
@@ -339,75 +398,68 @@ object ChDdl {
   def execute(spark: SparkSession, text: String): Option[DataFrame] = {
     val t = text.trim.stripSuffix(";")
     CreateTableRe.findFirstMatchIn(t).map { m =>
-      val name = m.group(1)
-      val engine = m.group(3)
-      val engineArgs = Option(m.group(4)).map(_.trim).getOrElse("")
-      val fields = splitTop(m.group(2)).map { colDef =>
-        // "name Type [DEFAULT …]" — take the first two tokens; CODEC/
-        // DEFAULT/COMMENT decorations are storage hints, dropped
-        val parts = colDef.trim.split("\\s+", 3)
-        require(parts.length >= 2, s"CREATE TABLE: bad column def '$colDef'")
-        val (dt, nullable) = chType(parts(1))
-        StructField(parts(0).replace("`", ""), dt, nullable)
+      val name = m.group(2)
+      if (m.group(1) == null || !exists(spark, name)) {
+        val engine = m.group(4)
+        val engineArgs = Option(m.group(5)).map(_.trim).getOrElse("")
+        val fields = splitTop(m.group(3)).map { colDef =>
+          // "name Type [DEFAULT …]" — take the first two tokens; CODEC/
+          // DEFAULT/COMMENT decorations are storage hints, dropped
+          val parts = colDef.trim.split("\\s+", 3)
+          require(parts.length >= 2, s"CREATE TABLE: bad column def '$colDef'")
+          val (dt, nullable) = chType(parts(1))
+          StructField(parts(0).replace("`", ""), dt, nullable)
+        }
+        val schema = StructType(fields)
+        val cl = clauses(m.group(6))
+        val orderBy = cl.get("ORDER BY").map(stripParens).map(splitTop).getOrElse(Nil)
+        val partitionBy = cl.get("PARTITION BY").map(stripParens).filter(_.nonEmpty)
+        val sampleBy = cl.get("SAMPLE BY").map(stripParens)
+        // the name's FINAL/SAMPLE metadata is the new engine's alone
+        ChSql.forget(name)
+        // ReplacingMergeTree(ver): FINAL reads collapse by the sorting key
+        if (engine.equalsIgnoreCase("ReplacingMergeTree") && engineArgs.nonEmpty)
+          ChSql.registerFinal(name, orderBy, engineArgs.split(",").head.trim)
+        sampleBy.foreach(k => ChSql.registerSample(name, k))
+        val rec = new Table(spark, name,
+          Some(TableDef(name, schema, orderBy, partitionBy, engine, engineArgs, sampleBy)), None, None)
+        tables.put(name.toLowerCase, rec)
+        rec.publish(schema)
       }
-      val schema = StructType(fields)
-      val cl = clauses(m.group(5))
-      val orderBy = cl.get("ORDER BY").map(stripParens).map(splitTop).getOrElse(Nil)
-      val partitionBy = cl.get("PARTITION BY").map(stripParens).filter(_.nonEmpty)
-      val sampleBy = cl.get("SAMPLE BY").map(stripParens)
-      tableDefs.put(name.toLowerCase,
-        TableDef(name, schema, orderBy, partitionBy, engine, engineArgs, sampleBy))
-      // a re-CREATE (e.g. DROP + CREATE with a new schema) must not
-      // re-union pre-DDL parts into the fresh table
-      Ingest.reset(name)
-      empty(spark, schema).createOrReplaceTempView(name)
-      // ReplacingMergeTree(ver): FINAL reads collapse by the sorting key
-      if (engine.equalsIgnoreCase("ReplacingMergeTree") && engineArgs.nonEmpty)
-        ChSql.registerFinal(name, orderBy, engineArgs.split(",").head.trim)
-      sampleBy.foreach(k => ChSql.registerSample(name, k))
       spark.emptyDataFrame
     }.orElse(CreateMvRe.findFirstMatchIn(t).map { m =>
-      createMv(spark, m.group(1), m.group(2))
+      if (m.group(1) == null || !exists(spark, m.group(2))) createMv(spark, m.group(2), m.group(3))
       spark.emptyDataFrame
     }).orElse(DropRe.findFirstMatchIn(t).map { m =>
       val name = m.group(2)
       val existed = spark.catalog.dropTempView(name)
       require(existed || m.group(1) != null, s"DROP: no such table/view '$name'")
-      tableDefs.remove(name.toLowerCase)
+      tables.remove(name.toLowerCase)
       ChSql.forget(name)
-      Ingest.reset(name)
-      if (mvStates.remove(name.toLowerCase) != null) mvOrder.remove(name.toLowerCase): Unit
       spark.emptyDataFrame
     }).orElse(TruncateRe.findFirstMatchIn(t).map { m =>
-      val name = m.group(1)
-      val d = tableDefs.get(name.toLowerCase)
-      require(d != null, s"TRUNCATE: '$name' is not a DDL-created table")
-      rebase(spark, name, empty(spark, d.schema))
+      rebase(spark, m.group(1))((_, cur) => Some(empty(spark, cur.schema)))
     }).orElse(AlterAddColRe.findFirstMatchIn(t).map { m =>
       val (tbl, colName, typeStr) = (m.group(1), m.group(3), m.group(4))
-      val cur = spark.table(tbl)
-      if (cur.columns.contains(colName)) {
-        require(m.group(2) != null, s"ALTER: column '$colName' already exists in '$tbl'")
-        spark.emptyDataFrame
-      } else {
-        val (dt, nullable) = chType(typeStr)
-        val d = Option(m.group(5)).map(_.trim).getOrElse(typeDefault(dt, nullable))
-        Option(tableDefs.get(tbl.toLowerCase)).foreach { td =>
-          tableDefs.put(tbl.toLowerCase,
-            td.copy(schema = StructType(td.schema.fields :+ StructField(colName, dt, nullable))))
+      rebase(spark, tbl) { (rec, cur) =>
+        if (cur.columns.contains(colName)) {
+          require(m.group(2) != null, s"ALTER: column '$colName' already exists in '$tbl'")
+          None
+        } else {
+          val (dt, nullable) = chType(typeStr)
+          val d = Option(m.group(5)).map(_.trim).getOrElse(typeDefault(dt, nullable))
+          rec.ddl = rec.ddl.map(td => td.copy(schema = td.schema.add(StructField(colName, dt, nullable))))
+          // A15 mergeSchema semantics: existing rows read the default
+          Some(cur.withColumn(colName, expr(d).cast(dt)))
         }
-        // A15 mergeSchema semantics: existing rows read the default
-        rebase(spark, tbl, cur.withColumn(colName, expr(d).cast(dt)))
       }
     }).orElse(AlterDeleteRe.findFirstMatchIn(t).map { m =>
-      val (tbl, cond) = (m.group(1), m.group(2).trim)
       // K11 mutation-as-rewrite: keep rows where the predicate is
       // false OR NULL (CH deletes only rows where it evaluates true)
-      rebase(spark, tbl, spark.table(tbl).where(F.not(F.coalesce(expr(cond), F.lit(false)))))
+      rebase(spark, m.group(1))((_, cur) =>
+        Some(cur.where(F.not(F.coalesce(expr(m.group(2).trim), F.lit(false))))))
     }).orElse(AlterUpdateRe.findFirstMatchIn(t).map { m =>
-      val (tbl, cond) = (m.group(1), m.group(3).trim)
-      val df = spark.table(tbl)
-      val hit = F.coalesce(expr(cond), F.lit(false))
+      val hit = F.coalesce(expr(m.group(3).trim), F.lit(false))
       val assigns = splitTop(m.group(2)).map { a =>
         val Array(c, e) = a.split("=", 2)
         c.trim.replace("`", "") -> e.trim
@@ -415,40 +467,40 @@ object ChDdl {
       // ONE select: every assignment and the predicate evaluate against
       // the ORIGINAL row (CH mutation semantics) — sequential
       // withColumn would let `k = v, v = k` see each other's updates
-      rebase(spark, tbl, df.select(df.columns.toIndexedSeq.map { c =>
+      rebase(spark, m.group(1))((_, cur) => Some(cur.select(cur.columns.toIndexedSeq.map { c =>
         assigns.get(c) match {
           case Some(e) =>
-            F.when(hit, expr(e).cast(df.schema(c).dataType)).otherwise(col(c)).as(c)
+            F.when(hit, expr(e).cast(cur.schema(c).dataType)).otherwise(col(c)).as(c)
           case None => col(c)
         }
-      }: _*))
+      }: _*)))
     }).orElse(ShowCreateRe.findFirstMatchIn(t).map { m =>
       import spark.implicits._
       val name = m.group(1)
-      val d = tableDefs.get(name.toLowerCase)
-      val stmt =
-        if (d != null) {
-          val cols = d.schema.fields.map(f =>
-            s"`${f.name}` ${chTypeName(f)}").mkString(", ")
-          s"CREATE TABLE $name ($cols) ENGINE = ${d.engine}" +
-            (if (d.engineArgs.nonEmpty) s"(${d.engineArgs})" else "") +
-            (if (d.orderBy.nonEmpty) s" ORDER BY (${d.orderBy.mkString(", ")})" else "") +
-            d.partitionBy.map(p => s" PARTITION BY $p").getOrElse("") +
-            d.sampleBy.map(k => s" SAMPLE BY $k").getOrElse("")
-        } else {
-          val mv = mvStates.get(name.toLowerCase)
-          if (mv != null) s"CREATE MATERIALIZED VIEW $name AS ${mv.select}"
-          else throw new IllegalArgumentException(s"SHOW CREATE TABLE: unknown table '$name'")
-        }
+      val rec = table(name).getOrElse(
+        throw new IllegalArgumentException(s"SHOW CREATE TABLE: unknown table '$name'"))
+      val stmt = rec.ddl.map { d =>
+        val cols = d.schema.fields.map(f => s"`${f.name}` ${chTypeName(f)}").mkString(", ")
+        s"CREATE TABLE $name ($cols) ENGINE = ${d.engine}" +
+          (if (d.engineArgs.nonEmpty) s"(${d.engineArgs})" else "") +
+          (if (d.orderBy.nonEmpty) s" ORDER BY (${d.orderBy.mkString(", ")})" else "") +
+          d.partitionBy.map(p => s" PARTITION BY $p").getOrElse("") +
+          d.sampleBy.map(k => s" SAMPLE BY $k").getOrElse("")
+      }.orElse(rec.mv.map(r => s"CREATE MATERIALIZED VIEW $name AS ${r.select}")).getOrElse(
+        throw new IllegalArgumentException(s"SHOW CREATE TABLE: '$name' has no CREATE statement"))
       Seq(stmt).toDF("statement")
     })
   }
 
-  /** Make `df` the whole of `table` (TRUNCATE, ALTER): rewrite its
-    * parts, then recompute the MVs that read it. */
-  private def rebase(spark: SparkSession, table: String, df: DataFrame): DataFrame = {
-    Ingest.replace(spark, table, df)
-    maintain(spark, table, None)
+  /** Rewrite `name` (TRUNCATE, ALTER) under its record's lock: `next`
+    * takes the record and the table's rows read under that lock, and
+    * its answer, if any, becomes the table's only part; then the MVs
+    * that read the table recompute. */
+  private def rebase(spark: SparkSession, name: String)(
+      next: (Table, DataFrame) => Option[DataFrame]): DataFrame = {
+    val rec = record(spark, name)
+    if (rec.synchronized(next(rec, spark.table(name)).map(rec.replace).isDefined))
+      maintain(spark, name, None)
     spark.emptyDataFrame
   }
 
@@ -528,6 +580,9 @@ object ChDdl {
     }
   }
 
+  /** Put a new MV record whose only part is the SELECT's result —
+    * reads hit the parts, never the defining SELECT. A failed write
+    * leaves the name as it was. */
   private def createMv(spark: SparkSession, name: String, select: String): Unit =
     mvLock.synchronized {
       val df = ChSql.sql(spark, select)
@@ -536,20 +591,12 @@ object ChDdl {
         case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
           u.multipartIdentifier.last.toLowerCase
       }.toSet
-      val st = MvState(select, sources, classify(sources, df),
-        new Parts(spark, "ddl", s"mv_${name.toLowerCase}"))
-      mvStates.put(name.toLowerCase, st)
-      mvOrder.remove(name.toLowerCase): Unit // re-CREATE keeps one enrollment
-      mvOrder.add(name.toLowerCase): Unit
-      materialize(spark, name, st, df)
+      val mv = new Table(spark, name, None, None,
+        Some(MvRule(select, sources, classify(sources, df), mvSeq.incrementAndGet())))
+      mv.replace(df)
+      ChSql.forget(name)
+      tables.put(name.toLowerCase, mv): Unit
     }
-
-  /** Replace the MV's parts with `df` and point its view at them —
-    * reads hit the parts, never the defining SELECT. */
-  private def materialize(spark: SparkSession, name: String, st: MvState, df: DataFrame): Unit = {
-    st.parts.replace(df)
-    st.parts.scan(df.schema).createOrReplaceTempView(name)
-  }
 
   /** Substitute the MV's single source table with the delta view in
     * the SELECT text (classification guarantees a lone `FROM src`). */
@@ -566,23 +613,24 @@ object ChDdl {
     * AppendInc MVs take it (CH's incremental-MV contract). Every other
     * MV visited, and every one after a TRUNCATE or ALTER (None),
     * recomputes its SELECT — a chain hop against the upstream MV's
-    * materialized target. Both equal a full recompute (J1). */
+    * materialized target. Both equal a full recompute (J1). Each MV
+    * reads and writes its own parts under its record's lock. */
   private def maintain(spark: SparkSession, table: String, delta: Option[DataFrame]): Unit =
     mvLock.synchronized {
+      import scala.jdk.CollectionConverters._
       val src = table.toLowerCase
       var changed = Set(src)
-      mvOrder.forEach { name =>
-        val st = mvStates.get(name)
-        if (st != null && st.sources.intersect(changed).nonEmpty) {
-          (st.mode, delta) match {
+      tables.values.asScala.toSeq.flatMap(t => t.mv.map(t -> _)).sortBy(_._2.seq).foreach {
+        case (mv, rule) if rule.sources.intersect(changed).nonEmpty =>
+          mv.synchronized((rule.mode, delta) match {
             case (AggInc(`src`, _, _) | AppendInc(`src`), Some(d)) =>
               val dv = s"__graft_mv_delta_${deltaSeq.incrementAndGet()}"
               d.createOrReplaceTempView(dv)
               try {
-                val block = ChSql.sql(spark, substituteSource(st.select, src, dv))
-                st.mode match {
+                val block = ChSql.sql(spark, substituteSource(rule.select, src, dv))
+                rule.mode match {
                   case AggInc(_, keyCols, aggs) =>
-                    val old = spark.table(name)
+                    val old = spark.table(mv.name)
                     val mergeExprs = aggs.map { case (alias, fn) =>
                       val dt = old.schema(alias).dataType
                       (fn match {
@@ -591,44 +639,22 @@ object ChDdl {
                         case _     => F.max(col(alias))
                       }).cast(dt).as(alias)
                     }
-                    materialize(spark, name, st, old.unionByName(block)
+                    mv.replace(old.unionByName(block)
                       .groupBy(keyCols.map(col): _*)
                       .agg(mergeExprs.head, mergeExprs.tail: _*)
                       .select(old.columns.map(col).toIndexedSeq: _*)) // declared order
-                  case _ => // AppendInc
-                    st.parts.append(block): Unit
-                    st.parts.scan(block.schema).createOrReplaceTempView(name)
+                  case _ => mv.append(block): Unit // AppendInc
                 }
               } finally spark.catalog.dropTempView(dv): Unit
             case _ =>
-              materialize(spark, name, st, ChSql.sql(spark, st.select))
-          }
-          changed += name
-        }
+              mv.replace(ChSql.sql(spark, rule.select))
+          })
+          changed += mv.name.toLowerCase
+        case _ =>
       }
     }
 
   // ---- INSERT ingest ------------------------------------------------------
-
-  /** Layout-aware ingest write (the K10 semantics for DDL-created
-    * tables): sort within partitions by the ORDER BY key; directory-
-    * partition by the PARTITION BY expression via a shadow column
-    * (CH's partition expression becomes the directory key, reference
-    * `Dockerfile:228`). Returns the frame to append and the
-    * partition column names to pass to the writer. */
-  private def layoutFor(df: DataFrame, table: String): (DataFrame, Seq[String]) =
-    tableDef(table) match {
-      case None => (df, Nil)
-      case Some(d) =>
-        val base = if (d.orderBy.nonEmpty)
-          df.sortWithinPartitions(d.orderBy.map(col): _*) else df
-        d.partitionBy match {
-          case Some(p) =>
-            // CH spellings (toYYYYMM…) resolve through the ChNames registry
-            (base.withColumn("__graft_part", expr(p)), Seq("__graft_part"))
-          case None => (base, Nil)
-        }
-    }
 
   /** `INSERT INTO t [(cols)] FORMAT fmt\ndata…`,
     * `INSERT INTO t [(cols)] VALUES (…),(…)`, or
@@ -648,80 +674,48 @@ object ChDdl {
   def ingest(spark: SparkSession, text: String): Option[Long] =
     InsertRe.findFirstMatchIn(text).map(m => Ingest.insert(spark, m))
 
-  /** The ingest path: a table is its base ∪ ONE scan over the live
-    * parts of its [[Parts]] (`Engine.scratch(spark, "http",
-    * "ingest_<table>_g<n>")/b<i>`). An INSERT appends one part, like a
-    * MergeTree part, and re-registers the view: a temp view snapshots
-    * its file listing. The base is the view at FIRST insert;
-    * re-registering the view externally afterwards (e.g. `registerAll`
-    * with a different sf dir) resets nothing here — one catalog per
-    * process. CREATE and DROP [[reset]] the state; TRUNCATE and ALTER
-    * [[replace]] it. */
+  /** The INSERT path: the rows append as one part of the record the
+    * name holds (an MV's too, as CH forwards an INSERT to an MV's inner
+    * table), like a MergeTree part, and the view re-registers: a temp
+    * view snapshots its file listing. A view without a record keeps
+    * itself as its record's base; re-registering it externally
+    * afterwards (e.g. `registerAll` with a different sf dir) resets
+    * nothing here — one catalog per process. */
   private object Ingest {
-    private final class State(spark: SparkSession, table: String, val orig: DataFrame) {
-      val parts = new Parts(spark, "http", s"ingest_${table.toLowerCase}")
-      /** The layout's shadow partition column lives only in the
-        * directory names, which the scan does not read. */
-      def publish(schema: StructType): Unit =
-        orig.unionByName(parts.scan(schema)).createOrReplaceTempView(table)
-    }
-    private val reg = new java.util.concurrent.ConcurrentHashMap[String, State]()
-
-    def reset(table: String): Unit = reg.remove(table.toLowerCase): Unit
-
-    /** Make `df` the whole of `table`: the only part, laid out per the
-      * DDL, of a fresh generation over an empty base. A failed write
-      * changes nothing. The old generation's files stay until JVM
-      * exit: a reader may still scan them. */
-    def replace(spark: SparkSession, table: String, df: DataFrame): Unit = {
-      val st = new State(spark, table, empty(spark, df.schema))
-      val (laid, partCols) = layoutFor(df, table)
-      st.parts.replace(laid, partCols)
-      st.publish(df.schema)
-      reg.put(table.toLowerCase, st): Unit
-    }
-
     def insert(spark: SparkSession, m: scala.util.matching.Regex.Match): Long = {
       val table = m.group(1)
-      val target = spark.table(table) // unknown table → AnalysisException → CH code 60
-      val schema = target.schema
-      val cols: Seq[String] = Option(m.group(2)) match {
-        case Some(list) => list.split(",").map(_.trim.replace("`", "")).toSeq
-        case None       => schema.fieldNames.toSeq
-      }
-      cols.foreach(c => require(schema.fieldNames.contains(c),
-        s"INSERT column '$c' not in table '$table'"))
-      val sub = StructType(cols.map(c => schema(schema.fieldIndex(c))))
-      val parsed = (Option(m.group(3)), Option(m.group(5)), Option(m.group(6))) match {
-        case (Some(fmt), _, _) => parseData(spark, sub, fmt, Option(m.group(4)).getOrElse(""))
-        case (_, Some(tail), _) => castPositional(sub,
-          spark.sql(s"SELECT * FROM VALUES ${tail.trim.stripSuffix(";")}"))
-        case (_, _, Some(sel)) => castPositional(sub, ChSql.sql(spark, sel))
-        case _ => throw new IllegalArgumentException("INSERT: no data clause")
-      }
-      // Missing columns fill with NULL, CH's input default for
-      // Nullable columns; order realigns to the table schema.
-      val aligned = parsed.select(schema.map { f =>
-        if (cols.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
-      val st = reg.computeIfAbsent(table.toLowerCase, _ => new State(spark, table, target))
-      val (written, delta) = st.synchronized {
-        // DDL-created tables carry a storage layout (ORDER BY /
-        // PARTITION BY — the K10 semantics): sort within partitions
-        // and directory-partition by the declared expression.
+      val rec = record(spark, table) // unknown table → AnalysisException → CH code 60
+      val (written, delta) = rec.synchronized {
+        val schema = spark.table(table).schema
+        val cols: Seq[String] = Option(m.group(2)) match {
+          case Some(list) => list.split(",").map(_.trim.replace("`", "")).toSeq
+          case None       => schema.fieldNames.toSeq
+        }
+        cols.foreach(c => require(schema.fieldNames.contains(c),
+          s"INSERT column '$c' not in table '$table'"))
+        val sub = StructType(cols.map(c => schema(schema.fieldIndex(c))))
+        val parsed = (Option(m.group(3)), Option(m.group(5)), Option(m.group(6))) match {
+          case (Some(fmt), _, _) => parseData(spark, sub, fmt, Option(m.group(4)).getOrElse(""))
+          case (_, Some(tail), _) => castPositional(sub,
+            spark.sql(s"SELECT * FROM VALUES ${tail.trim.stripSuffix(";")}"))
+          case (_, _, Some(sel)) => castPositional(sub, ChSql.sql(spark, sel))
+          case _ => throw new IllegalArgumentException("INSERT: no data clause")
+        }
+        // Missing columns fill with NULL, CH's input default for
+        // Nullable columns; order realigns to the table schema.
+        val aligned = parsed.select(schema.map { f =>
+          if (cols.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
+        }: _*)
         // ONE file per insert block (r20, guide §6 small-files): the
         // block is driver-resident by wire-protocol nature, but a
         // LocalRelation write otherwise fans out one task per slice
         // (3-5 near-empty files per insert). CH itself writes one part
         // per insert.
-        val (laid, partCols) = layoutFor(aligned.coalesce(1), table)
-        val (part, files) = st.parts.append(laid, partCols)
+        val (part, files) = rec.append(aligned.coalesce(1))
         // The written row count comes from the new files' footers:
         // metadata only, no second plan execution (a count() beside the
         // write re-ran a nondeterministic INSERT…SELECT source).
-        val n = st.parts.rows(files)
-        st.publish(aligned.schema)
-        (n, st.parts.scan(aligned.schema, Seq(part)))
+        (rec.parts.rows(files), rec.parts.scan(aligned.schema, Seq(part)))
       }
       // the MVs take the part just written, never a re-execution of
       // the INSERT's source

@@ -88,7 +88,13 @@ class DdlAuthSpec extends AnyFunSuite {
     ChSql.sql(spark, "CREATE MATERIALIZED VIEW ddl_rt_mv AS SELECT k, max(v) AS m FROM ddl_rt GROUP BY k")
     assert(rows("SELECT engine FROM system.tables WHERE name = 'ddl_rt_mv'") ==
       Seq(Seq("MaterializedView")))
-    ChSql.sql(spark, "DROP TABLE ddl_rt_mv"); ChSql.sql(spark, "DROP TABLE ddl_rt")
+    ChSql.sql(spark, "DROP TABLE ddl_rt_mv")
+    // a CREATE over the name replaces its engine: FINAL is refused, not collapsed by the old key
+    ChSql.sql(spark, "CREATE TABLE ddl_rt (k Int64, v Int64, ver Int64) ENGINE = MergeTree ORDER BY k")
+    ChDdl.ingest(spark, "INSERT INTO ddl_rt VALUES (1, 10, 1), (1, 20, 2)")
+    val e = intercept[IllegalArgumentException](rows("SELECT k, v FROM ddl_rt FINAL"))
+    assert(e.getMessage.contains("no ReplacingMergeTree metadata"), e.getMessage)
+    ChSql.sql(spark, "DROP TABLE ddl_rt")
   }
 
   test("init-script sequence: CREATE TABLE + INSERTs + MV maintained across inserts") {

@@ -302,6 +302,59 @@ class DdlMutationSpec extends AnyFunSuite {
     sql("DROP TABLE mvm_dr")
   }
 
+  // ---- one record per name ------------------------------------------------
+
+  test("CREATE … IF NOT EXISTS leaves an existing table and MV as they are") {
+    sql("CREATE TABLE mvm_ine (k Int64, v Int64) ENGINE = MergeTree ORDER BY k")
+    sql("CREATE MATERIALIZED VIEW mvm_ine_mv AS SELECT k, count(*) AS c FROM mvm_ine GROUP BY k")
+    try {
+      insert("INSERT INTO mvm_ine VALUES (1, 10), (2, 20)")
+      val (mode, parts) = (ChDdl.mvModeFor("mvm_ine_mv"), roots("mvm_ine_mv"))
+      assert(mode.exists(_.startsWith("AggInc")))
+      sql("CREATE TABLE IF NOT EXISTS mvm_ine (k Int64) ENGINE = MergeTree ORDER BY k")
+      assert(count("mvm_ine") == 2L)
+      sql("CREATE MATERIALIZED VIEW IF NOT EXISTS mvm_ine_mv AS SELECT k, v FROM mvm_ine")
+      assert(ChDdl.mvModeFor("mvm_ine_mv") == mode)
+      assert(roots("mvm_ine_mv") == parts)
+      assert(rows("SELECT k, c FROM mvm_ine_mv ORDER BY k") == Seq(Seq(1L, 1L), Seq(2L, 1L)))
+    } finally Seq("mvm_ine_mv", "mvm_ine").foreach(t => sql(s"DROP TABLE $t"))
+  }
+
+  test("a name re-used across kinds is what its last CREATE made it") {
+    val src = "CREATE TABLE mvm_kind_src (k Int64, v Int64) ENGINE = MergeTree ORDER BY k"
+    val cases: Seq[(String, () => Unit)] = Seq(
+      "a table over an AggInc MV" -> { () =>
+        sql(src)
+        sql("CREATE MATERIALIZED VIEW mvm_kind AS SELECT k, sum(v) AS s FROM mvm_kind_src GROUP BY k")
+        sql("CREATE TABLE mvm_kind (x String) ENGINE = MergeTree ORDER BY x")
+        insert("INSERT INTO mvm_kind VALUES ('own')")
+        assert(insert("INSERT INTO mvm_kind_src VALUES (1, 1)") == 1L)
+        assert(rows("SELECT * FROM mvm_kind") == Seq(Seq("own")))
+      },
+      "an MV over a table" -> { () =>
+        sql(src)
+        sql("CREATE TABLE mvm_kind (x String) ENGINE = MergeTree ORDER BY x")
+        val mv = "CREATE MATERIALIZED VIEW mvm_kind AS SELECT k, v FROM mvm_kind_src"
+        sql(mv)
+        assert(rows("SELECT engine FROM system.tables WHERE name = 'mvm_kind'") == Seq(Seq("MaterializedView")))
+        assert(rows("SHOW CREATE TABLE mvm_kind") == Seq(Seq(mv)))
+      },
+      "a direct INSERT into an AppendInc MV" -> { () =>
+        sql(src)
+        sql("CREATE MATERIALIZED VIEW mvm_kind AS SELECT k, v * 2 AS v2 FROM mvm_kind_src")
+        assert(ChDdl.mvModeFor("mvm_kind").exists(_.startsWith("AppendInc")))
+        insert("INSERT INTO mvm_kind_src VALUES (1, 1)")
+        insert("INSERT INTO mvm_kind VALUES (0, 100)")
+        insert("INSERT INTO mvm_kind_src VALUES (2, 2)")
+        assert(rows("SELECT k, v2 FROM mvm_kind ORDER BY k") ==
+          Seq(Seq(0L, 100L), Seq(1L, 2L), Seq(2L, 4L)))
+      })
+    cases.foreach { case (what, run) =>
+      try withClue(s"$what: ")(run())
+      finally Seq("mvm_kind", "mvm_kind_src").foreach(t => sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   // ---- ingest: one Parquet scan over the committed parts -----------------
 
   private def count(t: String): Long = rows(s"SELECT count(*) FROM $t").head.head.asInstanceOf[Long]
