@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, SubqueryExpression}
@@ -7,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types._
+import scala.util.matching.Regex
 
 /** ClickHouse TEXT DDL for the wire doors: the statements a CH init
   * script (`/docker-entrypoint-initdb.d`, reference `Dockerfile:190`)
@@ -40,18 +42,20 @@ import org.apache.spark.sql.types._
   *   - `ALTER TABLE … ADD COLUMN / DELETE WHERE / UPDATE … WHERE` (the
   *     A15 mergeSchema and K11 mutation-as-rewrite semantics) and
   *     `TRUNCATE TABLE t` rewrite the table's parts like CH's
-  *     mutations: the new content, read under the record's lock,
-  *     becomes the only live part, so the view stays one scan however
-  *     many ALTERs ran. Only the MVs that read the table recompute.
+  *     mutations: the new content becomes the only live part, so the
+  *     view stays one scan however many ALTERs ran. Only the MVs that
+  *     read the table recompute.
   *   - `INSERT INTO t …` ([[ingest]], every door's INSERT route) appends
   *     one part; the MVs that read the table take the block.
   *     `SHOW CREATE TABLE t` prints the record's CREATE.
   *
-  * Every write ends in the record's one `publish`: the view becomes
-  * base ∪ one scan over the live parts, read as one partition while
-  * they fit in one open-cost unit per core
-  * (`spark.sql.files.openCostInBytes` / cores), so a read, merge or
-  * rewrite of a small table plans no Exchange.
+  * One writer at a time: each CREATE, DROP, TRUNCATE, ALTER and INSERT
+  * runs whole under [[writer]], with every MV write it causes. Reads
+  * never take it; they see the last published view. Every write ends
+  * in the record's one `publish`: the view becomes base ∪ one scan over
+  * the live parts, read as one partition while they fit in one
+  * open-cost unit per core (`spark.sql.files.openCostInBytes` / cores),
+  * so a read, merge or rewrite of a small table plans no Exchange.
   *
   * The CH type grammar maps per SURVEY §1.2 (unsigned widens, Nullable
   * is the nullability flag, LowCardinality is transparent). Statements
@@ -60,14 +64,8 @@ import org.apache.spark.sql.types._
   */
 object ChDdl {
 
-  final case class TableDef(
-      name: String,
-      schema: StructType,
-      orderBy: Seq[String],
-      partitionBy: Option[String],
-      engine: String,
-      engineArgs: String,
-      sampleBy: Option[String])
+  final case class TableDef(schema: StructType, orderBy: Seq[String], partitionBy: Option[String],
+      engine: String, engineArgs: String, sampleBy: Option[String])
 
   /** How an MV maintains itself when a source table takes an insert. */
   private sealed trait MvMode
@@ -86,10 +84,12 @@ object ChDdl {
     * sees its upstream fresh. */
   private final case class MvRule(select: String, sources: Set[String], mode: MvMode, seq: Int)
 
-  /** Every name this object holds, lower-cased, to its one record. */
+  /** Every name this object holds, lower-cased, to its one record.
+    * Concurrent, since reads (`engineName`, SHOW CREATE) take no lock. */
   private val tables = new java.util.concurrent.ConcurrentHashMap[String, Table]()
   private val mvSeq = new java.util.concurrent.atomic.AtomicInteger()
-  private val mvLock = new Object
+  /** The one lock: held by a mutating statement from start to finish. */
+  private val writer = new Object
 
   private def table(name: String): Option[Table] = Option(tables.get(name.toLowerCase))
 
@@ -126,18 +126,12 @@ object ChDdl {
   private final class Parts(spark: SparkSession, area: String, name: String) {
     private val dir = Engine.scratch(spark, area, s"${name}_g${gens.incrementAndGet()}")
     private var committed = 0
-    @volatile private var live = Vector.empty[Part]
+    private var live = Vector.empty[Part]
 
-    /** Write `df` as the next part and add it to the live ones; returns
-      * it with the data files its commit listed. */
-    def append(df: DataFrame, partCols: Seq[String] = Nil): (Part, Seq[org.apache.hadoop.fs.FileStatus]) =
-      commit(df, partCols, keep = true)
-
-    /** Write `df` as the next part and make it the only live one. */
-    def replace(df: DataFrame, partCols: Seq[String] = Nil): Unit = commit(df, partCols, keep = false): Unit
-
-    private def commit(df: DataFrame, partCols: Seq[String], keep: Boolean)
-        : (Part, Seq[org.apache.hadoop.fs.FileStatus]) = synchronized {
+    /** Write `df` as the next part and add it to the live ones (`keep`)
+      * or make it the only one; returns it with the data files its
+      * commit listed. */
+    def commit(df: DataFrame, partCols: Seq[String], keep: Boolean): (Part, Seq[FileStatus]) = {
       val path = s"$dir/b${committed + 1}"
       val w = df.write.mode("overwrite")
       (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(path)
@@ -171,7 +165,7 @@ object ChDdl {
     }
 
     /** Rows in a part, summed from the footers of its data `files`. */
-    def rows(files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
+    def rows(files: Seq[FileStatus]): Long = {
       val conf = spark.sessionState.newHadoopConf()
       files.map { f =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -185,10 +179,10 @@ object ChDdl {
       * listing skips. A committed part holds no hidden dirs.
       * Walks with `listStatus`, not `listFiles`: a `LocatedFileStatus`
       * loads each file's permission, a forked `ls -ld` without libhadoop. */
-    private def dataFiles(path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    private def dataFiles(path: String): Seq[FileStatus] = {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      def walk(d: org.apache.hadoop.fs.Path): Seq[FileStatus] =
         fs.listStatus(d).toSeq.flatMap { f =>
           val name = f.getPath.getName
           if (f.isDirectory) walk(f.getPath)
@@ -203,7 +197,7 @@ object ChDdl {
     * `base` if it is a view that existed before its first write, its
     * parts (`Engine.scratch(spark, "http", "ingest_<t>_g<n>")`, an MV's
     * `(…, "ddl", "mv_<name>_g<n>")`), and an MV's rule. Every write
-    * runs under the record's lock and ends in [[publish]]. */
+    * ends in [[publish]]. */
   private final class Table(spark: SparkSession, val name: String,
       @volatile var ddl: Option[TableDef], private var base: Option[DataFrame], val mv: Option[MvRule]) {
     val parts =
@@ -211,26 +205,24 @@ object ChDdl {
       else new Parts(spark, "http", s"ingest_${name.toLowerCase}")
 
     /** Write `df` as the next part; returns it with its data files. */
-    def append(df: DataFrame): (Part, Seq[org.apache.hadoop.fs.FileStatus]) = synchronized {
-      val (laid, partCols) = layout(df)
-      val written = parts.append(laid, partCols)
-      publish(df.schema)
-      written
-    }
+    def append(df: DataFrame): (Part, Seq[FileStatus]) = write(df, keep = true)
 
     /** Make `df` the whole table: its only live part, over no base. A
       * failed write changes nothing. */
-    def replace(df: DataFrame): Unit = synchronized {
+    def replace(df: DataFrame): Unit = write(df, keep = false): Unit
+
+    private def write(df: DataFrame, keep: Boolean): (Part, Seq[FileStatus]) = {
       val (laid, partCols) = layout(df)
-      parts.replace(laid, partCols)
-      base = None
+      val written = parts.commit(laid, partCols, keep)
+      if (!keep) base = None
       publish(df.schema)
+      written
     }
 
     /** Point the view at base ∪ ONE scan over the live parts. The
       * layout's shadow partition column lives only in the directory
       * names, which the scan does not read. */
-    def publish(schema: StructType): Unit = synchronized {
+    def publish(schema: StructType): Unit = {
       val scan = parts.scan(schema)
       base.fold(scan)(_.unionByName(scan)).createOrReplaceTempView(name)
     }
@@ -340,7 +332,7 @@ object ChDdl {
   private val ShowCreateRe =
     "(?is)^\\s*SHOW\\s+CREATE\\s+TABLE\\s+`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*$".r
   private val TruncateRe =
-    "(?is)^\\s*TRUNCATE\\s+TABLE\\s+(?:IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*$".r
+    "(?is)^\\s*TRUNCATE\\s+TABLE\\s+(IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*$".r
   private val AlterAddColRe =
     ("(?is)^\\s*ALTER\\s+TABLE\\s+`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+ADD\\s+COLUMN\\s+" +
       "(IF\\s+NOT\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+" +
@@ -358,14 +350,14 @@ object ChDdl {
     * is side-effect-free, so Describe may analyze it normally. */
   def isDdl(text: String): Boolean = {
     val t = text.trim.stripSuffix(";")
-    CreateTableRe.findFirstMatchIn(t).isDefined ||
-      CreateMvRe.findFirstMatchIn(t).isDefined ||
-      DropRe.findFirstMatchIn(t).isDefined ||
-      TruncateRe.findFirstMatchIn(t).isDefined ||
-      AlterAddColRe.findFirstMatchIn(t).isDefined ||
-      AlterDeleteRe.findFirstMatchIn(t).isDefined ||
-      AlterUpdateRe.findFirstMatchIn(t).isDefined
+    writes.exists(_._1.findFirstMatchIn(t).isDefined)
   }
+
+  /** The mutating statements, in match order, each with its write. */
+  private val writes: Seq[(Regex, (SparkSession, Regex.Match) => Unit)] = Seq(
+    CreateTableRe -> createTable _, CreateMvRe -> createMv _, DropRe -> drop _,
+    TruncateRe -> truncate _, AlterAddColRe -> addColumn _, AlterDeleteRe -> delete _,
+    AlterUpdateRe -> update _)
 
   private val ClauseRe =
     "(?i)\\b(ORDER\\s+BY|PARTITION\\s+BY|PRIMARY\\s+KEY|SAMPLE\\s+BY|TTL|SETTINGS)\\b".r
@@ -394,114 +386,129 @@ object ChDdl {
     }
 
   /** Try to execute `text` as CH DDL. Some(df) = handled (df is the
-    * statement's result — empty for DDL proper); None = not DDL. */
+    * statement's result — empty for DDL proper); None = not DDL. A
+    * mutating statement runs under [[writer]]; SHOW CREATE and every
+    * statement that is not DDL pass without taking it. */
   def execute(spark: SparkSession, text: String): Option[DataFrame] = {
     val t = text.trim.stripSuffix(";")
-    CreateTableRe.findFirstMatchIn(t).map { m =>
-      val name = m.group(2)
-      if (m.group(1) == null || !exists(spark, name)) {
-        val engine = m.group(4)
-        val engineArgs = Option(m.group(5)).map(_.trim).getOrElse("")
-        val fields = splitTop(m.group(3)).map { colDef =>
-          // "name Type [DEFAULT …]" — take the first two tokens; CODEC/
-          // DEFAULT/COMMENT decorations are storage hints, dropped
-          val parts = colDef.trim.split("\\s+", 3)
-          require(parts.length >= 2, s"CREATE TABLE: bad column def '$colDef'")
-          val (dt, nullable) = chType(parts(1))
-          StructField(parts(0).replace("`", ""), dt, nullable)
-        }
-        val schema = StructType(fields)
-        val cl = clauses(m.group(6))
-        val orderBy = cl.get("ORDER BY").map(stripParens).map(splitTop).getOrElse(Nil)
-        val partitionBy = cl.get("PARTITION BY").map(stripParens).filter(_.nonEmpty)
-        val sampleBy = cl.get("SAMPLE BY").map(stripParens)
-        // the name's FINAL/SAMPLE metadata is the new engine's alone
-        ChSql.forget(name)
-        // ReplacingMergeTree(ver): FINAL reads collapse by the sorting key
-        if (engine.equalsIgnoreCase("ReplacingMergeTree") && engineArgs.nonEmpty)
-          ChSql.registerFinal(name, orderBy, engineArgs.split(",").head.trim)
-        sampleBy.foreach(k => ChSql.registerSample(name, k))
-        val rec = new Table(spark, name,
-          Some(TableDef(name, schema, orderBy, partitionBy, engine, engineArgs, sampleBy)), None, None)
-        tables.put(name.toLowerCase, rec)
-        rec.publish(schema)
-      }
-      spark.emptyDataFrame
-    }.orElse(CreateMvRe.findFirstMatchIn(t).map { m =>
-      if (m.group(1) == null || !exists(spark, m.group(2))) createMv(spark, m.group(2), m.group(3))
-      spark.emptyDataFrame
-    }).orElse(DropRe.findFirstMatchIn(t).map { m =>
-      val name = m.group(2)
-      val existed = spark.catalog.dropTempView(name)
-      require(existed || m.group(1) != null, s"DROP: no such table/view '$name'")
-      tables.remove(name.toLowerCase)
-      ChSql.forget(name)
-      spark.emptyDataFrame
-    }).orElse(TruncateRe.findFirstMatchIn(t).map { m =>
-      rebase(spark, m.group(1))((_, cur) => Some(empty(spark, cur.schema)))
-    }).orElse(AlterAddColRe.findFirstMatchIn(t).map { m =>
-      val (tbl, colName, typeStr) = (m.group(1), m.group(3), m.group(4))
-      rebase(spark, tbl) { (rec, cur) =>
-        if (cur.columns.contains(colName)) {
-          require(m.group(2) != null, s"ALTER: column '$colName' already exists in '$tbl'")
-          None
-        } else {
-          val (dt, nullable) = chType(typeStr)
-          val d = Option(m.group(5)).map(_.trim).getOrElse(typeDefault(dt, nullable))
-          rec.ddl = rec.ddl.map(td => td.copy(schema = td.schema.add(StructField(colName, dt, nullable))))
-          // A15 mergeSchema semantics: existing rows read the default
-          Some(cur.withColumn(colName, expr(d).cast(dt)))
-        }
-      }
-    }).orElse(AlterDeleteRe.findFirstMatchIn(t).map { m =>
-      // K11 mutation-as-rewrite: keep rows where the predicate is
-      // false OR NULL (CH deletes only rows where it evaluates true)
-      rebase(spark, m.group(1))((_, cur) =>
-        Some(cur.where(F.not(F.coalesce(expr(m.group(2).trim), F.lit(false))))))
-    }).orElse(AlterUpdateRe.findFirstMatchIn(t).map { m =>
-      val hit = F.coalesce(expr(m.group(3).trim), F.lit(false))
-      val assigns = splitTop(m.group(2)).map { a =>
-        val Array(c, e) = a.split("=", 2)
-        c.trim.replace("`", "") -> e.trim
-      }.toMap
-      // ONE select: every assignment and the predicate evaluate against
-      // the ORIGINAL row (CH mutation semantics) — sequential
-      // withColumn would let `k = v, v = k` see each other's updates
-      rebase(spark, m.group(1))((_, cur) => Some(cur.select(cur.columns.toIndexedSeq.map { c =>
-        assigns.get(c) match {
-          case Some(e) =>
-            F.when(hit, expr(e).cast(cur.schema(c).dataType)).otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }: _*)))
-    }).orElse(ShowCreateRe.findFirstMatchIn(t).map { m =>
-      import spark.implicits._
-      val name = m.group(1)
-      val rec = table(name).getOrElse(
-        throw new IllegalArgumentException(s"SHOW CREATE TABLE: unknown table '$name'"))
-      val stmt = rec.ddl.map { d =>
-        val cols = d.schema.fields.map(f => s"`${f.name}` ${chTypeName(f)}").mkString(", ")
-        s"CREATE TABLE $name ($cols) ENGINE = ${d.engine}" +
-          (if (d.engineArgs.nonEmpty) s"(${d.engineArgs})" else "") +
-          (if (d.orderBy.nonEmpty) s" ORDER BY (${d.orderBy.mkString(", ")})" else "") +
-          d.partitionBy.map(p => s" PARTITION BY $p").getOrElse("") +
-          d.sampleBy.map(k => s" SAMPLE BY $k").getOrElse("")
-      }.orElse(rec.mv.map(r => s"CREATE MATERIALIZED VIEW $name AS ${r.select}")).getOrElse(
-        throw new IllegalArgumentException(s"SHOW CREATE TABLE: '$name' has no CREATE statement"))
-      Seq(stmt).toDF("statement")
-    })
+    writes.iterator.flatMap { case (re, run) => re.findFirstMatchIn(t).map(run -> _) }.nextOption() match {
+      case Some((run, m)) =>
+        writer.synchronized(run(spark, m))
+        Some(spark.emptyDataFrame)
+      case None => ShowCreateRe.findFirstMatchIn(t).map(m => showCreate(spark, m.group(1)))
+    }
   }
 
-  /** Rewrite `name` (TRUNCATE, ALTER) under its record's lock: `next`
-    * takes the record and the table's rows read under that lock, and
-    * its answer, if any, becomes the table's only part; then the MVs
-    * that read the table recompute. */
+  private def createTable(spark: SparkSession, m: Regex.Match): Unit = {
+    val name = m.group(2)
+    if (m.group(1) == null || !exists(spark, name)) {
+      val engine = m.group(4)
+      val engineArgs = Option(m.group(5)).map(_.trim).getOrElse("")
+      val fields = splitTop(m.group(3)).map { colDef =>
+        // "name Type [DEFAULT …]" — take the first two tokens; CODEC/
+        // DEFAULT/COMMENT decorations are storage hints, dropped
+        val parts = colDef.trim.split("\\s+", 3)
+        require(parts.length >= 2, s"CREATE TABLE: bad column def '$colDef'")
+        val (dt, nullable) = chType(parts(1))
+        StructField(parts(0).replace("`", ""), dt, nullable)
+      }
+      val schema = StructType(fields)
+      val cl = clauses(m.group(6))
+      val orderBy = cl.get("ORDER BY").map(stripParens).map(splitTop).getOrElse(Nil)
+      val partitionBy = cl.get("PARTITION BY").map(stripParens).filter(_.nonEmpty)
+      val sampleBy = cl.get("SAMPLE BY").map(stripParens)
+      // the name's FINAL/SAMPLE metadata is the new engine's alone
+      ChSql.forget(name)
+      // ReplacingMergeTree(ver): FINAL reads collapse by the sorting key
+      if (engine.equalsIgnoreCase("ReplacingMergeTree") && engineArgs.nonEmpty)
+        ChSql.registerFinal(name, orderBy, engineArgs.split(",").head.trim)
+      sampleBy.foreach(k => ChSql.registerSample(name, k))
+      val rec = new Table(spark, name,
+        Some(TableDef(schema, orderBy, partitionBy, engine, engineArgs, sampleBy)), None, None)
+      tables.put(name.toLowerCase, rec)
+      rec.publish(schema)
+    }
+  }
+
+  private def drop(spark: SparkSession, m: Regex.Match): Unit = {
+    val name = m.group(2)
+    val existed = spark.catalog.dropTempView(name)
+    require(existed || m.group(1) != null, s"DROP: no such table/view '$name'")
+    tables.remove(name.toLowerCase)
+    ChSql.forget(name)
+  }
+
+  /** TRUNCATE; with `IF EXISTS` a missing table is a no-op, as in CH. */
+  private def truncate(spark: SparkSession, m: Regex.Match): Unit =
+    if (m.group(1) == null || exists(spark, m.group(2)))
+      rebase(spark, m.group(2))((_, cur) => Some(empty(spark, cur.schema)))
+
+  private def addColumn(spark: SparkSession, m: Regex.Match): Unit = {
+    val (tbl, colName, typeStr) = (m.group(1), m.group(3), m.group(4))
+    rebase(spark, tbl) { (rec, cur) =>
+      if (cur.columns.contains(colName)) {
+        require(m.group(2) != null, s"ALTER: column '$colName' already exists in '$tbl'")
+        None
+      } else {
+        val (dt, nullable) = chType(typeStr)
+        val d = Option(m.group(5)).map(_.trim).getOrElse(typeDefault(dt, nullable))
+        rec.ddl = rec.ddl.map(td => td.copy(schema = td.schema.add(StructField(colName, dt, nullable))))
+        // A15 mergeSchema semantics: existing rows read the default
+        Some(cur.withColumn(colName, expr(d).cast(dt)))
+      }
+    }
+  }
+
+  /** K11 mutation-as-rewrite: keep rows where the predicate is false
+    * OR NULL (CH deletes only rows where it evaluates true). */
+  private def delete(spark: SparkSession, m: Regex.Match): Unit =
+    rebase(spark, m.group(1))((_, cur) =>
+      Some(cur.where(F.not(F.coalesce(expr(m.group(2).trim), F.lit(false))))))
+
+  private def update(spark: SparkSession, m: Regex.Match): Unit = {
+    val hit = F.coalesce(expr(m.group(3).trim), F.lit(false))
+    val assigns = splitTop(m.group(2)).map { a =>
+      val Array(c, e) = a.split("=", 2)
+      c.trim.replace("`", "") -> e.trim
+    }.toMap
+    // ONE select: every assignment and the predicate evaluate against
+    // the ORIGINAL row (CH mutation semantics) — sequential
+    // withColumn would let `k = v, v = k` see each other's updates
+    rebase(spark, m.group(1))((_, cur) => Some(cur.select(cur.columns.toIndexedSeq.map { c =>
+      assigns.get(c) match {
+        case Some(e) =>
+          F.when(hit, expr(e).cast(cur.schema(c).dataType)).otherwise(col(c)).as(c)
+        case None => col(c)
+      }
+    }: _*)))
+  }
+
+  private def showCreate(spark: SparkSession, name: String): DataFrame = {
+    import spark.implicits._
+    val rec = table(name).getOrElse(
+      throw new IllegalArgumentException(s"SHOW CREATE TABLE: unknown table '$name'"))
+    val stmt = rec.ddl.map { d =>
+      val cols = d.schema.fields.map(f => s"`${f.name}` ${chTypeName(f)}").mkString(", ")
+      s"CREATE TABLE $name ($cols) ENGINE = ${d.engine}" +
+        (if (d.engineArgs.nonEmpty) s"(${d.engineArgs})" else "") +
+        (if (d.orderBy.nonEmpty) s" ORDER BY (${d.orderBy.mkString(", ")})" else "") +
+        d.partitionBy.map(p => s" PARTITION BY $p").getOrElse("") +
+        d.sampleBy.map(k => s" SAMPLE BY $k").getOrElse("")
+    }.orElse(rec.mv.map(r => s"CREATE MATERIALIZED VIEW $name AS ${r.select}")).getOrElse(
+      throw new IllegalArgumentException(s"SHOW CREATE TABLE: '$name' has no CREATE statement"))
+    Seq(stmt).toDF("statement")
+  }
+
+  /** Rewrite `name` (TRUNCATE, ALTER): `next` takes the record and the
+    * table's rows, and its answer, if any, becomes the table's only
+    * part; then the MVs that read the table recompute. */
   private def rebase(spark: SparkSession, name: String)(
-      next: (Table, DataFrame) => Option[DataFrame]): DataFrame = {
+      next: (Table, DataFrame) => Option[DataFrame]): Unit = {
     val rec = record(spark, name)
-    if (rec.synchronized(next(rec, spark.table(name)).map(rec.replace).isDefined))
+    next(rec, spark.table(name)).foreach { df =>
+      rec.replace(df)
       maintain(spark, name, None)
-    spark.emptyDataFrame
+    }
   }
 
   private def empty(spark: SparkSession, schema: StructType): DataFrame =
@@ -582,9 +589,11 @@ object ChDdl {
 
   /** Put a new MV record whose only part is the SELECT's result —
     * reads hit the parts, never the defining SELECT. A failed write
-    * leaves the name as it was. */
-  private def createMv(spark: SparkSession, name: String, select: String): Unit =
-    mvLock.synchronized {
+    * leaves the name as it was; with `IF NOT EXISTS` an existing name
+    * is kept. */
+  private def createMv(spark: SparkSession, m: Regex.Match): Unit = {
+    val (name, select) = (m.group(2), m.group(3))
+    if (m.group(1) == null || !exists(spark, name)) {
       val df = ChSql.sql(spark, select)
       val parsed = spark.sessionState.sqlParser.parsePlan(ChSql.rewrite(spark, select))
       val sources = parsed.collectWithSubqueries {
@@ -597,62 +606,47 @@ object ChDdl {
       ChSql.forget(name)
       tables.put(name.toLowerCase, mv): Unit
     }
+  }
 
-  /** Substitute the MV's single source table with the delta view in
-    * the SELECT text (classification guarantees a lone `FROM src`). */
-  private def substituteSource(select: String, src: String, deltaView: String): String =
-    select.replaceAll("(?i)(\\bFROM\\s+)`?" + java.util.regex.Pattern.quote(src) + "`?\\b",
-      "$1" + deltaView)
-
-  private val deltaSeq = new java.util.concurrent.atomic.AtomicInteger()
+  /** The view an INSERT's block is read through while its MVs take it. */
+  private val DeltaView = "__graft_mv_delta"
 
   /** MV maintenance after `table` changed: only the MVs that read it,
     * directly or through an MV visited before (creation order, so a
     * chain sees its upstream fresh). `delta` = the block an INSERT just
     * committed, read back from its part: the table's AggInc and
-    * AppendInc MVs take it (CH's incremental-MV contract). Every other
-    * MV visited, and every one after a TRUNCATE or ALTER (None),
+    * AppendInc MVs take it (CH's incremental-MV contract), reading
+    * their SELECT with the source replaced by [[DeltaView]]. Every
+    * other MV visited, and every one after a TRUNCATE or ALTER (None),
     * recomputes its SELECT — a chain hop against the upstream MV's
-    * materialized target. Both equal a full recompute (J1). Each MV
-    * reads and writes its own parts under its record's lock. */
-  private def maintain(spark: SparkSession, table: String, delta: Option[DataFrame]): Unit =
-    mvLock.synchronized {
-      import scala.jdk.CollectionConverters._
-      val src = table.toLowerCase
-      var changed = Set(src)
-      tables.values.asScala.toSeq.flatMap(t => t.mv.map(t -> _)).sortBy(_._2.seq).foreach {
-        case (mv, rule) if rule.sources.intersect(changed).nonEmpty =>
-          mv.synchronized((rule.mode, delta) match {
-            case (AggInc(`src`, _, _) | AppendInc(`src`), Some(d)) =>
-              val dv = s"__graft_mv_delta_${deltaSeq.incrementAndGet()}"
-              d.createOrReplaceTempView(dv)
-              try {
-                val block = ChSql.sql(spark, substituteSource(rule.select, src, dv))
-                rule.mode match {
-                  case AggInc(_, keyCols, aggs) =>
-                    val old = spark.table(mv.name)
-                    val mergeExprs = aggs.map { case (alias, fn) =>
-                      val dt = old.schema(alias).dataType
-                      (fn match {
-                        case "sum" => F.sum(col(alias))
-                        case "min" => F.min(col(alias))
-                        case _     => F.max(col(alias))
-                      }).cast(dt).as(alias)
-                    }
-                    mv.replace(old.unionByName(block)
-                      .groupBy(keyCols.map(col): _*)
-                      .agg(mergeExprs.head, mergeExprs.tail: _*)
-                      .select(old.columns.map(col).toIndexedSeq: _*)) // declared order
-                  case _ => mv.append(block): Unit // AppendInc
-                }
-              } finally spark.catalog.dropTempView(dv): Unit
-            case _ =>
-              mv.replace(ChSql.sql(spark, rule.select))
-          })
-          changed += mv.name.toLowerCase
-        case _ =>
-      }
-    }
+    * materialized target. Both equal a full recompute (J1). */
+  private def maintain(spark: SparkSession, table: String, delta: Option[DataFrame]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val src = table.toLowerCase
+    // classification guarantees a lone `FROM src`
+    def block(select: String) = ChSql.sql(spark, select.replaceAll(
+      "(?i)(\\bFROM\\s+)`?" + java.util.regex.Pattern.quote(src) + "`?\\b", "$1" + DeltaView))
+    var changed = Set(src)
+    delta.foreach(_.createOrReplaceTempView(DeltaView))
+    try tables.values.asScala.toSeq.flatMap(t => t.mv.map(t -> _)).sortBy(_._2.seq).foreach {
+      case (mv, rule) if rule.sources.intersect(changed).nonEmpty =>
+        (rule.mode, delta) match {
+          case (AggInc(`src`, keyCols, aggs), Some(_)) =>
+            val old = spark.table(mv.name)
+            val mergeExprs = aggs.map { case (alias, fn) =>
+              expr(s"$fn(`$alias`)").cast(old.schema(alias).dataType).as(alias)
+            }
+            mv.replace(old.unionByName(block(rule.select))
+              .groupBy(keyCols.map(col): _*)
+              .agg(mergeExprs.head, mergeExprs.tail: _*)
+              .select(old.columns.map(col).toIndexedSeq: _*)) // declared order
+          case (AppendInc(`src`), Some(_)) => mv.append(block(rule.select)): Unit
+          case _ => mv.replace(ChSql.sql(spark, rule.select))
+        }
+        changed += mv.name.toLowerCase
+      case _ =>
+    } finally if (delta.isDefined) spark.catalog.dropTempView(DeltaView): Unit
+  }
 
   // ---- INSERT ingest ------------------------------------------------------
 
@@ -672,7 +666,7 @@ object ChDdl {
 
   /** Run `text` as an INSERT; Some(written rows) when it is one. */
   def ingest(spark: SparkSession, text: String): Option[Long] =
-    InsertRe.findFirstMatchIn(text).map(m => Ingest.insert(spark, m))
+    InsertRe.findFirstMatchIn(text).map(m => writer.synchronized(Ingest.insert(spark, m)))
 
   /** The INSERT path: the rows append as one part of the record the
     * name holds (an MV's too, as CH forwards an INSERT to an MV's inner
@@ -682,45 +676,42 @@ object ChDdl {
     * afterwards (e.g. `registerAll` with a different sf dir) resets
     * nothing here — one catalog per process. */
   private object Ingest {
-    def insert(spark: SparkSession, m: scala.util.matching.Regex.Match): Long = {
+    def insert(spark: SparkSession, m: Regex.Match): Long = {
       val table = m.group(1)
       val rec = record(spark, table) // unknown table → AnalysisException → CH code 60
-      val (written, delta) = rec.synchronized {
-        val schema = spark.table(table).schema
-        val cols: Seq[String] = Option(m.group(2)) match {
-          case Some(list) => list.split(",").map(_.trim.replace("`", "")).toSeq
-          case None       => schema.fieldNames.toSeq
-        }
-        cols.foreach(c => require(schema.fieldNames.contains(c),
-          s"INSERT column '$c' not in table '$table'"))
-        val sub = StructType(cols.map(c => schema(schema.fieldIndex(c))))
-        val parsed = (Option(m.group(3)), Option(m.group(5)), Option(m.group(6))) match {
-          case (Some(fmt), _, _) => parseData(spark, sub, fmt, Option(m.group(4)).getOrElse(""))
-          case (_, Some(tail), _) => castPositional(sub,
-            spark.sql(s"SELECT * FROM VALUES ${tail.trim.stripSuffix(";")}"))
-          case (_, _, Some(sel)) => castPositional(sub, ChSql.sql(spark, sel))
-          case _ => throw new IllegalArgumentException("INSERT: no data clause")
-        }
-        // Missing columns fill with NULL, CH's input default for
-        // Nullable columns; order realigns to the table schema.
-        val aligned = parsed.select(schema.map { f =>
-          if (cols.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
-        }: _*)
-        // ONE file per insert block (r20, guide §6 small-files): the
-        // block is driver-resident by wire-protocol nature, but a
-        // LocalRelation write otherwise fans out one task per slice
-        // (3-5 near-empty files per insert). CH itself writes one part
-        // per insert.
-        val (part, files) = rec.append(aligned.coalesce(1))
-        // The written row count comes from the new files' footers:
-        // metadata only, no second plan execution (a count() beside the
-        // write re-ran a nondeterministic INSERT…SELECT source).
-        (rec.parts.rows(files), rec.parts.scan(aligned.schema, Seq(part)))
+      val schema = spark.table(table).schema
+      val cols: Seq[String] = Option(m.group(2)) match {
+        case Some(list) => list.split(",").map(_.trim.replace("`", "")).toSeq
+        case None       => schema.fieldNames.toSeq
       }
+      cols.foreach(c => require(schema.fieldNames.contains(c),
+        s"INSERT column '$c' not in table '$table'"))
+      val sub = StructType(cols.map(c => schema(schema.fieldIndex(c))))
+      val parsed = (Option(m.group(3)), Option(m.group(5)), Option(m.group(6))) match {
+        case (Some(fmt), _, _) => parseData(spark, sub, fmt, Option(m.group(4)).getOrElse(""))
+        case (_, Some(tail), _) => castPositional(sub,
+          spark.sql(s"SELECT * FROM VALUES ${tail.trim.stripSuffix(";")}"))
+        case (_, _, Some(sel)) => castPositional(sub, ChSql.sql(spark, sel))
+        case _ => throw new IllegalArgumentException("INSERT: no data clause")
+      }
+      // Missing columns fill with NULL, CH's input default for
+      // Nullable columns; order realigns to the table schema.
+      val aligned = parsed.select(schema.map { f =>
+        if (cols.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
+      }: _*)
+      // ONE file per insert block (r20, guide §6 small-files): the
+      // block is driver-resident by wire-protocol nature, but a
+      // LocalRelation write otherwise fans out one task per slice
+      // (3-5 near-empty files per insert). CH itself writes one part
+      // per insert.
+      val (part, files) = rec.append(aligned.coalesce(1))
       // the MVs take the part just written, never a re-execution of
       // the INSERT's source
-      maintain(spark, table, Some(delta))
-      written
+      maintain(spark, table, Some(rec.parts.scan(aligned.schema, Seq(part))))
+      // The written row count comes from the new files' footers:
+      // metadata only, no second plan execution (a count() beside the
+      // write re-ran a nondeterministic INSERT…SELECT source).
+      rec.parts.rows(files)
     }
 
     /** Positional cast onto the target columns — shared by the VALUES
@@ -735,7 +726,7 @@ object ChDdl {
 
     /** Data-block formats. CSV/JSONEachRow parse through Spark's own
       * readers over an in-memory Dataset[String]; TabSeparated honors
-      * CH's escaping (\t \n \\ and \N null) with a per-field unescape
+      * CH's escaping ([[tsvUnescape]] and \N null) with a per-field unescape
       * then a schema cast. CH's text timestamp shape is
       * `yyyy-MM-dd HH:mm:ss` (the renderer's tsFmt), pinned on the
       * readers so ingest round-trips the doors' own output. */
@@ -783,20 +774,25 @@ object ChDdl {
       }
     }
 
+    /** CH's TabSeparated escapes: `\t \n \r \b \f \0` are their
+      * characters, and any other `\c` (`\\`, `\'`) reads as c. */
     private def tsvUnescape(s: String): String = {
       val sb = new StringBuilder(s.length)
       var i = 0
       while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '\\' && i + 1 < s.length) {
-          s.charAt(i + 1) match {
-            case 't'  => sb.append('\t'); i += 2
-            case 'n'  => sb.append('\n'); i += 2
-            case 'r'  => sb.append('\r'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case o    => sb.append(c); sb.append(o); i += 2
-          }
-        } else { sb.append(c); i += 1 }
+        if (s.charAt(i) == '\\' && i + 1 < s.length) {
+          i += 1
+          sb.append(s.charAt(i) match {
+            case 't' => '\t'
+            case 'n' => '\n'
+            case 'r' => '\r'
+            case 'b' => '\b'
+            case 'f' => '\f'
+            case '0' => '\u0000'
+            case c   => c
+          })
+        } else sb.append(s.charAt(i))
+        i += 1
       }
       sb.toString
     }

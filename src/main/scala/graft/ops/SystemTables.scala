@@ -40,10 +40,7 @@ object SystemTables {
       .orderBy("name")
   }
 
-  private val buffer = new ConcurrentLinkedQueue[LogEntry]()
-  @volatile private var registered = false
-
-  private class Listener extends QueryExecutionListener {
+  private class Listener(buffer: ConcurrentLinkedQueue[LogEntry]) extends QueryExecutionListener {
     /** `result_rows` for the ledger: the root operator (AQE wrapper,
       * Project, …) often carries no `numOutputRows` metric — take the
       * root-most node that does (pre-order), -1 when none ran. */
@@ -64,8 +61,20 @@ object SystemTables {
       buffer.add(LogEntry(funcName, "FAIL", -1, -1))
   }
 
-  def ensureListener(spark: SparkSession): Unit = synchronized {
-    if (!registered) { spark.listenerManager.register(new Listener); registered = true }
+  /** Run `probe` under a listener of this call's own and return what it
+    * logged once `n` entries have landed (delivery is async; waits at
+    * most 5 s). The listener is unregistered on return, so every
+    * session gets its own and no later query feeds it. */
+  private def logged(spark: SparkSession, n: Int)(probe: => Unit): Seq[LogEntry] = {
+    val buffer = new ConcurrentLinkedQueue[LogEntry]()
+    val listener = new Listener(buffer)
+    spark.listenerManager.register(listener)
+    try {
+      probe
+      val deadline = System.nanoTime() + 5000000000L
+      while (buffer.size < n && System.nanoTime() < deadline) Thread.sleep(50)
+      buffer.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
   }
 
   /** A12: run a probe query under the listener, flush the log to a
@@ -74,17 +83,12 @@ object SystemTables {
     * nondeterministic); emits stable summary columns. */
   private def a12QueryLog(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    ensureListener(spark)
-    // probe queries the listener will observe
-    Engine.t(spark, dir, "nation").groupBy("n_regionkey").count().collect()
-    // listener delivery is async; poll briefly until the entry lands
-    val deadline = System.nanoTime() + 5000000000L
-    while (buffer.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    // a probe query the listener will observe
+    val entries = logged(spark, 1)(Engine.t(spark, dir, "nation").groupBy("n_regionkey").count().collect())
     // Namespaced per sf-dir + session so concurrent runs don't collide,
     // and overwritten rather than appended so the log can't grow
     // unboundedly across runs (ADVICE r2).
     val out = Engine.scratch(spark, dir, "a12_query_log")
-    val entries = buffer.asScala.toSeq
     // Always write — an empty typed frame when the async listener
     // delivered nothing within the poll window — so the read-back
     // below never hits a never-written path (ADVICE r3); the empty
@@ -95,7 +99,6 @@ object SystemTables {
       .withColumn("event_date", current_date())
       .withColumn("yyyymm", CH.toYYYYMM(col("event_date")))
     toWrite.write.mode("overwrite").partitionBy("yyyymm").parquet(out)
-    buffer.clear()
     Engine.readBackPartitioned(spark, out, toWrite.schema, Seq("yyyymm"))
       .agg(
         count(lit(1)).as("n_logged"),
@@ -118,15 +121,12 @@ object SystemTables {
     * check before admitting the next query. */
   private def a12bQuotaRollup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    ensureListener(spark)
-    buffer.clear() // bill only this probe workload to the quota window
-    Engine.t(spark, dir, "nation").groupBy("n_regionkey").count().collect()
-    Engine.t(spark, dir, "region").select("r_name").collect()
-    Engine.t(spark, dir, "nation").select("n_name").limit(3).collect()
-    val deadline = System.nanoTime() + 5000000000L
-    while (buffer.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
-    val entries = buffer.asScala.toSeq
-    buffer.clear()
+    // only this probe workload bills to the quota window
+    val entries = logged(spark, 3) {
+      Engine.t(spark, dir, "nation").groupBy("n_regionkey").count().collect()
+      Engine.t(spark, dir, "region").select("r_name").collect()
+      Engine.t(spark, dir, "nation").select("n_name").limit(3).collect()
+    }
     val logDf = if (entries.nonEmpty) entries.toDF() else spark.emptyDataset[LogEntry].toDF()
     logDf
       .withColumn("quota_user", lit("default"))

@@ -292,6 +292,13 @@ class DdlMutationSpec extends AnyFunSuite {
     sql("DROP TABLE mvm_tr")
   }
 
+  test("TRUNCATE TABLE IF EXISTS on a missing table is a no-op; without IF EXISTS it is Code 60") {
+    sql("TRUNCATE TABLE IF EXISTS mvm_never")
+    val e = intercept[Exception](sql("TRUNCATE TABLE mvm_never"))
+    assert(graft.server.Statement.chCode(e) == 60, e.toString)
+    assert(!spark.catalog.tableExists("mvm_never"))
+  }
+
   test("DROP + re-CREATE with a different schema starts clean") {
     sql("CREATE TABLE mvm_dr (k Int64) ENGINE = MergeTree ORDER BY k")
     insert("INSERT INTO mvm_dr VALUES (1)")
@@ -413,6 +420,14 @@ class DdlMutationSpec extends AnyFunSuite {
     assert(insert("INSERT INTO mvm_bad FORMAT TabSeparated\n2\n") == 1L)
     assert(count("mvm_bad") == 2L)
     sql("DROP TABLE mvm_bad")
+  }
+
+  test("a TSV INSERT reads CH's escapes: \\' as ', \\0 as NUL, any other \\c as c") {
+    sql("CREATE TABLE mvm_esc (k Int64, s String) ENGINE = MergeTree ORDER BY k")
+    insert("INSERT INTO mvm_esc FORMAT TabSeparated\n1\tit\\'s\n2\ta\\0b\n3\t\\b\\f\\q\\\\\n")
+    assert(rows("SELECT s FROM mvm_esc ORDER BY k") ==
+      Seq(Seq("it's"), Seq("a\u0000b"), Seq("\b\fq\\")))
+    sql("DROP TABLE mvm_esc")
   }
 
   test("CREATE TABLE clause keywords match whole words only") {
