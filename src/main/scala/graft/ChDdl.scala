@@ -446,6 +446,10 @@ object ChDdl {
   private def addColumn(spark: SparkSession, m: Regex.Match): Unit = {
     val (tbl, colName, typeStr) = (m.group(1), m.group(3), m.group(4))
     rebase(spark, tbl) { (rec, cur) =>
+      // an MV's rule writes the SELECT's columns: the new one would fail
+      // an AggInc merge, or vanish at the next AppendInc/Recompute write
+      if (rec.mv.nonEmpty) throw new graft.server.Statement.ChError(48, // NOT_IMPLEMENTED
+        s"Alter of type 'ADD_COLUMN' is not supported by storage MaterializedView ($tbl)")
       if (cur.columns.contains(colName)) {
         require(m.group(2) != null, s"ALTER: column '$colName' already exists in '$tbl'")
         None

@@ -26,22 +26,24 @@ object DistRank {
 
   /** The staged range prologue every rank ladder starts from
     * ([[groupedNtile]], `Aggregates.stagedCumOffsets`):
-    * range-partition on `rangeCols` over [[Engine.stagingWidth]]
-    * partitions, sort within each, tag rows with `__pid`, and stage.
+    * range-partition on `rangeCols` over `width` partitions (default
+    * [[Engine.stagingWidth]]), sort within each, tag rows with `__pid`,
+    * and stage.
     * The range boundaries come from sampling, which is not
     * deterministic across jobs, so the stage pins ONE partition
     * assignment for the per-partition collect and every later pass. */
   private[ops] def rangeStaged(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, rangeCols: Seq[Column]): DataFrame =
-    Engine.stage(df.repartitionByRange(Engine.stagingWidth(spark), rangeCols: _*)
+      df: DataFrame, rangeCols: Seq[Column], width: Option[Int] = None): DataFrame =
+    Engine.stage(df.repartitionByRange(width.getOrElse(Engine.stagingWidth(spark)), rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .withColumn("__pid", spark_partition_id()), dir, name)
 
   /** Exact `ntile(k)` over the global `sortCols` order, appended as
     * integer column `out`: [[groupedNtile]] with no group. */
   def ntile(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, sortCols: Seq[Column], k: Int, out: String): DataFrame =
-    groupedNtile(spark, dir, name, df, Nil, sortCols, k, out)
+      df: DataFrame, sortCols: Seq[Column], k: Int, out: String,
+      width: Option[Int] = None): DataFrame =
+    groupedNtile(spark, dir, name, df, Nil, sortCols, k, out, width)
 
   /** Exact `ntile(k) OVER (PARTITION BY groupCols ORDER BY sortCols)`
     * without per-group window partitions. A builtin partitioned window
@@ -58,9 +60,9 @@ object DistRank {
     * Group keys must be non-null (they ride an equi-join). */
   def groupedNtile(spark: SparkSession, dir: String, name: String,
       df: DataFrame, groupCols: Seq[String], sortCols: Seq[Column], k: Int,
-      out: String): DataFrame = {
+      out: String, width: Option[Int] = None): DataFrame = {
     val keys = groupCols :+ "__pid"
-    val staged = rangeStaged(spark, dir, name, df, groupCols.map(col) ++ sortCols)
+    val staged = rangeStaged(spark, dir, name, df, groupCols.map(col) ++ sortCols, width)
     val cntRows = staged.groupBy(keys.map(col): _*).count().collect()
     val offRows = cntRows
       .groupBy(r => groupCols.map(c => r.get(r.fieldIndex(c))))

@@ -99,14 +99,12 @@ object Storage {
   /** K11: mutations — ALTER DELETE + ALTER UPDATE as a rewrite into a
     * new table version, then read back. */
   private def k11Mutation(spark: SparkSession, dir: String): DataFrame = {
-    val out = Engine.scratch(spark, dir, "k11_mutated")
     val rewritten = Engine.t(spark, dir, "supplier")
       .filter(!(col("s_acctbal") < 0))                                    // ALTER TABLE ... DELETE WHERE s_acctbal < 0
       .withColumn("s_name",                                               // ALTER TABLE ... UPDATE s_name WHERE s_acctbal > 9000
         when(col("s_acctbal") > 9000, concat(col("s_name"), lit("*")))
           .otherwise(col("s_name")))
-    rewritten.write.mode("overwrite").parquet(out)
-    Engine.readBack(spark, out, rewritten.schema)
+    Engine.stage(rewritten, dir, "k11_mutated")
       .agg(
         count(lit(1)).as("n"),
         CH.countIf(col("s_name").endsWith("*")).as("n_updated"),
@@ -115,13 +113,9 @@ object Storage {
 
   /** K12: OPTIMIZE/compaction — rewrite many small files into few. */
   private def k12Compaction(spark: SparkSession, dir: String): DataFrame = {
-    val frag = Engine.scratch(spark, dir, "k12_frag")
-    val compact = Engine.scratch(spark, dir, "k12_compact")
     val src = Engine.t(spark, dir, "lineitem").filter(col("l_quantity") < 5)
-    src.repartition(16).write.mode("overwrite").parquet(frag)
-    val before = Engine.readBack(spark, frag, src.schema)
-    before.repartition(2).write.mode("overwrite").parquet(compact)
-    val after = Engine.readBack(spark, compact, src.schema)
+    val before = Engine.stage(src.repartition(16), dir, "k12_frag")
+    val after = Engine.stage(before.repartition(2), dir, "k12_compact")
     val filesBefore = before.inputFiles.length
     val filesAfter = after.inputFiles.length
     after.agg(count(lit(1)).as("n_rows"))
@@ -276,20 +270,15 @@ object Storage {
     * second listing. At 100 TB both passes are scan-bound and
     * embarrassingly parallel. */
   private def k16IntegrityCheck(spark: SparkSession, dir: String): DataFrame = {
-    val out = Engine.scratch(spark, dir, "k16_data")
-    val manifestP = Engine.scratch(spark, dir, "k16_manifest")
-    val cust = Engine.t(spark, dir, "customer")
-    cust.repartition(4)
-      .write.mode("overwrite").parquet(out)
-    def fileSummary() = Engine.readBack(spark, out, cust.schema)
+    val data = Engine.stage(Engine.t(spark, dir, "customer").repartition(4), dir, "k16_data")
+    val fileSummary = data
       .select(col("_metadata.file_name").as("f"),
         xxhash64(col("c_custkey"), col("c_name"), col("c_acctbal")).as("h"))
       .groupBy("f")
       .agg(count(lit(1)).as("n_rows"), bit_xor(col("h")).as("content_sum"))
-    fileSummary().write.mode("overwrite").parquet(manifestP)
-    val manifest = Engine.readBack(spark, manifestP, fileSummary().schema)
+    val manifest = Engine.stage(fileSummary, dir, "k16_manifest")
       .select(col("f"), col("n_rows").as("m_rows"), col("content_sum").as("m_sum"))
-    fileSummary().join(manifest, Seq("f"), "full")
+    fileSummary.join(manifest, Seq("f"), "full")
       .agg(
         count(lit(1)).as("n_files"),
         sum(col("n_rows")).as("total_rows"),
@@ -307,20 +296,16 @@ object Storage {
     * Both routes are exercised and their results cross-checked
     * against the base table via the oracle. */
   private def k17ProjectionRoute(spark: SparkSession, dir: String): DataFrame = {
-    val byDate = Engine.scratch(spark, dir, "k17_by_date")
-    val byCust = Engine.scratch(spark, dir, "k17_by_cust")
     val o = Engine.t(spark, dir, "orders")
-    o.repartition(4).sortWithinPartitions("o_orderdate")
-      .write.mode("overwrite").parquet(byDate)
-    o.repartition(4).sortWithinPartitions("o_custkey")
-      .write.mode("overwrite").parquet(byCust)
-    def route(filterCol: String): String =
+    val byDate = Engine.stage(o.repartition(4).sortWithinPartitions("o_orderdate"), dir, "k17_by_date")
+    val byCust = Engine.stage(o.repartition(4).sortWithinPartitions("o_custkey"), dir, "k17_by_cust")
+    def route(filterCol: String): DataFrame =
       if (filterCol == "o_orderdate") byDate else byCust
-    val dateSlice = Engine.readBack(spark, route("o_orderdate"), o.schema)
+    val dateSlice = route("o_orderdate")
       .filter(col("o_orderdate").between(lit("1997-01-01").cast("date"), lit("1997-03-31").cast("date")))
       .agg(count(lit(1)).as("n"), sum(CH.dec(col("o_totalprice"))).cast("double").as("sum_price"))
       .withColumn("route", lit("by_date"))
-    val custSlice = Engine.readBack(spark, route("o_custkey"), o.schema)
+    val custSlice = route("o_custkey")
       .filter(col("o_custkey") <= 100)
       .agg(count(lit(1)).as("n"), sum(CH.dec(col("o_totalprice"))).cast("double").as("sum_price"))
       .withColumn("route", lit("by_custkey"))

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.{CH, Engine}
 
 /** One user session: maximal run of events with inter-event gaps
@@ -76,13 +77,19 @@ object Sessions {
   * source configured, `Dockerfile:193-239`): each inserted block is
   * partially aggregated into a target table at insert time.
   *
-  * Spark-native mapping: Structured Streaming file source →
-  * - J1: `foreachBatch` appends per-batch *partial* aggregate states to
-  *   a Parquet target; reads merge the partials — the
-  *   AggregatingMergeTree pattern (partial-state parts, merge-on-read).
-  * - J2: a streaming tumbling-window aggregation (complete mode).
-  * Both run with Trigger.AvailableNow (process everything, terminate),
-  * and both are oracle-checked against the batch recompute — the MV
+  * Spark-native mapping: a Structured Streaming file source over a
+  * staged event directory, drained with Trigger.AvailableNow (process
+  * everything, terminate). Three helpers carry the plumbing:
+  * - [[cached]] stages a source once per machine behind a marker file
+  *   (`events_src`, `events_src_tr`, `events_src_wm5`);
+  * - [[drain]] is the only code that starts a stream: a new checkpoint,
+  *   AvailableNow, and a sink given by the caller (memory, Parquet
+  *   files, j13's manifest commit);
+  * - [[viaPartials]] is the partial-state sink (j1, j7, j8, j10, j12):
+  *   each micro-batch appends its partial to a Parquet target and the
+  *   read merges the partials — the AggregatingMergeTree pattern
+  *   (partial-state parts, merge-on-read).
+  * Every answer is oracle-checked against the batch recompute — the MV
   * equivalence property from SURVEY §5.
   */
 object Streaming {
@@ -106,12 +113,6 @@ object Streaming {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** A staged cache written by an older session may carry
-    * TIMESTAMP_NTZ in its parquet footer's Spark-schema metadata (which
-    * overrides `inferTimestampNTZ.enabled=false` at read time) —
-    * watermarks reject NTZ, so such a cache is poison. Detect and
-    * delete it so the caller re-stages from the now-LTZ-normalized
-    * [[Engine.events]]. */
   /** Footer-read memo for the immutable staged sources: every j-query
     * paid two driver-side parquet footer/schema reads per run (the NTZ
     * staleness probe + the readStream schema) against caches that are
@@ -122,14 +123,23 @@ object Streaming {
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
+  private def fsOf(spark: SparkSession): FileSystem =
+    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+
+  /** A staged cache written by an older session may carry
+    * TIMESTAMP_NTZ in its parquet footer's Spark-schema metadata (which
+    * overrides `inferTimestampNTZ.enabled=false` at read time) —
+    * watermarks reject NTZ, so such a cache is poison. Detect and
+    * delete it so the caller re-stages from the now-LTZ-normalized
+    * [[Engine.events]]. */
   private def dropStaleNtzCache(spark: SparkSession, staged: String): Unit = {
     if (schemaMemo.containsKey(staged)) return // probed clean this JVM
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(staged)
+    val fs = fsOf(spark)
+    val p = new Path(staged)
     // Only judge COMPLETE caches (_SUCCESS present). A dir without the
     // marker may be a concurrent session mid-write — leave it alone;
     // stageEvents treats it as absent and overwrites atomically.
-    if (fs.exists(new org.apache.hadoop.fs.Path(staged + "/_SUCCESS"))) {
+    if (fs.exists(new Path(staged + "/_SUCCESS"))) {
       val schema =
         try Some(spark.read.parquet(staged).schema)
         catch {
@@ -143,19 +153,30 @@ object Streaming {
     }
   }
 
-  /** The streaming file source wants a directory of arriving files:
-    * stage events (ts already normalized) as 4 chunk files — each chunk
-    * plays the role of one inserted block. */
-  private def stageEvents(spark: SparkSession, dir: String): String = {
-    val staged = Engine.stagingCache(dir, "events_src")
+  /** The staged source `name` under [[Engine.stagingCache]], paid once
+    * per machine: a stale-NTZ cache is dropped, then `write(path)` runs
+    * and `marker` is dropped beside it, unless `marker` already exists.
+    * A Spark write leaves its own `_SUCCESS`; the create rewrites that
+    * empty file in place. */
+  private def cached(spark: SparkSession, dir: String, name: String, marker: String)(
+      write: String => Unit): String = {
+    val staged = Engine.stagingCache(dir, name)
     dropStaleNtzCache(spark, staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(staged + "/_SUCCESS"))) {
-      Engine.events(spark, dir).repartition(4)
-        .write.mode("overwrite").parquet(staged)
+    val done = new Path(s"$staged/$marker")
+    val fs = fsOf(spark)
+    if (!fs.exists(done)) {
+      write(staged)
+      fs.create(done, true).close()
     }
     staged
   }
+
+  /** The streaming file source wants a directory of arriving files:
+    * stage events (ts already normalized) as 4 chunk files — each chunk
+    * plays the role of one inserted block. */
+  private def stageEvents(spark: SparkSession, dir: String): String =
+    cached(spark, dir, "events_src", "_SUCCESS")(
+      Engine.events(spark, dir).repartition(4).write.mode("overwrite").parquet(_))
 
   /** Scratch path `name`, with it and its `<name>_ckpt` checkpoint
     * deleted: every run starts from an empty output and a new
@@ -163,38 +184,61 @@ object Streaming {
     * (`LocalFs`), which starts no process. */
   private def fresh(spark: SparkSession, dir: String, name: String): String = {
     val target = Engine.scratch(spark, dir, name)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(target), true)
-    fs.delete(new org.apache.hadoop.fs.Path(target + "_ckpt"), true)
+    val fs = fsOf(spark)
+    fs.delete(new Path(target), true)
+    fs.delete(new Path(target + "_ckpt"), true)
+    target
+  }
+
+  /** Run `stream` to completion: the scratch target `name` is made
+    * [[fresh]], its `<name>_ckpt` is the checkpoint, the trigger is
+    * AvailableNow, and `sink` adds the output given the target path.
+    * Returns the target. The checkpoint is explicit: without one Spark
+    * makes a `temporary-<uuid>` dir and deletes it with a forked
+    * `rm -rf`. */
+  private def drain(spark: SparkSession, dir: String, name: String, stream: DataFrame,
+      mode: String = "append")(
+      sink: (DataStreamWriter[Row], String) => DataStreamWriter[Row]): String = {
+    val target = fresh(spark, dir, name)
+    sink(stream.writeStream
+        .outputMode(mode)
+        .option("checkpointLocation", target + "_ckpt")
+        .trigger(Trigger.AvailableNow()), target)
+      .start()
+      .awaitTermination()
     target
   }
 
   /** Run `stream` to completion into a memory sink and return `read`
-    * over the sink's rows. The checkpoint is explicit ([[fresh]]):
-    * without one Spark makes a `temporary-<uuid>` dir and deletes it
-    * with a forked `rm -rf`. The sink's temp view is dropped once
-    * `read` has analyzed its frame — the analyzed plan holds the sink
-    * itself, so the view would only pin one more result per call. */
+    * over the sink's rows. The sink's temp view is dropped once `read`
+    * has analyzed its frame — the analyzed plan holds the sink itself,
+    * so the view would only pin one more result per call. */
   private def viaMemorySink(spark: SparkSession, dir: String, name: String,
       mode: String, stream: DataFrame)(read: DataFrame => DataFrame): DataFrame = {
     val sinkName = s"${name}_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    stream.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation", fresh(spark, dir, s"${name}_sink") + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    drain(spark, dir, s"${name}_sink", stream, mode)((w, _) => w.format("memory").queryName(sinkName))
     try read(spark.table(sinkName)) finally spark.catalog.dropTempView(sinkName): Unit
   }
 
-  /** Empty STATIC frame with a streaming source's schema — lets a
-    * foreachBatch target's read-back derive its schema by applying the
-    * batch transform schema-only (analysis, no job), skipping the
-    * ~100 ms footer-inference round per query (guide §1). */
-  private def emptyLike(spark: SparkSession, src: DataFrame): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), src.schema)
+  private def empty(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+
+  /** The partial-state sink: each micro-batch of `src` appends
+    * `partial(batch)` to the scratch target `name`; returns every
+    * appended partial, or an empty frame when no batch wrote. The
+    * schema comes from `partial` over an empty static frame (analysis,
+    * no job), which skips the ~100 ms footer-inference round per query
+    * (guide §1). */
+  private def viaPartials(spark: SparkSession, dir: String, name: String, src: DataFrame)(
+      partial: DataFrame => DataFrame): DataFrame = {
+    val target = drain(spark, dir, name, src)((w, target) =>
+      w.foreachBatch { (batch: DataFrame, _: Long) =>
+        partial(batch).write.mode("append").parquet(target)
+      })
+    val schema = Engine.readBackSchema(partial(empty(spark, src.schema)).schema)
+    if (fsOf(spark).exists(new Path(target))) Engine.readBack(spark, target, schema)
+    else empty(spark, schema)
+  }
 
   private def eventStream(spark: SparkSession, staged: String, oneFilePerBatch: Boolean): DataFrame = {
     val schema = schemaMemo.computeIfAbsent(staged,
@@ -208,29 +252,17 @@ object Streaming {
     * partial (event_type → count, decimal sum) states; the final read
     * merges partials by summing — insert-time MV maintenance with
     * merge-on-read, no global state store needed. */
-  private def j1IncrementalMv(spark: SparkSession, dir: String): DataFrame = {
-    val target = fresh(spark, dir, "j1_mv")
+  private def j1IncrementalMv(spark: SparkSession, dir: String): DataFrame =
     // one file per micro-batch → 4 genuine partial-state inserts
-    val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
-    val partial = (d: DataFrame) => d.groupBy("event_type")
+    viaPartials(spark, dir, "j1_mv",
+        eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true))(_
+      .groupBy("event_type")
       .agg(count(lit(1)).as("partial_n"),
-        sum(CH.dec(col("value"))).as("partial_sum"))
-    val q = src
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", target + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        partial(batch).write.mode("append").parquet(target)
-      }
-      .start()
-    q.awaitTermination()
-    Engine.readBack(spark, target, partial(emptyLike(spark, src)).schema)
+        sum(CH.dec(col("value"))).as("partial_sum")))
       .groupBy("event_type")
       .agg(sum(col("partial_n")).as("n"),
         sum(col("partial_sum")).cast("double").as("sum_value"))
       .orderBy("event_type")
-  }
 
   /** J7: streaming retention — E7's behavioral-analytics aggregate
     * maintained incrementally: each micro-batch appends per-user
@@ -241,26 +273,15 @@ object Streaming {
     * partials: the streaming answer provably equals the batch one
     * (the oracle IS e7's SQL). */
   private def j7StreamingRetention(spark: SparkSession, dir: String): DataFrame = {
-    val target = fresh(spark, dir, "j7_ret")
     def in(lo: String, hi: String) =
       col("ts") >= lit(lo).cast("timestamp") && col("ts") < lit(hi).cast("timestamp")
-    val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
-    val partial = (d: DataFrame) => d.groupBy("user_id")
+    viaPartials(spark, dir, "j7_ret",
+        eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true))(_
+      .groupBy("user_id")
       .agg(
         max(in("2024-01-01", "2024-01-08").cast("int")).as("c1"),
         max(in("2024-01-08", "2024-01-15").cast("int")).as("c2"),
-        max(in("2024-01-15", "2024-01-22").cast("int")).as("c3"))
-    val q = src
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", target + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        partial(batch).write.mode("append").parquet(target)
-      }
-      .start()
-    q.awaitTermination()
-    Engine.readBack(spark, target, partial(emptyLike(spark, src)).schema)
+        max(in("2024-01-15", "2024-01-22").cast("int")).as("c3")))
       .groupBy("user_id")
       .agg(max(col("c1")).as("c1"), max(col("c2")).as("c2"), max(col("c3")).as("c3"))
       .agg(
@@ -304,12 +325,9 @@ object Streaming {
     * gap appears, instead of buffering a user's full history until a
     * flush. This mirrors real ingestion, where blocks arrive in rough
     * time order. */
-  private def stageEventsWithFlush(spark: SparkSession, dir: String): String = {
-    val staged = Engine.stagingCache(dir, "events_src_tr")
-    dropStaleNtzCache(spark, staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(staged + "/_FLUSH_STAGED")
-    if (!fs.exists(done)) {
+  private def stageEventsWithFlush(spark: SparkSession, dir: String): String =
+    cached(spark, dir, "events_src_tr", "_FLUSH_STAGED") { staged =>
+      val fs = fsOf(spark)
       val ev = Engine.events(spark, dir)
       val withT = ev.withColumn("__t", unix_micros(col("ts")))
       val bounds = withT.stat.approxQuantile("__t", Array(0.25, 0.5, 0.75), 0.001).map(_.toLong)
@@ -327,22 +345,22 @@ object Streaming {
       withT.withColumn("__chunk", chunk).drop("__t")
         .repartition(col("__chunk"))
         .write.mode("overwrite").partitionBy("__chunk").parquet(tmp)
-      fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(staged))
+      fs.delete(new Path(staged), true)
+      fs.mkdirs(new Path(staged))
       val now = System.currentTimeMillis()
       (0 until 4).foreach { i =>
-        val chunkDir = new org.apache.hadoop.fs.Path(s"$tmp/__chunk=$i")
+        val chunkDir = new Path(s"$tmp/__chunk=$i")
         // tied quantile bounds leave a chunk empty → no directory
         val files = if (!fs.exists(chunkDir)) Array.empty[org.apache.hadoop.fs.FileStatus]
           else fs.listStatus(chunkDir)
             .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
         files.zipWithIndex.foreach { case (f, j) =>
-          val dst = new org.apache.hadoop.fs.Path(staged, f"chunk_$i%02d_$j%03d.parquet")
+          val dst = new Path(staged, f"chunk_$i%02d_$j%03d.parquet")
           require(fs.rename(f.getPath, dst), s"stage move failed: ${f.getPath}")
           fs.setTimes(dst, now - 60000 + i * 1000 + j, -1)
         }
       }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      fs.delete(new Path(tmp), true)
       val users = ev.select(col("user_id")).distinct()
       val flushDf = ev.schema.fields.foldLeft(users) { (df, f) =>
         f.name match {
@@ -352,10 +370,7 @@ object Streaming {
         }
       }.select(ev.schema.fieldNames.map(col).toIndexedSeq: _*)
       flushDf.coalesce(1).write.mode("append").parquet(staged)
-      fs.create(done).close()
     }
-    staged
-  }
 
   /** J3: custom streaming state — sessionization with
     * `flatMapGroupsWithState` over `KeyValueGroupedDataset` (the
@@ -387,8 +402,7 @@ object Streaming {
     // 8 stores are right for test-scale key counts but serialize a
     // 100×-user replay behind 8 cores; a real deployment sizes this
     // to key cardinality.
-    val fs0 = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val stagedBytes = fs0.getContentSummary(new org.apache.hadoop.fs.Path(staged)).getLength
+    val stagedBytes = fsOf(spark).getContentSummary(new Path(staged)).getLength
     val nParts = math.min(32L, math.max(8L, stagedBytes / (32L << 20))).toInt
     withStreamingPartitions(spark, nParts) {
     import spark.implicits._
@@ -414,15 +428,8 @@ object Streaming {
     // emitted session in driver heap through a single thread (the
     // sf10 replay emits millions); the file sink writes them from the
     // state executors and the read-back is a distributed scan.
-    val outPath = fresh(spark, dir, if (oneFilePerBatch) "j3_out_mb" else "j3_out")
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", outPath + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val outPath = drain(spark, dir, if (oneFilePerBatch) "j3_out_mb" else "j3_out", sessions.toDF())(
+      (w, out) => w.format("parquet").option("path", out))
     Engine.readBack(spark, outPath, sessions.schema)
       .select(col("user_id"), col("session_id"), col("start_us"), col("end_us"), col("n_events"))
       .orderBy("user_id", "session_id")
@@ -480,24 +487,12 @@ object Streaming {
     * streaming answer is EXACT and the DuckDB oracle checks it; the
     * eviction regime's error bound is SketchSpec's i3 property. */
   private def j8StreamingTopk(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val target = fresh(spark, dir, "j8_topk")
     spark.udf.register("ss_topk_j8", udaf(new Sampling.SpaceSaving(8)))
-    val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
-    val partial = (d: DataFrame) =>
-      d.agg(expr("ss_topk_j8(event_type)").as("topk"))
-        .select(explode(col("topk")).as("e"))
-        .select(col("e._1").as("value"), col("e._2").as("cnt"))
-    val q = src
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", target + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        partial(batch).write.mode("append").parquet(target)
-      }
-      .start()
-    q.awaitTermination()
-    Engine.readBack(spark, target, partial(emptyLike(spark, src)).schema)
+    viaPartials(spark, dir, "j8_topk",
+        eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true))(_
+      .agg(expr("ss_topk_j8(event_type)").as("topk"))
+      .select(explode(col("topk")).as("e"))
+      .select(col("e._1").as("value"), col("e._2").as("cnt")))
       .groupBy("value")
       .agg(sum(col("cnt")).as("est_n"))
       .orderBy(desc("est_n"), col("value"))
@@ -523,11 +518,7 @@ object Streaming {
     // watermark never advanced and append mode emitted nothing — found
     // by the r14 SqlSweep gate, which runs the declared entries at
     // sf0.001). Cache name bumped (wm5) so stale wm4 layouts restage.
-    val staged = Engine.stagingCache(dir, "events_src_wm5")
-    dropStaleNtzCache(spark, staged)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(staged + "/_WM_STAGED")
-    if (!fs.exists(done)) {
+    val staged = cached(spark, dir, "events_src_wm5", "_WM_STAGED") { path =>
       val ev = Engine.events(spark, dir)
       def reshape(cond: org.apache.spark.sql.Column, secExpr: String) =
         ev.filter(cond).withColumn("ts",
@@ -541,15 +532,12 @@ object Streaming {
         reshape(col("event_id").between(950, 954), "8400 + event_id % 60"),
         reshape(col("event_id").between(910, 949), "(event_id * 7) % 1200") // LATE replay of first 20 min
       ).zipWithIndex.foreach { case (df, i) =>
-        df.coalesce(1).write.mode(if (i == 0) "overwrite" else "append").parquet(staged)
+        df.coalesce(1).write.mode(if (i == 0) "overwrite" else "append").parquet(path)
         Thread.sleep(100) // strictly increasing mod-time → arrival order
       }
-      fs.create(done).close()
     }
     viaMemorySink(spark, dir, "j9", "append",
-      spark.readStream.schema(schemaMemo.computeIfAbsent(staged,
-          _ => spark.read.parquet(staged).schema))
-        .option("maxFilesPerTrigger", 1).parquet(staged)
+      eventStream(spark, staged, oneFilePerBatch = true)
         .withWatermark("ts", "30 minutes")
         .groupBy(window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n")))(_
@@ -568,29 +556,18 @@ object Streaming {
     * maintained via j1's partial-state MV discipline. Oracle = the
     * identical batch join. */
   private def j10StreamStaticJoin(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val target = fresh(spark, dir, "j10_enriched")
     val dim = Engine.t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     // Stateless per-row enrichment: batch count is semantically inert
     // (unlike j1/j6/j9/j13, whose multi-batch replay IS the property
     // under test), so run the whole staged source as one micro-batch —
     // each AvailableNow batch costs fixed planning/commit machinery.
-    val src = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = false)
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-    val partial = (d: DataFrame) => d.groupBy("c_mktsegment")
+    viaPartials(spark, dir, "j10_enriched",
+        eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = false)
+          .join(broadcast(dim), col("user_id") === col("c_custkey")))(_
+      .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("partial_n"),
-        sum(CH.dec(col("value"))).as("partial_sum"))
-    val q = src
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", target + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        partial(batch).write.mode("append").parquet(target)
-      }
-      .start()
-    q.awaitTermination()
-    Engine.readBack(spark, target, partial(emptyLike(spark, src)).schema)
+        sum(CH.dec(col("value"))).as("partial_sum")))
       .groupBy("c_mktsegment")
       .agg(sum(col("partial_n")).as("n"),
         sum(col("partial_sum")).cast("double").as("sum_value"))
@@ -648,9 +625,6 @@ object Streaming {
   private[graft] def streamStreamPairs(
       spark: SparkSession, dir: String, oneFilePerBatch: Boolean): DataFrame =
     withStreamingPartitions(spark) {
-      val suffix = if (oneFilePerBatch) "_mb" else ""
-      val target = fresh(spark, dir, s"j12_pairs$suffix")
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       val staged = stageEvents(spark, dir)
       val clicks = eventStream(spark, staged, oneFilePerBatch)
         .filter(col("event_type") === "click")
@@ -660,29 +634,12 @@ object Streaming {
         .filter(col("event_type") === "purchase")
         .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
         .withWatermark("p_ts", "365 days")
-      val q = clicks.join(purchases,
-          col("c_user") === col("p_user") &&
-            col("p_ts") >= col("c_ts") &&
-            col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-        .select("c_id", "p_id")
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", target + "_ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(target)
-        }
-        .start()
-      q.awaitTermination()
-      // foreachBatch only creates `target` when some batch matched; a
-      // zero-match input must read back as an empty frame, not a
-      // path-not-found error — pin the schema so both cases agree
-      val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("c_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("p_id", org.apache.spark.sql.types.LongType)))
-      if (fs.exists(new org.apache.hadoop.fs.Path(target)))
-        spark.read.schema(pairSchema).parquet(target)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pairSchema)
+      viaPartials(spark, dir, if (oneFilePerBatch) "j12_pairs_mb" else "j12_pairs",
+        clicks.join(purchases,
+            col("c_user") === col("p_user") &&
+              col("p_ts") >= col("c_ts") &&
+              col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
+          .select("c_id", "p_id"))(identity)
     }
 
   private def j12StreamStreamJoin(spark: SparkSession, dir: String): DataFrame =
@@ -709,12 +666,11 @@ object Streaming {
     * one driver-side rename per micro-batch, independent of data
     * volume; the read path opens only manifest-listed files. */
   private def j13TransactionalSink(spark: SparkSession, dir: String): DataFrame = withStreamingPartitions(spark) {
-    val root = fresh(spark, dir, "j13_txn")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val root = Engine.scratch(spark, dir, "j13_txn")
+    val fs = fsOf(spark)
+    def p(s: String) = new Path(s)
     val dataDir = root + "/data"
     val manifestDir = root + "/manifest"
-    fs.mkdirs(p(manifestDir))
 
     /** The commit protocol (also driven directly by the failure
       * injection below and `StreamingSessionSpec`). */
@@ -728,19 +684,13 @@ object Streaming {
           max(col("value")).as("partial_max"))
         .write.mode("overwrite").parquet(part)
       val tmp = p(s"$manifestDir/.batch-$batchId.inprogress")
-      val out = fs.create(tmp, true)
+      val out = fs.create(tmp, true) // makes `manifest/` on the first commit
       out.write(part.getBytes("UTF-8")); out.close()
       require(fs.rename(tmp, manifest), s"manifest commit failed: $manifest")
     }
 
-    val q = eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", root + "_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) => commit(batch, batchId) }
-      .start()
-    q.awaitTermination()
+    drain(spark, dir, "j13_txn", eventStream(spark, stageEvents(spark, dir), oneFilePerBatch = true))(
+      (w, _) => w.foreachBatch { (batch: DataFrame, batchId: Long) => commit(batch, batchId) })
 
     // Failure injection 1 — checkpoint replay: re-commit batch 0 with a
     // poisoned payload; the existing manifest must make it a no-op.
@@ -767,8 +717,8 @@ object Streaming {
   /** The j13 read path: data paths named by committed manifests — the
     * ONLY way rows become visible. */
   def committedParts(spark: SparkSession, root: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(root + "/manifest"))
+    val fs = fsOf(spark)
+    fs.listStatus(new Path(root + "/manifest"))
       .filter(s => s.getPath.getName.startsWith("batch-"))
       .map { s =>
         val in = fs.open(s.getPath)

@@ -461,6 +461,20 @@ class DdlMutationSpec extends AnyFunSuite {
     sql("DROP TABLE mvm_al")
   }
 
+  test("ALTER TABLE ADD COLUMN on an MV is Code 48 and leaves the MV and its source writable") {
+    sql("CREATE TABLE mvm_acs (k String, v Int64) ENGINE = MergeTree ORDER BY k")
+    val select = "SELECT k, count(*) AS c, sum(v) AS s FROM mvm_acs GROUP BY k"
+    sql(s"CREATE MATERIALIZED VIEW mvm_acm AS $select")
+    insert("INSERT INTO mvm_acs VALUES ('a', 1)")
+    val e = intercept[Exception](sql("ALTER TABLE mvm_acm ADD COLUMN note String"))
+    assert(graft.server.Statement.chCode(e) == 48, e.toString)
+    assert(rows("SELECT * FROM mvm_acm") == Seq(Seq("a", 1L, 1L)))
+    insert("INSERT INTO mvm_acs VALUES ('a', 2), ('b', 5)")
+    assert(rows("SELECT * FROM mvm_acm ORDER BY k") == rows(s"$select ORDER BY k"))
+    assert(rows("SELECT * FROM mvm_acm ORDER BY k") == Seq(Seq("a", 2L, 3L), Seq("b", 1L, 5L)))
+    sql("DROP TABLE mvm_acm"); sql("DROP TABLE mvm_acs")
+  }
+
   test("ALTER TABLE DELETE/UPDATE: K11 mutation-as-rewrite semantics incl. NULL predicates") {
     sql("CREATE TABLE mvm_mu (k Int64, v Nullable(Int64)) ENGINE = MergeTree ORDER BY k")
     insert("INSERT INTO mvm_mu VALUES (1, 10), (2, 20), (3, NULL)")

@@ -18,7 +18,8 @@ import graft.ops.DistRank
 class DistRankSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def check(n: Int, k: Int, inputParts: Int, distinctVals: Int): Unit = {
+  private def check(n: Int, k: Int, inputParts: Int, distinctVals: Int,
+      width: Option[Int] = None): Unit = {
     import spark.implicits._
     val rnd = new java.util.Random(n * 1000 + k * 10 + inputParts)
     // few distinct values → long tie runs that MUST straddle the
@@ -27,7 +28,7 @@ class DistRankSpec extends AnyFunSuite {
     val df = rows.toDF("id", "v").repartition(inputParts)
     val got = DistRank
       .ntile(spark, TestSpark.sf, s"test_distrank_${n}_${k}_$inputParts",
-        df, Seq(col("v"), col("id")), k, "b")
+        df, Seq(col("v"), col("id")), k, "b", width)
       .select("id", "b").as[(Long, Int)].collect().toMap
     val want = df
       .withColumn("b", ntile(k).over(Window.orderBy(col("v"), col("id"))))
@@ -47,7 +48,7 @@ class DistRankSpec extends AnyFunSuite {
   }
 
   private def checkGrouped(n: Int, k: Int, nGroups: Int, inputParts: Int,
-      distinctVals: Int): Unit = {
+      distinctVals: Int, width: Option[Int] = None): Unit = {
     import spark.implicits._
     val rnd = new java.util.Random(n * 1000 + k * 100 + nGroups * 10 + inputParts)
     val rows = (0 until n).map(i =>
@@ -56,7 +57,7 @@ class DistRankSpec extends AnyFunSuite {
     val got = DistRank
       .groupedNtile(spark, TestSpark.sf,
         s"test_gntile_${n}_${k}_${nGroups}_$inputParts",
-        df, Seq("g"), Seq(col("v"), col("id")), k, "b")
+        df, Seq("g"), Seq(col("v"), col("id")), k, "b", width)
       .select("id", "b").as[(Long, Int)].collect().toMap
     val want = df
       .withColumn("b", ntile(k).over(
@@ -82,17 +83,13 @@ class DistRankSpec extends AnyFunSuite {
 
   test("ranks are independent of the staging width (cluster-shape knob)") {
     // VERDICT r17 #3: the range-exchange width is now
-    // Engine.stagingWidth (defaultParallelism / conf / env), not a
-    // literal 32. The offset algebra must give the same total order at
-    // ANY width — including width 1 (everything in one partition) and
-    // a width far above the row count (most partitions empty).
-    val key = "spark.graft.stagingWidth"
+    // Engine.stagingWidth (defaultParallelism), not a literal 32. The
+    // offset algebra must give the same total order at ANY width —
+    // including width 1 (everything in one partition) and a width far
+    // above the row count (most partitions empty).
     for (w <- Seq(1, 5, 61)) {
-      spark.conf.set(key, w.toString)
-      try {
-        check(997, 4, inputParts = 8, distinctVals = 3)
-        checkGrouped(490, 3, nGroups = 4, inputParts = 8, distinctVals = 2)
-      } finally spark.conf.unset(key)
+      check(997, 4, inputParts = 8, distinctVals = 3, width = Some(w))
+      checkGrouped(490, 3, nGroups = 4, inputParts = 8, distinctVals = 2, width = Some(w))
     }
   }
 
